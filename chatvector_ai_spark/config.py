@@ -36,11 +36,13 @@ ARROW_MAX_RECORDS_PER_BATCH = int(os.getenv("CVS_ARROW_BATCH", "8192"))
 # --- canonicalization -------------------------------------------------------
 CC_MAX_ITERATIONS = int(os.getenv("CVS_CC_MAX_ITERS", "20"))
 
-# Connected components: an edge set at or below this size (after the cheap
-# symmetrize+distinct) is resolved with a driver-side union-find instead of
-# the iterative shuffle loop — a graph this small is broadcast-scale data,
-# and an iterative join loop over it is pure scheduler latency (measured
-# ~10 s flat regardless of core count). 0 disables the shortcut.
+# Broadcast-scale graphs: an edge set at or below this size is solved on the
+# driver instead of by an iterative shuffle loop — a join loop over a graph
+# this small is pure scheduler latency (measured ~10 s flat regardless of
+# core count). It gates canonicalize.connected_components and
+# graph.connected_components (driver union-find) and graph.pagerank (the
+# integer recurrence in plain Python); the graph operators read it at call
+# time. 0 disables the shortcut.
 CC_SMALL_CORE_EDGES = int(os.getenv("CVS_CC_SMALL_CORE_EDGES", "200000"))
 SKEW_SALT_BUCKETS = int(os.getenv("CVS_SKEW_SALT", "8"))
 

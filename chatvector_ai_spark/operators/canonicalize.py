@@ -16,7 +16,8 @@ provide).
 
 Small-core shortcut: after the cheap symmetrize+distinct, an edge set at
 broadcast scale (≤ CC_SMALL_CORE_EDGES, default 200k) is resolved with one
-collect + driver union-find instead — on a graph that small the shuffle
+collect + driver union-find instead (``graph._driver_union_find``, shared
+with ``graph.connected_components``) — on a graph that small the shuffle
 loop is pure scheduler latency (measured ~10 s flat regardless of cores),
 while union-find is O(E α(E)) in milliseconds. The distributed loop below
 remains the path for cores that exceed the threshold, which is what a
@@ -43,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chatvector_ai_spark.config import CC_MAX_ITERATIONS, CC_SMALL_CORE_EDGES
+from chatvector_ai_spark.operators.graph import _driver_union_find
 
 
 def linking_edges(linked_mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
@@ -56,34 +58,6 @@ def linking_edges(linked_mentions: DataFrame, alias_dict: DataFrame) -> DataFram
         F.col("entity_id").alias("dst"),
     )
     return from_mentions.unionByName(from_dict).where(F.col("src") != F.col("dst")).distinct()
-
-
-def _driver_union_find(spark, sym: DataFrame) -> DataFrame:
-    """Exact CC labels for a small (collected) edge set: path-compressing
-    union-find with the component minimum as representative — O(E α(E)),
-    one collect, zero shuffle rounds. Only ever called on an edge set the
-    caller has already counted at broadcast scale."""
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        root = x
-        while parent.setdefault(root, root) != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for row in sym.collect():
-        ra, rb = find(row[0]), find(row[1])
-        if ra != rb:
-            parent[ra] = rb
-    comp_min: dict[str, str] = {}
-    for node in parent:
-        root = find(node)
-        if root not in comp_min or node < comp_min[root]:
-            comp_min[root] = node
-    rows = [(node, comp_min[find(node)]) for node in parent]
-    return spark.createDataFrame(rows, "node string, label string")
 
 
 def connected_components(
@@ -133,7 +107,7 @@ def connected_components(
     # > 1 explicitly requests the salted distributed join, so it never
     # takes the shortcut.
     if salt_buckets <= 1 and small_core_edges > 0 and sym.count() <= small_core_edges:
-        labels = _driver_union_find(spark, sym)
+        labels = _driver_union_find(sym)
         out = labels.select("node", F.col("label").alias("component"))
         loop_only = self_nodes.join(out, "node", "left_anti").withColumn(
             "component", F.col("node")

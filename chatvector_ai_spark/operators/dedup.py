@@ -11,8 +11,10 @@ Pipeline (all candidate-generated, never all-pairs):
    (``dd_jaccard_pairs``: 12 affine MinHashes over one-md5-per-token base
    values, 6 bands of 2, banded within the ``source`` block, exact token
    Jaccard ≥ 0.8 on candidates only) run over the exact-kept set.
-3. **Clusters** — distributed connected components (large-star/small-star)
-   over the verified pair graph; representative = min doc_id.
+3. **Clusters** — connected components over the verified pair graph
+   (``graph.connected_components``: a driver union-find up to
+   ``CC_SMALL_CORE_EDGES`` pairs, large-star/small-star above);
+   representative = min doc_id.
 4. **Apply** — drop every cluster member except its representative.
 
 Reference parity: the reference has no corpus dedup (its ingest is
@@ -22,8 +24,10 @@ surface the brief adds on top. Semantics follow Lee et al. 2022
 near, keep-one-per-cluster.
 
 100 TB posture: one hash-groupBy, band equi-joins within source blocks,
-CC in O(log² n) shuffle rounds, two anti-joins. No collects above the
-CC convergence fingerprints; no per-row Python anywhere.
+CC in O(log² n) shuffle rounds, two anti-joins. The only collects are the
+CC convergence fingerprints, plus the pair set itself when it is at most
+``CC_SMALL_CORE_EDGES`` rows (solved by the driver union-find); no per-row
+Python in any Spark task.
 """
 
 from __future__ import annotations

@@ -12,8 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-from chatvector_ai_spark.config import N_BUCKETS
+from chatvector_ai_spark.config import CC_SMALL_CORE_EDGES, N_BUCKETS
 
 
 def _bucket_of(entity: str, n_buckets: int) -> F.Column:
@@ -131,6 +132,89 @@ def cooccurring_entities(
     )
 
 
+def _driver_union_find(edges: DataFrame) -> DataFrame:
+    """Exact (node, label) connected-component labels for a small edge set:
+    one collect of its first two columns, then a path-compressing
+    union-find with the component minimum as the label — O(E α(E)), zero
+    shuffle rounds. Both columns of the output take the type of the first
+    input column. Only ever called on an edge set the caller has already
+    counted at broadcast scale (≤ ``CC_SMALL_CORE_EDGES``)."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.setdefault(root, root) != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for row in edges.collect():
+        ra, rb = find(row[0]), find(row[1])
+        if ra != rb:
+            parent[ra] = rb
+    comp_min: dict = {}
+    for node in parent:
+        root = find(node)
+        if root not in comp_min or node < comp_min[root]:
+            comp_min[root] = node
+    node_type = edges.schema.fields[0].dataType
+    schema = StructType([StructField("node", node_type), StructField("label", node_type)])
+    rows = [(node, comp_min[find(node)]) for node in parent]
+    return edges.sparkSession.createDataFrame(rows, schema)
+
+
+def _absent_seeds_error(seeds: list[str]) -> ValueError:
+    # a seed absent from the edge vocabulary holds teleport mass that can
+    # never flow — all-zero ranks with no signal; fail loudly
+    return ValueError(
+        f"none of the {len(seeds)} seeds appear in the edge set; "
+        "personalized teleport mass would be lost and every rank 0"
+    )
+
+
+def _driver_pagerank(
+    e: DataFrame,
+    edge_rows: list,
+    iterations: int,
+    damping_pct: int,
+    scale: int,
+    seeds: list[str] | None,
+) -> DataFrame:
+    """``pagerank`` over ``edge_rows``, the collected rows of the distinct
+    non-self (src, dst) edges ``e``, in plain Python with the same
+    scaled-integer rules, so the ranks are bit-identical to the iterative
+    join loop."""
+    schema = StructType([
+        StructField("entity", e.schema["src"].dataType),
+        StructField("pr_scaled", LongType()),
+    ])
+    out_deg: dict = {}
+    for src, _ in edge_rows:
+        out_deg[src] = out_deg.get(src, 0) + 1
+    nodes = {v for row in edge_rows for v in row}
+    n = len(nodes)
+    if n == 0:
+        return e.sparkSession.createDataFrame([], schema)
+    teleport_mass = (100 - damping_pct) * scale // 100
+    if seeds is None:
+        teleport = dict.fromkeys(nodes, teleport_mass // n)
+        pr = dict.fromkeys(nodes, scale // n)
+    else:
+        present = nodes.intersection(seeds)
+        if not present:
+            raise _absent_seeds_error(seeds)
+        teleport = dict.fromkeys(present, teleport_mass // len(seeds))
+        pr = dict.fromkeys(nodes, 0)
+        pr.update(dict.fromkeys(present, scale // len(seeds)))
+    for _ in range(iterations):
+        summed = dict.fromkeys(nodes, 0)
+        for src, dst in edge_rows:
+            summed[dst] += pr[src] // out_deg[src]
+        pr = {v: teleport.get(v, 0) + damping_pct * summed[v] // 100 for v in nodes}
+    return e.sparkSession.createDataFrame(list(pr.items()), schema)
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
@@ -143,15 +227,23 @@ def pagerank(
     bit-identical regardless of aggregation order (Spark's partial aggs vs
     any sequential engine): rank is held in 1/*scale* units, each edge
     contributes ``pr DIV out_degree``, and damping is ``(pct * s) DIV 100``
-    — no float ever crosses a row boundary.
+    — no float ever crosses a row boundary. Dangling-node mass is dropped
+    (the common simplified formulation) — documented so the oracle twin
+    applies the same rule.
 
-    Per-iteration plan: edges ⋈ pr (shuffle on src) → hash-agg on dst →
-    left join back onto the node set; ``localCheckpoint`` truncates the
-    5-deep lineage so the plan does not grow superlinearly. Dangling-node
-    mass is dropped (the common simplified formulation) — documented so the
-    oracle twin applies the same rule. At 10^12 edges each round is one
-    shuffle on the entity key; hub skew is AQE's skew-join case, and the
-    node set stays partitioned by entity throughout.
+    Broadcast-scale graphs run on the driver: one bounded action (a
+    ``limit(CC_SMALL_CORE_EDGES + 1)`` collect of the distinct edges)
+    decides the path, and an edge set at or below the threshold is iterated
+    in plain Python under the same integer rules and returned as one small
+    (entity, pr_scaled) DataFrame — at that size every join round would be
+    pure scheduler latency. ``CC_SMALL_CORE_EDGES = 0`` disables the path.
+
+    Larger graphs run the distributed loop. Per iteration: edges ⋈ pr
+    (shuffle on src) → hash-agg on dst → left join back onto the node set;
+    ``localCheckpoint`` truncates the 5-deep lineage so the plan does not
+    grow superlinearly. At 10^12 edges each round is one shuffle on the
+    entity key; hub skew is AQE's skew-join case, and the node set stays
+    partitioned by entity throughout.
 
     With ``seeds``, this is **personalized PageRank**: the initial mass and
     the teleport term go only to the seed set (split evenly, same integer
@@ -164,6 +256,10 @@ def pagerank(
     if seeds is not None and not seeds:
         raise ValueError("personalized pagerank needs a non-empty seed list")
     e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
+    if CC_SMALL_CORE_EDGES > 0:
+        small = e.limit(CC_SMALL_CORE_EDGES + 1).collect()
+        if len(small) <= CC_SMALL_CORE_EDGES:
+            return _driver_pagerank(e, small, iterations, damping_pct, scale, seeds)
     nodes = (
         e.select(F.col("src").alias("entity"))
         .unionByName(e.select(F.col("dst").alias("entity")))
@@ -174,16 +270,11 @@ def pagerank(
     if n == 0:
         return nodes.withColumn("pr_scaled", F.lit(0).cast("bigint"))
     if seeds is not None:
-        # a seed absent from the edge vocabulary holds teleport mass that
-        # can never flow — all-zero ranks with no signal; fail loudly
-        # (len(seeds) is driver-side broadcast-scale data, so this probe
-        # is one isin() filter over the node set, not a join)
+        # len(seeds) is driver-side broadcast-scale data, so this probe
+        # is one isin() filter over the node set, not a join
         n_present = nodes.where(F.col("entity").isin(seeds)).count()
         if n_present == 0:
-            raise ValueError(
-                f"none of the {len(seeds)} seeds appear in the edge set; "
-                "personalized teleport mass would be lost and every rank 0"
-            )
+            raise _absent_seeds_error(seeds)
     deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
     if seeds is None:
         teleport_col = F.lit(((100 - damping_pct) * scale // 100) // n)
@@ -285,23 +376,28 @@ def triangles(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Connected components via alternating **large-star / small-star**
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    converges in O(log² n) rounds of pure groupBy+join DataFrame ops, no
-    driver-side graph state, which is what survives 10^12-edge graphs
-    (unlike label propagation's O(diameter) rounds or a driver union-find).
+    """Connected components of the undirected graph over *edges*.
 
-    Invariant maintained between rounds: the pair set holds (node, peer)
-    with node > peer. large-star hangs every neighbor larger than u off
-    u's minimum; small-star re-hangs u's smaller neighbors (and u) off the
-    minimum. Each round ends with an eager ``localCheckpoint`` (lineage
-    truncation — iterative joins otherwise stack plans) and a cheap
-    (count, xxhash-sum) fingerprint action for the convergence test.
+    Returns (entity, component) for every endpoint of a non-self edge,
+    component = the minimum entity id in the component.
 
-    Returns (entity, component) for every endpoint, component = the
-    minimum entity id in the component. Complements the bounded
-    driver-side union-find used inside canonicalization
-    (operators/canonicalize.py) — this one is fully distributed.
+    The distinct oriented pairs are checkpointed first. If there are at
+    most ``CC_SMALL_CORE_EDGES`` of them (broadcast scale), they are
+    collected and resolved by the driver union-find that canonicalization
+    uses too — at that size each shuffle round would be pure scheduler
+    latency. ``CC_SMALL_CORE_EDGES = 0`` disables this path.
+
+    Larger graphs run alternating **large-star / small-star** (Kiveris et
+    al., "Connected Components in MapReduce and Beyond"), which converges
+    in O(log² n) rounds of pure groupBy+join DataFrame ops with no
+    driver-side graph state — what survives 10^12-edge graphs (unlike
+    label propagation's O(diameter) rounds). Invariant maintained between
+    rounds: the pair set holds (node, peer) with node > peer. large-star
+    hangs every neighbor larger than u off u's minimum; small-star re-hangs
+    u's smaller neighbors (and u) off the minimum. Each round ends with an
+    eager ``localCheckpoint`` (lineage truncation — iterative joins
+    otherwise stack plans) and a cheap (count, xxhash-sum) fingerprint
+    action for the convergence test.
     """
     pairs = (
         edges.select(
@@ -311,6 +407,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
+    if CC_SMALL_CORE_EDGES > 0 and pairs.count() <= CC_SMALL_CORE_EDGES:
+        return _driver_union_find(pairs).select(
+            F.col("node").alias("entity"), F.col("label").alias("component")
+        )
     nodes = (
         pairs.select(F.col("a").alias("entity"))
         .unionByName(pairs.select(F.col("b").alias("entity")))
@@ -725,6 +825,10 @@ def match_pattern(
                     "pass allow_cartesian=True to opt in"
                 )
             out = out.crossJoin(step)
+            if set(out.columns) != {"__exists__"}:
+                # the existence row has done its filtering; dropping it at
+                # once lets a later disjoint pattern meet the guard above
+                out = out.drop("__exists__")
     for var, allowed in (values or {}).items():
         if var not in out.columns:
             raise ValueError(

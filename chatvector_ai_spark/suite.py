@@ -4613,7 +4613,8 @@ def kg_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-iteration fixed-point PageRank over the canonical edge graph
-    (operators/graph.pagerank — iterative joins, scaled-integer math)."""
+    (operators/graph.pagerank — scaled-integer math; the driver path at
+    this size, iterative joins above ``CC_SMALL_CORE_EDGES``)."""
     from chatvector_ai_spark.operators.graph import pagerank
 
     return pagerank(kg_edges(spark, sf_dir))
@@ -4636,8 +4637,9 @@ def kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fully-distributed connected components via alternating large-star /
-    small-star rounds (operators/graph.connected_components)."""
+    """Connected components (operators/graph.connected_components): the
+    driver union-find at this size, alternating large-star / small-star
+    rounds above ``CC_SMALL_CORE_EDGES``."""
     from chatvector_ai_spark.operators.graph import connected_components
 
     return connected_components(kg_edges(spark, sf_dir))
@@ -5365,8 +5367,9 @@ def _mk_sql_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
 
 
 def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate clusters = distributed connected components
-    (operators/graph.connected_components, large-star/small-star) over the
+    """Duplicate clusters = connected components
+    (operators/graph.connected_components: driver union-find up to
+    ``CC_SMALL_CORE_EDGES`` pairs, large-star/small-star above) over the
     verified ≥0.8 Jaccard pair graph; one row per cluster with the min-id
     representative and how many members dedup would drop."""
     from pyspark.sql import functions as F
@@ -5389,7 +5392,7 @@ def dd_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup impact histogram: duplicate-cluster sizes → how many clusters
     of each size and how many documents dedup removes — the one-screen
     answer to "what does near-dup removal cost this corpus". Aggregates
-    the distributed connected-components output of ``dd_dup_clusters``;
+    the connected-components output of ``dd_dup_clusters``;
     all integer counts."""
     from pyspark.sql import functions as F
 
@@ -5539,7 +5542,7 @@ _DRIVER_WINDOW_FIRST: list[str] = [
     "tx_repetition", "tx_rarity", "tx_bigram_surprisal",
     "tx_sampling_weights", "tx_distinct_sketch", "tx_split",
     "tx_length_deciles", "ev_funnel", "ev_retention",
-    # -- round-5 additions (11) --
+    # -- round-5 additions (12) --
     "kg_coreness", "kg_pattern_path", "kg_pattern_filter", "kg_construct",
     "kg_distmult_eval", "kg_complex_eval", "kg_cheapest_path",
     "tx_tfidf_topterms", "dd_cluster_stats", "ev_rolling_7d",

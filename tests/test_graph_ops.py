@@ -218,6 +218,18 @@ def _edges_df(spark, pairs):
     )
 
 
+def _on_both_paths(monkeypatch, run):
+    """``run()`` under the driver path (default ``CC_SMALL_CORE_EDGES``)
+    and again under the distributed loop (threshold 0); returns both."""
+    from chatvector_ai_spark.operators import graph
+
+    results = []
+    for threshold in (graph.CC_SMALL_CORE_EDGES, 0):
+        monkeypatch.setattr(graph, "CC_SMALL_CORE_EDGES", threshold)
+        results.append(run())
+    return results
+
+
 def _pagerank_reference(pairs, iterations=5, damping_pct=85, scale=1_000_000):
     """Independent pure-python fixed-point PageRank (same integer rules)."""
     edges = sorted({(s, d) for s, d in pairs if s != d})
@@ -236,18 +248,18 @@ def _pagerank_reference(pairs, iterations=5, damping_pct=85, scale=1_000_000):
     return pr
 
 
-def test_pagerank_matches_pure_python_fixed_point(spark):
+def test_pagerank_matches_pure_python_fixed_point(spark, monkeypatch):
     from chatvector_ai_spark.operators.graph import pagerank
 
     pairs = [
         ("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "a"),
         ("e", "a"), ("a", "e"), ("b", "a"), ("f", "c"),
     ]
-    got = {
+    for got in _on_both_paths(monkeypatch, lambda: {
         r["entity"]: r["pr_scaled"]
         for r in pagerank(_edges_df(spark, pairs)).collect()
-    }
-    assert got == _pagerank_reference(pairs)
+    }):
+        assert got == _pagerank_reference(pairs)
 
 
 def test_pagerank_hub_outranks_leaf(spark):
@@ -274,7 +286,7 @@ def test_triangles_counts_k4_and_ignores_dangling_edge(spark):
     assert got == {"p": 3, "q": 3, "r": 3, "s": 3}
 
 
-def test_connected_components_matches_union_find(spark):
+def test_connected_components_matches_union_find(spark, monkeypatch):
     import random
 
     from chatvector_ai_spark.operators.graph import connected_components
@@ -298,25 +310,25 @@ def test_connected_components_matches_union_find(spark):
 
     touched = sorted({n for e in pairs for n in e})
     expected = {v: min(w for w in touched if find(w) == find(v)) for v in touched}
-    got = {
+    for got in _on_both_paths(monkeypatch, lambda: {
         r["entity"]: r["component"]
         for r in connected_components(_edges_df(spark, pairs)).collect()
-    }
-    assert got == expected
+    }):
+        assert got == expected
 
 
-def test_connected_components_two_disjoint_cliques(spark):
+def test_connected_components_two_disjoint_cliques(spark, monkeypatch):
     from chatvector_ai_spark.operators.graph import connected_components
 
     c1 = ["a", "b", "c"]
     c2 = ["x", "y", "z"]
     pairs = [(u, v) for i, u in enumerate(c1) for v in c1[i + 1:]]
     pairs += [(u, v) for i, u in enumerate(c2) for v in c2[i + 1:]]
-    got = {
+    for got in _on_both_paths(monkeypatch, lambda: {
         r["entity"]: r["component"]
         for r in connected_components(_edges_df(spark, pairs)).collect()
-    }
-    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "x"}
+    }):
+        assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "x"}
 
 
 def test_personalized_pagerank_concentrates_near_seed(spark):
@@ -336,7 +348,7 @@ def test_personalized_pagerank_concentrates_near_seed(spark):
     assert got["b"] > got["c"] > got["d"] or got["b"] >= got["c"] >= got["d"]
 
 
-def test_personalized_pagerank_matches_pure_python(spark):
+def test_personalized_pagerank_matches_pure_python(spark, monkeypatch):
     from chatvector_ai_spark.operators.graph import pagerank
 
     pairs = [
@@ -360,11 +372,11 @@ def test_personalized_pagerank_matches_pure_python(spark):
             v: (t_val if v in seeds else 0) + (damping * acc[v]) // 100
             for v in nodes
         }
-    got = {
+    for got in _on_both_paths(monkeypatch, lambda: {
         r["entity"]: r["pr_scaled"]
         for r in pagerank(_edges_df(spark, pairs), seeds=seeds).collect()
-    }
-    assert got == pr
+    }):
+        assert got == pr
 
 
 def test_kcore_keeps_clique_peels_pendant_tree(spark):
@@ -806,7 +818,7 @@ def test_match_pattern_repeated_variable_is_self_loop_filter(spark):
     assert {(r["x"], r["y"]) for r in chained.collect()} == {("c", "d")}
 
 
-def test_pagerank_seed_validation(spark):
+def test_pagerank_seed_validation(spark, monkeypatch):
     """seeds=[] is a caller error (raise, never ZeroDivisionError); a seed
     list entirely absent from the edge vocabulary would silently zero every
     rank, so it raises too. A partially-present seed list still runs."""
@@ -815,12 +827,45 @@ def test_pagerank_seed_validation(spark):
     df = spark.createDataFrame(
         [("a", "r", "b"), ("b", "r", "c")], "src string, rel string, dst string"
     )
-    with pytest.raises(ValueError, match="non-empty seed"):
-        pagerank(df, seeds=[])
-    with pytest.raises(ValueError, match="none of the 2 seeds"):
-        pagerank(df, seeds=["nope", "missing"])
-    got = {r["entity"]: r["pr_scaled"] for r in pagerank(df, seeds=["a", "ghost"]).collect()}
-    assert sum(got.values()) > 0  # present seed keeps teleport mass flowing
+
+    def run():
+        with pytest.raises(ValueError, match="non-empty seed"):
+            pagerank(df, seeds=[])
+        with pytest.raises(ValueError, match="none of the 2 seeds"):
+            pagerank(df, seeds=["nope", "missing"])
+        return {r["entity"]: r["pr_scaled"] for r in pagerank(df, seeds=["a", "ghost"]).collect()}
+
+    for got in _on_both_paths(monkeypatch, run):
+        assert sum(got.values()) > 0  # present seed keeps teleport mass flowing
+
+
+def test_driver_and_distributed_graph_paths_agree(spark, monkeypatch):
+    """On a seeded random graph with duplicate edges and self-loops, the
+    driver path and the distributed loop of pagerank (plain and
+    personalized with a partly absent seed list) and connected_components
+    return identical rows, column types included."""
+    import random
+
+    from chatvector_ai_spark.operators.graph import connected_components, pagerank
+
+    rng = random.Random(20261017)
+    nodes = [f"v{i:03d}" for i in range(90)]
+    pairs = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(150)]
+    pairs += pairs[:30]  # duplicate edges
+    pairs += [(v, v) for v in rng.sample(nodes, 10)]  # self-loops
+    df = _edges_df(spark, pairs)
+    seeds = [pairs[0][0], pairs[7][1], "absent-seed"]
+
+    def rows(out):
+        return out.schema.simpleString(), sorted(tuple(r) for r in out.collect())
+
+    driver, distributed = _on_both_paths(monkeypatch, lambda: [
+        rows(pagerank(df)),
+        rows(pagerank(df, iterations=7, seeds=seeds)),
+        rows(connected_components(df)),
+    ])
+    assert driver == distributed
+    assert all(result[1] for result in driver)
 
 
 def test_paths_between_default_cap_bounds_dense_fanout(spark, caplog):

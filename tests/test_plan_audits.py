@@ -166,11 +166,16 @@ def test_asof_join_window_is_per_user(spark):
     assert not any("No Partition Defined" in l for l in win_lines)
 
 
-def test_pagerank_iteration_plan_stays_truncated(spark):
+def test_pagerank_iteration_plan_stays_truncated(spark, monkeypatch):
     """After 5 iterations the pagerank plan must hang off the final
     localCheckpoint scan, not a 15-join lineage tower — the checkpoint is
-    what keeps iteration N's plan O(1) instead of O(N)."""
+    what keeps iteration N's plan O(1) instead of O(N). The threshold is 0
+    so the join loop runs; the driver path would return a local relation
+    and pass vacuously."""
+    from chatvector_ai_spark.operators import graph
     from chatvector_ai_spark.operators.graph import pagerank
+
+    monkeypatch.setattr(graph, "CC_SMALL_CORE_EDGES", 0)
 
     edges = spark.createDataFrame(
         [(f"e{i}", f"e{(i * 7 + 1) % 40}", "r") for i in range(40)],

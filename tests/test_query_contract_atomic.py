@@ -62,3 +62,10 @@ def test_match_pattern_rejects_disjoint_required_pattern(spark):
     # and a FAILED leading existence pattern filters everything out
     got = match_pattern(edges, [("c", "q", "MISSING"), ("?a", "r", "?b")]).collect()
     assert got == []
+    # an existence pattern mid-chain must not exempt a LATER disjoint
+    # pattern from the guard
+    mid_chain = [("?a", "r", "?b"), ("c", "q", "d"), ("?c", "q", "?d")]
+    with pytest.raises(ValueError, match="cartesian"):
+        match_pattern(edges, mid_chain)
+    got = match_pattern(edges, mid_chain, allow_cartesian=True).collect()
+    assert {(r["a"], r["b"], r["c"], r["d"]) for r in got} == {("a", "b", "c", "d")}

@@ -139,7 +139,10 @@ def main() -> int:
                 print(f"WARN {name}: zero rows")
             continue
         try:
-            rel = con.sql(oracles[name])
+            # run the twin once into a temp table; each fetch from a
+            # relation re-executes it, so both fetches read the table
+            con.execute(f"CREATE OR REPLACE TEMP TABLE oracle_result AS {oracles[name]}")
+            rel = con.table("oracle_result")
             dcols = [d[0] for d in rel.description]
             dpdf = rel.fetchdf()
             drows = [tuple(r) for r in rel.fetchall()]
