@@ -1,7 +1,9 @@
 .PHONY: test dist bench scaling check-oracle clean
 
+# the Tier-1 gate: cores from the host, spill dirs on local disk, one timeout
 test:
-	python -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 dist:
 	mkdir -p dist

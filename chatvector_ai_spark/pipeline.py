@@ -17,6 +17,15 @@ after a crash recomputes only uncommitted stages and never duplicates
 lineage — the contract the reference implements with its stale-document
 sweep + idempotent status upserts (main.py:133-155).
 
+The full build (``run_pipeline``) and the incremental fold
+(``incremental_update``) run ONE stage sequence (``_run_stages``) through
+ONE runner (``_stage``) with three commit modes: full snapshot, append
+delta of a base snapshot, and metadata-only view. They differ only in the
+base: a build has none; a fold re-keys alias_dict as a view of the base,
+appends chunks and triples_raw as deltas and extracts from the new chunks
+alone. Resuming a fold whose chunks/triples_raw entry is no longer a delta
+of the base raises ``ValueError`` instead of folding the base in twice.
+
 Scale posture: stages 1-3 are shuffle-free (parallelism = input partitions);
 stage 4's only wide ops are the mention-pivot joins and the salted
 connected-components rounds; materialize buckets nodes/edges by entity hash
@@ -26,6 +35,9 @@ the Iceberg `bucket(N, entity_hash)` partition transform of the north rule.
 
 from __future__ import annotations
 
+import time
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -151,76 +163,141 @@ def _stage(
     wh: Warehouse,
     spark: SparkSession,
     run: PipelineRun,
-    table: str,
-    build,
     resume: bool,
-    metrics: dict | None = None,
-    partition_by: list[str] | None = None,
-) -> DataFrame:
-    import time
-
-    if resume and wh.is_done(table, run.input_key):
-        run.stages_skipped.append(table)
-        return wh.read(spark, table, run.input_key)
-    t0 = time.time()
-    df = build()
-    wh.commit(
-        df,
-        table,
-        run_id=run.run_id,
-        stage=table,
-        input_key=run.input_key,
-        metrics=metrics,
-        partition_by=partition_by,
-    )
-    run.stage_secs[table] = round(time.time() - t0, 2)
-    run.stages_run.append(table)
-    return wh.read(spark, table, run.input_key)
-
-
-def _view_stage(
-    wh: Warehouse,
-    spark: SparkSession,
-    run: PipelineRun,
     table: str,
+    build=None,
     *,
-    parent_table: str,
-    partition_filter: dict,
-    select: list[str] | None,
-    resume: bool,
+    delta_of: str | None = None,
+    view: dict | None = None,
+    **commit_kw,
 ) -> DataFrame:
-    """Commit *table* as a metadata-only view of *parent_table* (no Spark
-    job, no data movement) and return it as a DataFrame — the stage shape
-    for derived status tables that are pure filters of an already-committed
-    snapshot."""
-    import time
+    """Commit one stage under ``run.input_key`` and return its rows. The
+    arguments pick one of three commit modes:
 
-    if resume and wh.is_done(table, run.input_key):
+    - full (``build``): ``Warehouse.commit`` of ``build()``;
+    - delta (``build`` and ``delta_of``): ``Warehouse.commit(delta_of=…)``
+      appends ``build()`` to that snapshot, and the rows returned are the
+      delta alone, not the chain;
+    - view (``view``): ``Warehouse.commit_view(**view)``, metadata only.
+
+    With *resume*, a stage whose lineage row exists is skipped. A skipped
+    delta stage must still be a delta of *delta_of*: ``compact`` or
+    ``delete_documents`` on a half-built fold leave a full snapshot there,
+    and folding on from it would count every base row twice."""
+    key = run.input_key
+    if resume and wh.is_done(table, key):
+        if delta_of is not None and wh.latest_entry(table, key).get("delta_of") != delta_of:
+            raise ValueError(
+                f"cannot resume {table!r} under {key!r}: its snapshot is not a "
+                f"delta of {delta_of!r}; rerun with resume=False"
+            )
         run.stages_skipped.append(table)
-        return wh.read(spark, table, run.input_key)
-    t0 = time.time()
-    wh.commit_view(
-        table,
-        parent_table=parent_table,
-        run_id=run.run_id,
-        stage=table,
-        input_key=run.input_key,
-        partition_filter=partition_filter,
-        select=select,
-    )
-    run.stage_secs[table] = round(time.time() - t0, 2)
-    run.stages_run.append(table)
-    return wh.read(spark, table, run.input_key)
+    else:
+        t0 = time.time()
+        if view is not None:
+            wh.commit_view(table, run_id=run.run_id, stage=table, input_key=key, **view)
+        else:
+            wh.commit(
+                build(), table, run_id=run.run_id, stage=table, input_key=key,
+                delta_of=delta_of, **commit_kw,
+            )
+        run.stage_secs[table] = round(time.time() - t0, 2)
+        run.stages_run.append(table)
+    if delta_of is not None:
+        return spark.read.parquet(wh._entry_data_dir(wh.latest_entry(table, key)))  # noqa: SLF001
+    return wh.read(spark, table, key)
 
 
 def _parallel_stages(*jobs):
     """Run independent stage closures as concurrent Spark jobs (the Spark
     scheduler interleaves their tasks); returns results in *jobs* order."""
-    from concurrent.futures import ThreadPoolExecutor
-
     with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
         futures = [ex.submit(j) for j in jobs]
         return [f.result() for f in futures]
+
+
+def _run_stages(
+    spark: SparkSession,
+    wh: Warehouse,
+    run: PipelineRun,
+    resume: bool,
+    load_docs,
+    chunking: dict,
+    files_per_bucket: int | None,
+    *,
+    n_entities: int | None = None,
+    base: dict[str, dict] | None = None,
+) -> None:
+    """The stage sequence of the full build and of the fold. *base* is None
+    for a build; a fold passes the base run's ``alias_dict``, ``chunks`` and
+    ``triples_raw`` lineage entries, re-keys the alias dictionary from the
+    first and appends to the other two as deltas."""
+    def stage(table, build=None, **kw):
+        return _stage(wh, spark, run, resume, table, build, **kw)
+
+    base_snap = {} if base is None else {t: e["snapshot"] for t, e in base.items()}
+    alias_view = None if base is None else {
+        "parent_table": "alias_dict", "partition_filter": {},
+        "parent_input_key": base["alias_dict"]["input_key"],
+    }
+    # The alias dictionary is committed as a dimension snapshot and read
+    # back: a driver-local createDataFrame would re-ship its LocalRelation
+    # into the plan of every stage that touches it (~seconds per stage at
+    # 10k rows x 64-d embeddings), a parquet scan is a fast JVM-side read.
+    # Ingest (clean+chunk, media passthrough) + embed is one narrow Arrow
+    # stage. The two are independent, so they commit as concurrent jobs;
+    # in a fold ``chunks`` is the new documents' delta alone.
+    aliases, chunks = _parallel_stages(
+        lambda: stage("alias_dict", lambda: alias_df(spark, n_entities), view=alias_view),
+        lambda: stage(
+            "chunks",
+            lambda: ingest_chunks(load_docs(), embed_dim=EMBEDDING_DIM, **chunking),
+            delta_of=base_snap.get("chunks"),
+        ),
+    )
+
+    # Extraction runs the Python UDF once into a raw snapshot partitioned by
+    # the ok flag; good triples and the quarantine (DLQ analog) are
+    # metadata-only views of its ok=1 / ok=0 directories. The chunk
+    # embedding rides along sparsely: only on triples whose surface is an
+    # ambiguous alias (the only place the linker's embedding term can
+    # change a decision), so the linker needs no second chunk scan.
+    amb_surfaces = {
+        r["alias"]
+        for r in aliases.groupBy("alias").count().where(F.col("count") > 1).collect()
+    }
+    stage(
+        "triples_raw",
+        lambda: extract_triples_df(
+            chunks, keep_embedding=False, embed_if_surface_in=amb_surfaces
+        ).withColumn("ok", F.col("_error").isNull().cast("int")),
+        delta_of=base_snap.get("triples_raw"),
+        partition_by=["ok"],
+    )
+    triples = stage("triples", view={
+        "parent_table": "triples_raw", "partition_filter": {"ok": 1}, "select": _TRIPLE_COLS,
+    })
+    stage("quarantine", view={
+        "parent_table": "triples_raw", "partition_filter": {"ok": 0}, "select": _QUARANTINE_COLS,
+    })
+
+    # Global stages over the whole (chained) corpus: linking is a broadcast
+    # dictionary join + top-1 window, canonicalization a CC fixpoint with
+    # salted hub keys, and nodes/edges both derive from (linked, cmap), so
+    # they commit concurrently, bucketed by entity hash.
+    linked = stage(
+        "linked_mentions", lambda: link_mentions(mentions_from_triples(triples), aliases)
+    )
+    cmap = stage("canonical_map", lambda: canonical_map(linked, aliases))
+    bucketed = {"metrics": {"n_buckets": N_BUCKETS}, "partition_by": ["bucket"]}
+    _parallel_stages(
+        lambda: stage(
+            "nodes", lambda: nodes_from_linked(linked, cmap, files_per_bucket), **bucketed
+        ),
+        lambda: stage(
+            "edges", lambda: edges_from_linked(linked, cmap, files_per_bucket), **bucketed
+        ),
+    )
 
 
 def run_pipeline(
@@ -241,10 +318,10 @@ def run_pipeline(
 
     Input is either an existing interleaved-documents table (``docs_path``,
     the production shape: read the committed table) or ``n_docs`` to
-    synthesize one on the fly (tests/small runs).
+    synthesize one on the fly (tests/small runs). ``files_per_bucket``
+    (default: config.FILES_PER_BUCKET) decouples the nodes/edges write
+    parallelism from the bucket count — see _bucket_write_layout.
     """
-    import uuid
-
     src = docs_path if docs_path is not None else f"synth:{n_docs}"
     run = PipelineRun(
         run_id=run_id or f"run-{uuid.uuid4().hex[:8]}",
@@ -256,107 +333,11 @@ def run_pipeline(
             return spark.read.parquet(docs_path)
         return documents_df(spark, n_docs, n_entities=n_entities)
 
-    # stage 0: the alias dictionary is committed once as a dimension
-    # snapshot and every later use reads the parquet back. A driver-local
-    # createDataFrame would re-ship its LocalRelation into the plan of
-    # every stage that touches it (~seconds per stage at 10k rows × 64-d
-    # embeddings — measured; a pure serial floor), whereas a parquet scan
-    # is a fast JVM-side read and the natural lineage story for a dimension.
-    #
-    # stage 1+2: ingest (clean+chunk, media passthrough) + embed — one
-    # narrow Arrow stage, committed together ("extracting…embedding").
-    #
-    # The two are independent (the dictionary derives from n_entities, the
-    # chunks from the documents), so their commits run as concurrent jobs.
-    aliases, chunks = _parallel_stages(
-        lambda: _stage(
-            warehouse, spark, run, "alias_dict",
-            lambda: alias_df(spark, n_entities), resume,
-        ),
-        lambda: _stage(
-            warehouse, spark, run, "chunks",
-            lambda: ingest_chunks(
-                load_docs(),
-                strategy=strategy, size=chunk_size, overlap=overlap,
-                embed_dim=EMBEDDING_DIM,
-            ),
-            resume,
-        ),
+    _run_stages(
+        spark, warehouse, run, resume, load_docs,
+        {"strategy": strategy, "size": chunk_size, "overlap": overlap},
+        files_per_bucket, n_entities=n_entities,
     )
-
-    # stage 3: triple extraction runs the Python UDF ONCE into a raw
-    # snapshot; good triples and the quarantine (DLQ analog) are cheap
-    # columnar filters of it. The chunk embedding rides along SPARSELY:
-    # only on triples whose surface is an ambiguous dictionary alias (the
-    # only place the linker's embedding term can change a decision), so the
-    # vector column is ~99% nulls and the linker needs no second chunk scan.
-    amb_surfaces = {
-        r["alias"]
-        for r in aliases.groupBy("alias").count().where(F.col("count") > 1).collect()
-    }
-
-    # The raw snapshot is hive-partitioned by the ok flag so that the two
-    # derived tables below — good triples and the quarantine — are committed
-    # as METADATA-ONLY views over its ok=1 / ok=0 directories. The extract
-    # UDF runs once, the data is written once; splitting it by status costs
-    # zero Spark jobs (at 1M docs the old filter-and-rewrite `triples`
-    # commit alone was ~27 s of pure duplicate write).
-    raw = _stage(
-        warehouse, spark, run, "triples_raw",
-        lambda: extract_triples_df(
-            chunks, keep_embedding=False, embed_if_surface_in=amb_surfaces
-        ).withColumn("ok", F.col("_error").isNull().cast("int")),
-        resume,
-        partition_by=["ok"],
-    )
-    triples = _view_stage(
-        warehouse, spark, run, "triples",
-        parent_table="triples_raw", partition_filter={"ok": 1},
-        select=_TRIPLE_COLS, resume=resume,
-    )
-    _view_stage(
-        warehouse, spark, run, "quarantine",
-        parent_table="triples_raw", partition_filter={"ok": 0},
-        select=_QUARANTINE_COLS, resume=resume,
-    )
-
-    # stage 4: entity linking (broadcast dictionary join + top-1 window)
-    linked = _stage(
-        warehouse, spark, run, "linked_mentions",
-        lambda: link_mentions(mentions_from_triples(triples), aliases),
-        resume,
-    )
-
-    # stage 5: canonicalization (iterative CC with salted hub keys)
-    cmap = _stage(
-        warehouse, spark, run, "canonical_map",
-        lambda: canonical_map(linked, aliases),
-        resume,
-    )
-
-    # stage 6: materialize nodes/edges bucketed by entity hash;
-    # files_per_bucket (default: config.FILES_PER_BUCKET) decouples write
-    # parallelism from the bucket count — see _bucket_write_layout
-    def build_nodes() -> DataFrame:
-        return nodes_from_linked(linked, cmap, files_per_bucket)
-
-    def _commit_nodes() -> DataFrame:
-        return _stage(
-            warehouse, spark, run, "nodes", build_nodes, resume,
-            metrics={"n_buckets": N_BUCKETS}, partition_by=["bucket"],
-        )
-
-    def _commit_edges() -> DataFrame:
-        return _stage(
-            warehouse, spark, run, "edges",
-            lambda: edges_from_linked(linked, cmap, files_per_bucket), resume,
-            metrics={"n_buckets": N_BUCKETS}, partition_by=["bucket"],
-        )
-
-    # nodes + edges both derive from (linked, cmap) — independent, run
-    # concurrently like triples/quarantine above
-    nodes, edges = _parallel_stages(_commit_nodes, _commit_edges)
-    _ = (nodes, edges)
     return run
 
 
@@ -380,8 +361,10 @@ def incremental_update(
     (each upload appends its own chunks, sqlalchemy_service.py:237-273;
     our batch analog appends a document BATCH).
 
+    It runs the build's stage sequence with the base run as its base.
     Cost shape at 10^12 docs, the reason this exists:
 
+    - **alias_dict** is re-keyed as a zero-copy view of the base snapshot.
     - **chunks** and **triples_raw** — the Arrow-UDF stages that dominate
       pipeline cost — run over the NEW documents only and commit as
       APPEND DELTAS (``Warehouse.commit(delta_of=...)``): compute AND
@@ -407,17 +390,21 @@ def incremental_update(
     (pinned by tests/test_incremental.py): the resulting chunks, triples,
     canonical_map, nodes and edges tables are ROW-IDENTICAL to a fresh
     full build over the union corpus.
-    """
-    import uuid
 
+    Resuming raises ``ValueError`` if the ``chunks`` or ``triples_raw``
+    snapshot under the new key is no longer a delta of the base (a
+    ``compact`` or ``delete_documents`` ran on the half-built fold);
+    rerun with ``resume=False`` to recommit the deltas.
+    """
     if (new_docs_path is None) == (new_docs is None):
         raise ValueError("pass exactly one of new_docs_path / new_docs")
     if new_docs is not None and new_input_key is None:
         raise ValueError("new_docs (DataFrame input) requires new_input_key")
-    base_chunks = warehouse.latest_entry("chunks", base_input_key)
-    base_raw = warehouse.latest_entry("triples_raw", base_input_key)
-    base_alias = warehouse.latest_entry("alias_dict", base_input_key)
-    if base_chunks is None or base_raw is None or base_alias is None:
+    base = {
+        t: warehouse.latest_entry(t, base_input_key)
+        for t in ("alias_dict", "chunks", "triples_raw")
+    }
+    if None in base.values():
         raise FileNotFoundError(
             f"incremental_update: no completed base run under {base_input_key!r}"
         )
@@ -427,101 +414,12 @@ def incremental_update(
         if new_input_key is not None
         else f"{base_input_key}+delta:{new_docs_path}",
     )
-
-    # alias dictionary: zero-copy re-key (an unfiltered metadata view of
-    # the base dimension snapshot) so reads under the new key resolve
-    if resume and warehouse.is_done("alias_dict", run.input_key):
-        run.stages_skipped.append("alias_dict")
-    else:
-        warehouse.commit_view(
-            "alias_dict", parent_table="alias_dict", run_id=run.run_id,
-            stage="alias_dict", input_key=run.input_key, partition_filter={},
-            parent_input_key=base_input_key,
-        )
-        run.stages_run.append("alias_dict")
-    aliases = warehouse.read(spark, "alias_dict", run.input_key)
-
-    def _delta(table: str, base_snapshot: str, build, partition_by=None) -> None:
-        import time
-
-        if resume and warehouse.is_done(table, run.input_key):
-            run.stages_skipped.append(table)
-            return
-        t0 = time.time()
-        warehouse.commit(
-            build(), table, run_id=run.run_id, stage=table,
-            input_key=run.input_key, partition_by=partition_by,
-            delta_of=base_snapshot,
-        )
-        run.stage_secs[table] = round(time.time() - t0, 2)
-        run.stages_run.append(table)
-
-    _delta(
-        "chunks", base_chunks["snapshot"],
-        lambda: ingest_chunks(
-            new_docs if new_docs is not None else spark.read.parquet(new_docs_path),
-            strategy=strategy, size=chunk_size, overlap=overlap,
-            embed_dim=EMBEDDING_DIM,
-        ),
+    _run_stages(
+        spark, warehouse, run, resume,
+        lambda: new_docs if new_docs is not None else spark.read.parquet(new_docs_path),
+        {"strategy": strategy, "size": chunk_size, "overlap": overlap},
+        files_per_bucket, base=base,
     )
-    new_chunks = warehouse.read(spark, "chunks", run.input_key)  # chained
-
-    amb_surfaces = {
-        r["alias"]
-        for r in aliases.groupBy("alias").count().where(F.col("count") > 1).collect()
-    }
-    # extract over the NEW chunks only: re-read the delta snapshot alone
-    # (the chained read above is for downstream stages)
-    delta_chunks_entry = warehouse.latest_entry("chunks", run.input_key)
-    if delta_chunks_entry is not None and delta_chunks_entry.get("delta_of"):
-        delta_chunks = spark.read.parquet(
-            warehouse._entry_data_dir(delta_chunks_entry)  # noqa: SLF001
-        )
-    else:  # resume path where chunks was already a full snapshot
-        delta_chunks = new_chunks
-    _delta(
-        "triples_raw", base_raw["snapshot"],
-        lambda: extract_triples_df(
-            delta_chunks, keep_embedding=False, embed_if_surface_in=amb_surfaces
-        ).withColumn("ok", F.col("_error").isNull().cast("int")),
-        partition_by=["ok"],
-    )
-    triples = _view_stage(
-        warehouse, spark, run, "triples",
-        parent_table="triples_raw", partition_filter={"ok": 1},
-        select=_TRIPLE_COLS, resume=resume,
-    )
-    _view_stage(
-        warehouse, spark, run, "quarantine",
-        parent_table="triples_raw", partition_filter={"ok": 0},
-        select=_QUARANTINE_COLS, resume=resume,
-    )
-
-    # global stages over the chained union — identical code path to the
-    # full build from here on
-    linked = _stage(
-        warehouse, spark, run, "linked_mentions",
-        lambda: link_mentions(mentions_from_triples(triples), aliases),
-        resume,
-    )
-    cmap = _stage(
-        warehouse, spark, run, "canonical_map",
-        lambda: canonical_map(linked, aliases),
-        resume,
-    )
-    nodes, edges = _parallel_stages(
-        lambda: _stage(
-            warehouse, spark, run, "nodes",
-            lambda: nodes_from_linked(linked, cmap, files_per_bucket), resume,
-            metrics={"n_buckets": N_BUCKETS}, partition_by=["bucket"],
-        ),
-        lambda: _stage(
-            warehouse, spark, run, "edges",
-            lambda: edges_from_linked(linked, cmap, files_per_bucket), resume,
-            metrics={"n_buckets": N_BUCKETS}, partition_by=["bucket"],
-        ),
-    )
-    _ = (nodes, edges)
     return run
 
 

@@ -85,6 +85,55 @@ def test_incremental_resume_is_idempotent(spark, built):
     assert after == before
 
 
+def _crash(*_a, **_kw):
+    raise RuntimeError("injected crash")
+
+
+def test_interrupted_fold_resumes_to_identical_tables(spark, corpus, built, monkeypatch):
+    """A fold that crashed in linking resumes with the global stages only
+    and ends row-identical to the uninterrupted fold."""
+    import chatvector_ai_spark.pipeline as pl
+
+    wh, base, inc, _fw, _f = built
+    key, new = f"{base.input_key}+interrupted", str(corpus / "new")
+    with monkeypatch.context() as m:
+        m.setattr(pl, "link_mentions", _crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            incremental_update(spark, wh, base.input_key, new, new_input_key=key)
+    again = incremental_update(spark, wh, base.input_key, new, new_input_key=key)
+    assert sorted(again.stages_run) == ["canonical_map", "edges", "linked_mentions", "nodes"]
+    assert sorted(again.stages_skipped) == [
+        "alias_dict", "chunks", "quarantine", "triples", "triples_raw"]
+    for table in ("canonical_map", "nodes", "edges"):
+        assert _rows(spark, wh, table, key) == _rows(spark, wh, table, inc.input_key), table
+
+
+def test_fold_resume_refuses_a_compacted_delta(spark, corpus, built, monkeypatch):
+    """A half-built fold whose chunks delta was compacted into a full
+    snapshot must not resume: extract would read the whole corpus and
+    commit the base triples again as a delta of the base."""
+    import re
+
+    import chatvector_ai_spark.pipeline as pl
+
+    wh, base, inc, _fw, _f = built
+    key, new = f"{base.input_key}+compacted", str(corpus / "new")
+    with monkeypatch.context() as m:
+        m.setattr(pl, "extract_triples_df", _crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            incremental_update(spark, wh, base.input_key, new, new_input_key=key)
+    assert wh.compact(spark, "chunks", key) is not None
+    with pytest.raises(ValueError, match=re.escape(f"'chunks' under {key!r}")):
+        incremental_update(spark, wh, base.input_key, new, new_input_key=key)
+    assert not wh.is_done("triples_raw", key)
+    # a rerun without resume recommits the delta
+    incremental_update(spark, wh, base.input_key, new, new_input_key=key, resume=False)
+    for table in ("chunks", "triples_raw"):
+        got, want = wh.latest_entry(table, key), wh.latest_entry(table, inc.input_key)
+        assert got["delta_of"] == want["delta_of"]
+        assert got["row_count"] == want["row_count"], table
+
+
 def test_delta_chain_liveness_and_orphan_safety(spark, built, tmp_path):
     """Delta entries whose base dir is gone are not served (latest_entry
     skips them); sweep_orphans never removes a dir a delta chain needs."""

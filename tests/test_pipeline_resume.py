@@ -54,7 +54,7 @@ def test_rerun_is_pure_resume(spark, full_run):
     assert len(lineage) == len(ALL_TABLES)
 
 
-def test_interrupted_run_resumes_to_identical_tables(spark, tmp_path, full_run):
+def test_interrupted_run_resumes_to_identical_tables(spark, tmp_path, full_run, monkeypatch):
     wh_full, run_full = full_run
     # simulate a crash after stage 3: commit only chunks+triples+quarantine
     wh_part = Warehouse(str(tmp_path / "wh_part"))
@@ -64,20 +64,13 @@ def test_interrupted_run_resumes_to_identical_tables(spark, tmp_path, full_run):
 
     import chatvector_ai_spark.pipeline as pl
 
-    orig = pl._stage
-    calls = {"n": 0}
+    def exploding(*a, **kw):
+        raise Boom()
 
-    def exploding(wh, spark_, run, table, build, resume, **kw):
-        if table == "linked_mentions":
-            raise Boom()
-        return orig(wh, spark_, run, table, build, resume, **kw)
-
-    pl._stage = exploding
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(pl, "link_mentions", exploding)
         with pytest.raises(Boom):
             run_pipeline(spark, wh_part, N_DOCS, n_entities=N_ENTITIES)
-    finally:
-        pl._stage = orig
 
     done_before = {e["table"] for e in wh_part.lineage()}
     assert done_before == {"alias_dict", "chunks", "triples_raw", "triples", "quarantine"}
