@@ -22,4 +22,5 @@ check-oracle:
 	PYTHONPATH=. python tools/check_oracle.py
 
 clean:
-	rm -rf dist .pytest_cache chatvector_ai_spark/**/__pycache__
+	rm -rf dist .pytest_cache
+	find . -name __pycache__ -type d -prune -exec rm -rf {} +

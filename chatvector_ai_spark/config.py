@@ -33,18 +33,16 @@ MAX_CONTEXT_CHARS = int(os.getenv("CVS_MAX_CONTEXT_CHARS", "32000"))
 SHUFFLE_PARTITIONS = int(os.getenv("CVS_SHUFFLE_PARTITIONS", "32"))
 ARROW_MAX_RECORDS_PER_BATCH = int(os.getenv("CVS_ARROW_BATCH", "8192"))
 
-# --- canonicalization -------------------------------------------------------
-CC_MAX_ITERATIONS = int(os.getenv("CVS_CC_MAX_ITERS", "20"))
-
+# --- graph size gate ---------------------------------------------------------
 # Broadcast-scale graphs: an edge set at or below this size is solved on the
 # driver instead of by an iterative shuffle loop — a join loop over a graph
 # this small is pure scheduler latency (measured ~10 s flat regardless of
-# core count). It gates canonicalize.connected_components and
-# graph.connected_components (driver union-find) and graph.pagerank (the
-# integer recurrence in plain Python); the graph operators read it at call
-# time. 0 disables the shortcut.
+# core count). It gates graph.connected_components (driver union-find over
+# the distinct undirected pairs; canonicalization, dedup and the component
+# queries all run on it) and graph.pagerank (the integer recurrence in plain
+# Python over the distinct directed edges); both read it at call time.
+# 0 disables the shortcut.
 CC_SMALL_CORE_EDGES = int(os.getenv("CVS_CC_SMALL_CORE_EDGES", "200000"))
-SKEW_SALT_BUCKETS = int(os.getenv("CVS_SKEW_SALT", "8"))
 
 # --- graph materialization ---------------------------------------------------
 N_BUCKETS = int(os.getenv("CVS_N_BUCKETS", "16"))

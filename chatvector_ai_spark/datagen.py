@@ -20,7 +20,7 @@ Generator properties (FIXTURES.md §1):
 - media spans (image/table/audio) interleave with probability ~media_ratio and
   must survive the pipeline in exact (kind, text, media_ref, offset) order;
 - ~1% of docs are "hub" docs referencing hot entities that appear in ~30% of
-  all docs — this drives the salted/skew-aware canonicalization path.
+  all docs — the mention-multiplicity skew canonicalization collapses.
 """
 
 from __future__ import annotations

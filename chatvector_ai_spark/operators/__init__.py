@@ -3,7 +3,6 @@
 from chatvector_ai_spark.operators.canonicalize import (  # noqa: F401
     canonical_map,
     canonicalize_triples,
-    connected_components,
     linking_edges,
 )
 from chatvector_ai_spark.operators.dedup import (  # noqa: F401
@@ -21,6 +20,7 @@ from chatvector_ai_spark.operators.embedcluster import (  # noqa: F401
     kmeans_centroids,
 )
 from chatvector_ai_spark.operators.graph import (  # noqa: F401
+    connected_components,
     cooccurring_entities,
     degrees,
     ego_edges,

@@ -164,6 +164,19 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(rows, schema)
 
 
+def _fingerprint(df: DataFrame, *cols: str) -> tuple[int, int]:
+    """(row count, bit_xor of xxhash64 over *cols*): the cheap one-action
+    convergence test of the fixed-point loops — equal fingerprints on
+    consecutive rounds mean the round changed nothing. bit_xor is
+    order-independent and overflow-free under ANSI mode (a running sum of
+    xxhash64 values overflows BIGINT)."""
+    row = df.agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.expr(f"bit_xor(xxhash64({', '.join(cols)}))"), F.lit(0)).alias("h"),
+    ).collect()[0]
+    return int(row["n"]), int(row["h"])
+
+
 def _absent_seeds_error(seeds: list[str]) -> ValueError:
     # a seed absent from the edge vocabulary holds teleport mass that can
     # never flow — all-zero ranks with no signal; fail loudly
@@ -311,26 +324,34 @@ def pagerank(
     return pr.withColumnRenamed("pr", "pr_scaled")
 
 
-def triangles(edges: DataFrame) -> DataFrame:
-    """Per-entity triangle counts on the undirected simple graph under
-    **degree orientation**: every undirected edge is directed from its
-    lower-(degree, id) endpoint to the higher one, so each node's out-
-    neighborhood is bounded by O(sqrt(m)) and the wedge join does O(m^1.5)
-    work total instead of Σ deg² — the standard trick that makes triangle
-    counting survive hub-skewed graphs (a celebrity node with 10⁶ neighbors
-    contributes no wedges because its edges all point *into* it).
-
-    Plan: distinct canonical pairs → degree hash-agg → two broadcast-free
-    equi-joins (wedge u→v, u→w then closing edge v→w). Output one row per
-    entity that is a member of ≥1 triangle.
-    """
-    und = (
+def _undirected_pairs(edges: DataFrame) -> DataFrame:
+    """Distinct canonical (a, b) pairs, a < b, of the undirected simple
+    graph over *edges* (self-loops dropped)."""
+    return (
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
+
+
+def _triangle_list(und: DataFrame) -> DataFrame:
+    """Every triangle of the undirected simple graph given as canonical
+    pairs (a, b), once, as (x, y, z) — the two-variable case of the generic
+    join (Worst-Case-Optimal Similarity Joins on Graph Databases, SIGMOD
+    2024): bind a wedge's apex, then intersect two of its adjacencies.
+
+    **Degree orientation**: every undirected edge is directed from its
+    lower-(degree, id) endpoint to the higher one, so each node's out-
+    neighborhood is bounded by O(sqrt(m)) and the wedge join does O(m^1.5)
+    work total instead of Σ deg² — the standard trick that makes triangle
+    listing survive hub-skewed graphs (a celebrity node with 10⁶ neighbors
+    contributes no wedges because its edges all point *into* it).
+
+    Plan: degree hash-agg → two broadcast-free equi-joins (wedge u→v, u→w
+    then closing edge v→w).
+    """
     deg = (
         und.select(F.col("a").alias("entity"))
         .unionByName(und.select(F.col("b").alias("entity")))
@@ -356,17 +377,24 @@ def triangles(edges: DataFrame) -> DataFrame:
             F.when(lower_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
         )
     )
-    e1 = orient.alias("e1")
-    e2 = orient.alias("e2")
-    e3 = orient.alias("e3")
+    e1, e2, e3 = orient.alias("e1"), orient.alias("e2"), orient.alias("e3")
     wedge_order = (F.col("e1.dv") < F.col("e2.dv")) | (
         (F.col("e1.dv") == F.col("e2.dv")) & (F.col("e1.v") < F.col("e2.v"))
     )
-    tri = (
+    return (
         e1.join(e2, (F.col("e1.u") == F.col("e2.u")) & wedge_order)
         .join(e3, (F.col("e3.u") == F.col("e1.v")) & (F.col("e3.v") == F.col("e2.v")))
         .select(F.col("e1.u").alias("x"), F.col("e1.v").alias("y"), F.col("e2.v").alias("z"))
     )
+
+
+def triangles(edges: DataFrame) -> DataFrame:
+    """Per-entity triangle counts on the undirected simple graph: the
+    degree-oriented O(m^1.5) listing of ``_triangle_list`` (hub-safe),
+    then one hash-agg. Output one row per entity that is a member of ≥1
+    triangle.
+    """
+    tri = _triangle_list(_undirected_pairs(edges))
     members = (
         tri.select(F.col("x").alias("entity"))
         .unionByName(tri.select(F.col("y").alias("entity")))
@@ -383,9 +411,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
 
     The distinct oriented pairs are checkpointed first. If there are at
     most ``CC_SMALL_CORE_EDGES`` of them (broadcast scale), they are
-    collected and resolved by the driver union-find that canonicalization
-    uses too — at that size each shuffle round would be pure scheduler
-    latency. ``CC_SMALL_CORE_EDGES = 0`` disables this path.
+    collected and resolved by ``_driver_union_find`` — at that size each
+    shuffle round would be pure scheduler latency. ``CC_SMALL_CORE_EDGES
+    = 0`` disables this path. Canonicalization, dedup and the component
+    queries all run on this one operator.
 
     Larger graphs run alternating **large-star / small-star** (Kiveris et
     al., "Connected Components in MapReduce and Beyond"), which converges
@@ -396,8 +425,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     hangs every neighbor larger than u off u's minimum; small-star re-hangs
     u's smaller neighbors (and u) off the minimum. Each round ends with an
     eager ``localCheckpoint`` (lineage truncation — iterative joins
-    otherwise stack plans) and a cheap (count, xxhash-sum) fingerprint
-    action for the convergence test.
+    otherwise stack plans) and a cheap (count, xxhash bit_xor) fingerprint
+    action for the convergence test. Rounds that end at ``max_iter``
+    without an unchanged fingerprint raise ``ValueError`` instead of
+    returning labels that are not yet component minima.
     """
     pairs = (
         edges.select(
@@ -417,15 +448,6 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-
-    def fingerprint(p: DataFrame) -> tuple[int, int]:
-        row = p.agg(
-            F.count("*").alias("n"),
-            # bit_xor: order-independent and overflow-free under ANSI mode
-            # (a running sum of xxhash64 values overflows BIGINT)
-            F.coalesce(F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
 
     def large_star(p: DataFrame) -> DataFrame:
         sym = p.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
@@ -452,13 +474,20 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         hang_self = mins.select(F.col("a"), F.col("m").alias("b"))
         return hang_nbrs.unionByName(hang_self).where(F.col("a") != F.col("b")).distinct()
 
-    prev = fingerprint(pairs)
+    prev = _fingerprint(pairs, "a", "b")
     for _ in range(max_iter):
         pairs = small_star(large_star(pairs)).localCheckpoint(eager=True)
-        cur = fingerprint(pairs)
+        cur = _fingerprint(pairs, "a", "b")
         if cur == prev:
             break
         prev = cur
+    else:
+        # the pair set still moved in the last round: its labels are not
+        # yet component minima
+        raise ValueError(
+            f"connected_components: pairs did not converge within max_iter={max_iter}; "
+            "raise the cap"
+        )
     labels = pairs.groupBy(F.col("a").alias("entity")).agg(F.min("b").alias("component"))
     return (
         nodes.join(labels, "entity", "left")
@@ -480,14 +509,7 @@ def kcore(edges: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
     twin apply the same cap, so semantics stay aligned). All logic is
     integer/set-based — no float anywhere.
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected_pairs(edges).localCheckpoint(eager=True)
     prev_edges = und.count()
     for _ in range(max_rounds):
         deg = (
@@ -1980,13 +2002,6 @@ def strongly_connected_components(
     )
     done_parts: list[DataFrame] = []
 
-    def fp(df: DataFrame, *cols: str) -> tuple[int, int]:
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.expr(f"bit_xor(xxhash64({', '.join(cols)}))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
     for _ in range(max_outer_rounds):
         n_active = active_nodes.count()
         if n_active == 0:
@@ -2019,7 +2034,7 @@ def strongly_connected_components(
             break
         # -- 2. forward coloring: color(v) = min id with a directed path to v.
         color = active_nodes.select("entity", F.col("entity").alias("color"))
-        prev = fp(color, "entity", "color")
+        prev = _fingerprint(color, "entity", "color")
         for _ in range(max_prop_rounds):
             incoming = (
                 e.join(
@@ -2034,7 +2049,7 @@ def strongly_connected_components(
                 .select("entity", F.least("color", F.coalesce("c_min", "color")).alias("color"))
                 .localCheckpoint(eager=True)
             )
-            cur = fp(color, "entity", "color")
+            cur = _fingerprint(color, "entity", "color")
             if cur == prev:
                 break
             prev = cur
@@ -2049,7 +2064,7 @@ def strongly_connected_components(
             .select("src", "dst", F.col("c_src").alias("color"))
             .localCheckpoint(eager=True)
         )
-        prev = fp(confirmed, "entity", "color")
+        prev = _fingerprint(confirmed, "entity", "color")
         for _ in range(max_prop_rounds):
             new = (
                 ec.join(
@@ -2060,7 +2075,7 @@ def strongly_connected_components(
                 .distinct()
             )
             confirmed = confirmed.unionByName(new).distinct().localCheckpoint(eager=True)
-            cur = fp(confirmed, "entity", "color")
+            cur = _fingerprint(confirmed, "entity", "color")
             if cur == prev:
                 break
             prev = cur
@@ -2222,17 +2237,12 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     per entity with degree ≥ 2 (degree-1 nodes have no defined
     coefficient); entities in no triangle report 0.
 
-    Scale shape: reuses the degree-oriented O(m^1.5) wedge join from
-    ``triangles`` (hub-safe), plus one degree hash-agg and one left join
-    — nothing here outgrows the triangle count itself.
+    Scale shape: reuses the degree-oriented O(m^1.5) wedge join of
+    ``_triangle_list`` via ``triangles`` (hub-safe), plus one degree
+    hash-agg and one left join — nothing here outgrows the triangle count
+    itself.
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected_pairs(edges)
     deg = (
         und.select(F.col("a").alias("entity"))
         .unionByName(und.select(F.col("b").alias("entity")))
@@ -2495,12 +2505,7 @@ def maximal_matching(edges: DataFrame, rounds: int = 4) -> DataFrame:
     same matching. Per round: one explode-to-endpoint union, one min
     hash-agg per node, two equi-joins back, two anti-joins to drop matched
     endpoints — all narrow-key shuffles, lineage truncated per round."""
-    cand = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    cand = _undirected_pairs(edges).localCheckpoint(eager=True)
     matched: DataFrame | None = None
     for r in range(1, rounds + 1):
         ep = cand.withColumn(
@@ -2560,11 +2565,7 @@ def partition_modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     four one-row broadcast crossJoins — three global reductions, no driver
     state, no window.
     """
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
+    und = _undirected_pairs(edges)
     deg = (
         und.select(F.col("a").alias("entity"))
         .unionByName(und.select(F.col("b").alias("entity")))
@@ -2742,8 +2743,8 @@ def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 64) -> DataFrame:
     community detection on a noisy extracted KG. Returns the surviving
     canonical edges with their final support.
 
-    Scale shape: each round re-enumerates triangles with the same
-    degree-orientation trick as ``triangles`` (O(m^1.5) wedge work,
+    Scale shape: each round re-lists triangles with ``_triangle_list``
+    (the degree-oriented O(m^1.5) wedge join ``triangles`` uses,
     hub-safe), then one hash-agg for per-edge support and one semi-join
     filter; lineage truncated per round. The loop runs to the TRUE fixed
     point (a round that deletes nothing); ``max_rounds`` is a safety
@@ -2758,49 +2759,11 @@ def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 64) -> DataFrame:
     import warnings
     if k < 2:
         raise ValueError("ktruss needs k >= 2")
-    cur = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    cur = _undirected_pairs(edges).localCheckpoint(eager=True)
     n_cur = cur.count()
 
     def support(e: DataFrame) -> DataFrame:
-        deg = (
-            e.select(F.col("a").alias("entity"))
-            .unionByName(e.select(F.col("b").alias("entity")))
-            .groupBy("entity")
-            .agg(F.count("*").alias("d"))
-        )
-        da = deg.withColumnRenamed("entity", "a").withColumnRenamed("d", "da")
-        db = deg.withColumnRenamed("entity", "b").withColumnRenamed("d", "db")
-        lower_first = (F.col("da") < F.col("db")) | (
-            (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-        )
-        orient = (
-            e.join(da, "a")
-            .join(db, "b")
-            .select(
-                F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-                F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-                # see triangles(): wedges must pair in (degree, id) order
-                F.when(lower_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
-            )
-        )
-        e1, e2, e3 = orient.alias("e1"), orient.alias("e2"), orient.alias("e3")
-        wedge_order = (F.col("e1.dv") < F.col("e2.dv")) | (
-            (F.col("e1.dv") == F.col("e2.dv")) & (F.col("e1.v") < F.col("e2.v"))
-        )
-        tri = (
-            e1.join(e2, (F.col("e1.u") == F.col("e2.u")) & wedge_order)
-            .join(e3, (F.col("e3.u") == F.col("e1.v")) & (F.col("e3.v") == F.col("e2.v")))
-            .select(
-                F.col("e1.u").alias("x"), F.col("e1.v").alias("y"), F.col("e2.v").alias("z")
-            )
-        )
+        tri = _triangle_list(e)
         # each triangle (x, y, z) supports its three canonical edges
         edge_hits = (
             tri.select(F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b"))
@@ -2893,13 +2856,7 @@ def coreness(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
 
     from pyspark.sql import Window
 
-    sym = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    sym = _undirected_pairs(edges)
     nbrs = (
         sym.select(F.col("a").alias("entity"), F.col("b").alias("nbr"))
         .unionByName(

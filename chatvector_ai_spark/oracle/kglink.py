@@ -1,7 +1,7 @@
 """Single-node oracle for entity linking + canonicalization.
 
 Independent (dict/loop/union-find) implementation of the semantics the
-distributed stages express with joins and iterative label propagation:
+distributed stages express with joins and ``graph.connected_components``:
 
 - linking (operators/link.py): per mention occurrence, candidates are the
   alias-dictionary rows whose ``alias`` equals the lowercased surface;

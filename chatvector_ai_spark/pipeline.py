@@ -5,7 +5,7 @@ Stage graph (SURVEY.md §3.1 "Spark lifecycle equivalent"):
     documents ──ingest+embed──> chunks            (narrow, Arrow UDFs)
     chunks ──extract──> triples + quarantine      (narrow, Arrow UDF)
     triples ──link──> linked_mentions             (broadcast join, narrow)
-    linked ──canonicalize──> canonical_map        (iterative shuffle joins)
+    linked ──canonicalize──> canonical_map        (connected components)
     ──materialize──> nodes / edges                (bucketed by entity hash)
 
 Each stage commits exactly one warehouse snapshot plus its lineage row
@@ -27,10 +27,12 @@ alone. Resuming a fold whose chunks/triples_raw entry is no longer a delta
 of the base raises ``ValueError`` instead of folding the base in twice.
 
 Scale posture: stages 1-3 are shuffle-free (parallelism = input partitions);
-stage 4's only wide ops are the mention-pivot joins and the salted
-connected-components rounds; materialize buckets nodes/edges by entity hash
-(`pmod(xxhash64(id), n_buckets)`) so downstream graph queries prune buckets —
-the Iceberg `bucket(N, entity_hash)` partition transform of the north rule.
+stage 4's only wide ops are the mention-pivot joins and
+``graph.connected_components`` (a driver union-find at broadcast scale,
+large-star/small-star rounds above it); materialize buckets nodes/edges by
+entity hash (`pmod(xxhash64(id), n_buckets)`) so downstream graph queries
+prune buckets — the Iceberg `bucket(N, entity_hash)` partition transform of
+the north rule.
 """
 
 from __future__ import annotations
@@ -282,9 +284,10 @@ def _run_stages(
     })
 
     # Global stages over the whole (chained) corpus: linking is a broadcast
-    # dictionary join + top-1 window, canonicalization a CC fixpoint with
-    # salted hub keys, and nodes/edges both derive from (linked, cmap), so
-    # they commit concurrently, bucketed by entity hash.
+    # dictionary join + top-1 window, canonicalization connected components
+    # over the distinct surface↔entity edges, and nodes/edges both derive
+    # from (linked, cmap), so they commit concurrently, bucketed by entity
+    # hash.
     linked = stage(
         "linked_mentions", lambda: link_mentions(mentions_from_triples(triples), aliases)
     )

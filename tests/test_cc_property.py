@@ -1,12 +1,12 @@
 """Property test: both connected-components execution paths (driver
-union-find shortcut and distributed min-label loop) produce identical,
+union-find and distributed large-star/small-star rounds) produce identical,
 correct components on arbitrary small graphs — including self-loops,
 parallel edges, chains, and hub stars that Hypothesis likes to build."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from chatvector_ai_spark.operators.canonicalize import connected_components
+from chatvector_ai_spark.operators.graph import connected_components
 
 NODES = [f"N{i:02d}" for i in range(12)]
 
@@ -18,6 +18,8 @@ edge_lists = st.lists(
 
 
 def _reference_components(edges):
+    """Union-find over the non-self edges (the ``src <> dst`` rule of the
+    ``kg_components`` twin): a node with only self-loops has no row."""
     parent = {}
 
     def find(x):
@@ -27,6 +29,8 @@ def _reference_components(edges):
         return x
 
     for a, b in edges:
+        if a == b:
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[rb] = ra
@@ -40,16 +44,12 @@ def _reference_components(edges):
 
 @given(edge_lists)
 @settings(max_examples=12, deadline=None)
-def test_cc_paths_agree_and_match_union_find(spark, edges):
+def test_cc_paths_agree_and_match_union_find(spark, on_both_paths, edges):
     df = spark.createDataFrame(edges, "src string, dst string")
-    expected = _reference_components(edges)
-    driver = {
-        (r["node"], r["component"])
+    expected = set(_reference_components(edges).items())
+    driver, distributed = on_both_paths(lambda: {
+        (r["entity"], r["component"])
         for r in connected_components(df).collect()
-    }
-    distributed = {
-        (r["node"], r["component"])
-        for r in connected_components(df, small_core_edges=0).collect()
-    }
-    assert driver == set(expected.items())
-    assert distributed == set(expected.items())
+    })
+    assert driver == expected
+    assert distributed == expected

@@ -218,18 +218,6 @@ def _edges_df(spark, pairs):
     )
 
 
-def _on_both_paths(monkeypatch, run):
-    """``run()`` under the driver path (default ``CC_SMALL_CORE_EDGES``)
-    and again under the distributed loop (threshold 0); returns both."""
-    from chatvector_ai_spark.operators import graph
-
-    results = []
-    for threshold in (graph.CC_SMALL_CORE_EDGES, 0):
-        monkeypatch.setattr(graph, "CC_SMALL_CORE_EDGES", threshold)
-        results.append(run())
-    return results
-
-
 def _pagerank_reference(pairs, iterations=5, damping_pct=85, scale=1_000_000):
     """Independent pure-python fixed-point PageRank (same integer rules)."""
     edges = sorted({(s, d) for s, d in pairs if s != d})
@@ -248,14 +236,14 @@ def _pagerank_reference(pairs, iterations=5, damping_pct=85, scale=1_000_000):
     return pr
 
 
-def test_pagerank_matches_pure_python_fixed_point(spark, monkeypatch):
+def test_pagerank_matches_pure_python_fixed_point(spark, on_both_paths):
     from chatvector_ai_spark.operators.graph import pagerank
 
     pairs = [
         ("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "a"),
         ("e", "a"), ("a", "e"), ("b", "a"), ("f", "c"),
     ]
-    for got in _on_both_paths(monkeypatch, lambda: {
+    for got in on_both_paths(lambda: {
         r["entity"]: r["pr_scaled"]
         for r in pagerank(_edges_df(spark, pairs)).collect()
     }):
@@ -286,45 +274,62 @@ def test_triangles_counts_k4_and_ignores_dangling_edge(spark):
     assert got == {"p": 3, "q": 3, "r": 3, "s": 3}
 
 
-def test_connected_components_matches_union_find(spark, monkeypatch):
+def test_connected_components_matches_union_find(spark, on_both_paths):
     import random
 
     from chatvector_ai_spark.operators.graph import connected_components
 
     rng = random.Random(20260817)
     nodes = [f"n{i:03d}" for i in range(120)]
-    pairs = [tuple(rng.sample(nodes, 2)) for _ in range(140)]
+    random_pairs = [tuple(rng.sample(nodes, 2)) for _ in range(140)]
+    # a long chain whose minimum sits at one end: a label loop capped at a
+    # fixed round count leaves its far end with a non-minimal label
+    chain = [(f"n{i + 1:03d}", f"n{i:03d}") for i in range(59)]
 
-    parent = {v: v for v in nodes}
+    for pairs in (random_pairs, chain):
+        parent = {v: v for v in nodes}
 
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
 
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
+        for a, b in pairs:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
 
-    touched = sorted({n for e in pairs for n in e})
-    expected = {v: min(w for w in touched if find(w) == find(v)) for v in touched}
-    for got in _on_both_paths(monkeypatch, lambda: {
-        r["entity"]: r["component"]
-        for r in connected_components(_edges_df(spark, pairs)).collect()
-    }):
-        assert got == expected
+        touched = sorted({n for e in pairs for n in e})
+        expected = {v: min(w for w in touched if find(w) == find(v)) for v in touched}
+        for got in on_both_paths(lambda: {
+            r["entity"]: r["component"]
+            for r in connected_components(_edges_df(spark, pairs)).collect()
+        }):
+            assert got == expected
 
 
-def test_connected_components_two_disjoint_cliques(spark, monkeypatch):
+def test_connected_components_raises_when_rounds_run_out(spark, monkeypatch):
+    """Distributed rounds that end at ``max_iter`` without a fixed point
+    raise instead of returning non-minimal labels; the default converges."""
+    from chatvector_ai_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CC_SMALL_CORE_EDGES", 0)
+    df = _edges_df(spark, [(f"c{i + 1:02d}", f"c{i:02d}") for i in range(30)])
+    with pytest.raises(ValueError, match="max_iter=1"):
+        graph.connected_components(df, max_iter=1)
+    got = {r["component"] for r in graph.connected_components(df).collect()}
+    assert got == {"c00"}
+
+
+def test_connected_components_two_disjoint_cliques(spark, on_both_paths):
     from chatvector_ai_spark.operators.graph import connected_components
 
     c1 = ["a", "b", "c"]
     c2 = ["x", "y", "z"]
     pairs = [(u, v) for i, u in enumerate(c1) for v in c1[i + 1:]]
     pairs += [(u, v) for i, u in enumerate(c2) for v in c2[i + 1:]]
-    for got in _on_both_paths(monkeypatch, lambda: {
+    for got in on_both_paths(lambda: {
         r["entity"]: r["component"]
         for r in connected_components(_edges_df(spark, pairs)).collect()
     }):
@@ -348,7 +353,7 @@ def test_personalized_pagerank_concentrates_near_seed(spark):
     assert got["b"] > got["c"] > got["d"] or got["b"] >= got["c"] >= got["d"]
 
 
-def test_personalized_pagerank_matches_pure_python(spark, monkeypatch):
+def test_personalized_pagerank_matches_pure_python(spark, on_both_paths):
     from chatvector_ai_spark.operators.graph import pagerank
 
     pairs = [
@@ -372,7 +377,7 @@ def test_personalized_pagerank_matches_pure_python(spark, monkeypatch):
             v: (t_val if v in seeds else 0) + (damping * acc[v]) // 100
             for v in nodes
         }
-    for got in _on_both_paths(monkeypatch, lambda: {
+    for got in on_both_paths(lambda: {
         r["entity"]: r["pr_scaled"]
         for r in pagerank(_edges_df(spark, pairs), seeds=seeds).collect()
     }):
@@ -818,7 +823,7 @@ def test_match_pattern_repeated_variable_is_self_loop_filter(spark):
     assert {(r["x"], r["y"]) for r in chained.collect()} == {("c", "d")}
 
 
-def test_pagerank_seed_validation(spark, monkeypatch):
+def test_pagerank_seed_validation(spark, on_both_paths):
     """seeds=[] is a caller error (raise, never ZeroDivisionError); a seed
     list entirely absent from the edge vocabulary would silently zero every
     rank, so it raises too. A partially-present seed list still runs."""
@@ -835,11 +840,11 @@ def test_pagerank_seed_validation(spark, monkeypatch):
             pagerank(df, seeds=["nope", "missing"])
         return {r["entity"]: r["pr_scaled"] for r in pagerank(df, seeds=["a", "ghost"]).collect()}
 
-    for got in _on_both_paths(monkeypatch, run):
+    for got in on_both_paths(run):
         assert sum(got.values()) > 0  # present seed keeps teleport mass flowing
 
 
-def test_driver_and_distributed_graph_paths_agree(spark, monkeypatch):
+def test_driver_and_distributed_graph_paths_agree(spark, on_both_paths):
     """On a seeded random graph with duplicate edges and self-loops, the
     driver path and the distributed loop of pagerank (plain and
     personalized with a partly absent seed list) and connected_components
@@ -859,7 +864,7 @@ def test_driver_and_distributed_graph_paths_agree(spark, monkeypatch):
     def rows(out):
         return out.schema.simpleString(), sorted(tuple(r) for r in out.collect())
 
-    driver, distributed = _on_both_paths(monkeypatch, lambda: [
+    driver, distributed = on_both_paths(lambda: [
         rows(pagerank(df)),
         rows(pagerank(df, iterations=7, seeds=seeds)),
         rows(connected_components(df)),

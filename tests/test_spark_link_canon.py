@@ -9,10 +9,10 @@ from chatvector_ai_spark.functions.embeddings import with_embedding
 from chatvector_ai_spark.operators.canonicalize import (
     canonical_map,
     canonicalize_triples,
-    connected_components,
     linking_edges,
 )
 from chatvector_ai_spark.operators.extract import extract_triples_df, good_triples
+from chatvector_ai_spark.operators.graph import connected_components
 from chatvector_ai_spark.operators.ingest import ingest_chunks
 from chatvector_ai_spark.operators.link import link_mentions, mentions_from_triples
 
@@ -57,12 +57,12 @@ def test_unlinked_surfaces_get_surrogates(linked):
         assert (un["canonical"] == un["surface"]).all()
 
 
-def test_connected_components_match_union_find(spark, linked):
+def test_connected_components_match_union_find(spark, linked, on_both_paths):
+    """canonical_map (driver union-find, then large-star/small-star rounds
+    at threshold 0) equals a union-find over the linking edges, restricted
+    to entity nodes."""
     _, alias, lm = linked
-    edges = linking_edges(lm, alias).cache()
-    comp = connected_components(edges).toPandas()  # small-core driver path
-    comp_dist = connected_components(edges, small_core_edges=0).toPandas()  # shuffle loop
-    edge_rows = edges.toPandas()
+    edge_rows = linking_edges(lm, alias).toPandas()
 
     parent: dict[str, str] = {}
 
@@ -82,11 +82,11 @@ def test_connected_components_match_union_find(spark, linked):
     for _, e in edge_rows.iterrows():
         union(e["src"], e["dst"])
 
-    expected = {n: find(n) for n in parent}
-    got = dict(zip(comp["node"], comp["component"]))
-    assert got == expected
-    got_dist = dict(zip(comp_dist["node"], comp_dist["component"]))
-    assert got_dist == expected
+    expected = {n: find(n) for n in parent if not n.startswith("S:")}
+    for got in on_both_paths(lambda: {
+        r["entity_id"]: r["canonical_entity"] for r in canonical_map(lm, alias).collect()
+    }):
+        assert got == expected
 
 
 def test_canonicalize_triples_end_to_end(spark, linked):
@@ -115,22 +115,9 @@ def test_canonicalize_triples_end_to_end(spark, linked):
     assert all(rep <= e for e, rep in m.items())
 
 
-def test_salted_cc_matches_unsalted(spark, linked):
-    """The explicit salted-replication path (non-AQE clusters) must produce
-    the same components as the default AQE-skew-join path."""
-    _, alias, lm = linked
-    edges = linking_edges(lm, alias)
-    base = {(r["node"], r["component"]) for r in connected_components(edges).collect()}
-    salted = {
-        (r["node"], r["component"])
-        for r in connected_components(edges, salt_buckets=4).collect()
-    }
-    assert base == salted
-
-
-def test_cc_pendant_pruning_edge_cases(spark):
-    """Chains, mutual pendant pairs, stars: pruned CC must keep exact
-    min-id components (pendants can own the component minimum)."""
+def test_cc_pendant_pruning_edge_cases(spark, on_both_paths):
+    """Chains, mutual pendant pairs, stars: CC must keep exact min-id
+    components on both paths (pendants can own the component minimum)."""
     edges = spark.createDataFrame(
         [("B", "A"), ("B", "C"),          # chain: min is pendant A
          ("D", "E"),                        # isolated pair
@@ -138,38 +125,28 @@ def test_cc_pendant_pruning_edge_cases(spark):
          ("Z", "Y")],                       # pair where min is dst
         "src string, dst string",
     )
-    # small_core_edges=0 forces the distributed loop so the pendant
-    # machinery itself is exercised; the default exercises the driver path
-    for pruned in (True, False):
-        for small_core in (0, None):
-            kw = {} if small_core is None else {"small_core_edges": small_core}
-            got = {
-                (r["node"], r["component"])
-                for r in connected_components(edges, prune_pendants=pruned, **kw).collect()
-            }
-            assert got == {
-                ("A", "A"), ("B", "A"), ("C", "A"),
-                ("D", "D"), ("E", "D"),
-                ("F", "F"), ("G", "F"), ("H", "F"), ("I", "F"),
-                ("Y", "Y"), ("Z", "Y"),
-            }, (pruned, small_core)
+    for got in on_both_paths(lambda: {
+        (r["entity"], r["component"]) for r in connected_components(edges).collect()
+    }):
+        assert got == {
+            ("A", "A"), ("B", "A"), ("C", "A"),
+            ("D", "D"), ("E", "D"),
+            ("F", "F"), ("G", "F"), ("H", "F"), ("I", "F"),
+            ("Y", "Y"), ("Z", "Y"),
+        }
 
 
-def test_cc_self_loops_single_row_per_node(spark):
-    """Self-edges must not duplicate output rows (a self-loop-only node was
-    both its own pendant and anchor before the fix) and a node whose only
-    edge is a self-loop is its own singleton component."""
+def test_cc_self_loops_single_row_per_node(spark, on_both_paths):
+    """Self-edges must not duplicate output rows, and a node whose only
+    edge is a self-loop is not an endpoint of a non-self edge, so it has
+    no row."""
     edges = spark.createDataFrame(
         [("X", "X"),                 # self-loop-only node
          ("A", "A"), ("A", "B"),     # self-loop on a connected node
          ("C", "D")],
         "src string, dst string",
     )
-    for pruned in (True, False):
-        for small_core in (0, None):
-            kw = {} if small_core is None else {"small_core_edges": small_core}
-            rows = connected_components(edges, prune_pendants=pruned, **kw).collect()
-            got = [(r["node"], r["component"]) for r in rows]
-            assert sorted(got) == [
-                ("A", "A"), ("B", "A"), ("C", "C"), ("D", "C"), ("X", "X"),
-            ], (pruned, small_core)
+    for got in on_both_paths(lambda: sorted(
+        (r["entity"], r["component"]) for r in connected_components(edges).collect()
+    )):
+        assert got == [("A", "A"), ("B", "A"), ("C", "C"), ("D", "C")]
