@@ -10,6 +10,8 @@ expansion, relation filtering — all plain DataFrame ops.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -58,9 +60,7 @@ def khop(edges: DataFrame, seeds: list[str], k: int = 2, max_frontier: int | Non
     each hop is one join + distinct; ``max_frontier`` caps explosion on
     hub-heavy graphs (the candidate-widening analog)."""
     spark = edges.sparkSession
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = _sym_edges(edges)
     visited = spark.createDataFrame([(s, 0) for s in seeds], "entity string, hop int")
     frontier = visited.select("entity")
     for hop in range(1, k + 1):
@@ -177,6 +177,30 @@ def _fingerprint(df: DataFrame, *cols: str) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
+def _fixed_point(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_rounds: int,
+    what: str,
+) -> DataFrame:
+    """Apply *step* to *state* until a round changes nothing, and return
+    that state — the one loop of the operators that are only correct at a
+    fixed point. Each round ends with an eager ``localCheckpoint``
+    (iterative joins otherwise stack plans) and a ``_fingerprint`` over all
+    columns; equal fingerprints on consecutive rounds are the fixed point.
+    Rounds that end at *max_rounds* without one raise ``ValueError``
+    naming *what* (``"<operator>: <cap parameter>"``) instead of returning
+    a state that is not yet the answer."""
+    prev = _fingerprint(state, *state.columns)
+    for _ in range(max_rounds):
+        state = step(state).localCheckpoint(eager=True)
+        cur = _fingerprint(state, *state.columns)
+        if cur == prev:
+            return state
+        prev = cur
+    raise ValueError(f"{what}={max_rounds} ended before a fixed point; raise the cap")
+
+
 def _absent_seeds_error(seeds: list[str]) -> ValueError:
     # a seed absent from the edge vocabulary holds teleport mass that can
     # never flow — all-zero ranks with no signal; fail loudly
@@ -273,12 +297,7 @@ def pagerank(
         small = e.limit(CC_SMALL_CORE_EDGES + 1).collect()
         if len(small) <= CC_SMALL_CORE_EDGES:
             return _driver_pagerank(e, small, iterations, damping_pct, scale, seeds)
-    nodes = (
-        e.select(F.col("src").alias("entity"))
-        .unionByName(e.select(F.col("dst").alias("entity")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = _graph_nodes(e).localCheckpoint(eager=True)
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("pr_scaled", F.lit(0).cast("bigint"))
@@ -336,6 +355,36 @@ def _undirected_pairs(edges: DataFrame) -> DataFrame:
     )
 
 
+def _sym_edges(edges: DataFrame) -> DataFrame:
+    """Distinct (src, dst) of the undirected simple graph over *edges* in
+    both orientations — every neighbor list the undirected operators walk.
+    Self-loops are dropped on both branches."""
+    e = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
+    return e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+
+
+def _graph_nodes(edges: DataFrame) -> DataFrame:
+    """Distinct endpoint set of *edges*, column ``entity``."""
+    return (
+        edges.select(F.col("src").alias("entity"))
+        .unionByName(edges.select(F.col("dst").alias("entity")))
+        .distinct()
+    )
+
+
+def _und_degrees(und: DataFrame) -> DataFrame:
+    """(entity, d): degree in the undirected simple graph given as
+    canonical pairs (a, b), e.g. from ``_undirected_pairs``."""
+    return (
+        und.select(F.col("a").alias("entity"))
+        .unionByName(und.select(F.col("b").alias("entity")))
+        .groupBy("entity")
+        .agg(F.count("*").alias("d"))
+    )
+
+
 def _triangle_list(und: DataFrame) -> DataFrame:
     """Every triangle of the undirected simple graph given as canonical
     pairs (a, b), once, as (x, y, z) — the two-variable case of the generic
@@ -352,12 +401,7 @@ def _triangle_list(und: DataFrame) -> DataFrame:
     Plan: degree hash-agg → two broadcast-free equi-joins (wedge u→v, u→w
     then closing edge v→w).
     """
-    deg = (
-        und.select(F.col("a").alias("entity"))
-        .unionByName(und.select(F.col("b").alias("entity")))
-        .groupBy("entity")
-        .agg(F.count("*").alias("d"))
-    )
+    deg = _und_degrees(und)
     da = deg.withColumnRenamed("entity", "a").withColumnRenamed("d", "da")
     db = deg.withColumnRenamed("entity", "b").withColumnRenamed("d", "db")
     lower_first = (F.col("da") < F.col("db")) | (
@@ -423,12 +467,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     label propagation's O(diameter) rounds). Invariant maintained between
     rounds: the pair set holds (node, peer) with node > peer. large-star
     hangs every neighbor larger than u off u's minimum; small-star re-hangs
-    u's smaller neighbors (and u) off the minimum. Each round ends with an
-    eager ``localCheckpoint`` (lineage truncation — iterative joins
-    otherwise stack plans) and a cheap (count, xxhash bit_xor) fingerprint
-    action for the convergence test. Rounds that end at ``max_iter``
-    without an unchanged fingerprint raise ``ValueError`` instead of
-    returning labels that are not yet component minima.
+    u's smaller neighbors (and u) off the minimum. The rounds run under
+    ``_fixed_point``: rounds that end at ``max_iter`` without an unchanged
+    pair set raise ``ValueError`` instead of returning labels that are not
+    yet component minima.
     """
     pairs = (
         edges.select(
@@ -442,12 +484,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         return _driver_union_find(pairs).select(
             F.col("node").alias("entity"), F.col("label").alias("component")
         )
-    nodes = (
-        pairs.select(F.col("a").alias("entity"))
-        .unionByName(pairs.select(F.col("b").alias("entity")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = _graph_nodes(pairs.toDF("src", "dst")).localCheckpoint(eager=True)
 
     def large_star(p: DataFrame) -> DataFrame:
         sym = p.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
@@ -474,20 +511,9 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         hang_self = mins.select(F.col("a"), F.col("m").alias("b"))
         return hang_nbrs.unionByName(hang_self).where(F.col("a") != F.col("b")).distinct()
 
-    prev = _fingerprint(pairs, "a", "b")
-    for _ in range(max_iter):
-        pairs = small_star(large_star(pairs)).localCheckpoint(eager=True)
-        cur = _fingerprint(pairs, "a", "b")
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        # the pair set still moved in the last round: its labels are not
-        # yet component minima
-        raise ValueError(
-            f"connected_components: pairs did not converge within max_iter={max_iter}; "
-            "raise the cap"
-        )
+    pairs = _fixed_point(
+        pairs, lambda p: small_star(large_star(p)), max_iter, "connected_components: max_iter"
+    )
     labels = pairs.groupBy(F.col("a").alias("entity")).agg(F.min("b").alias("component"))
     return (
         nodes.join(labels, "entity", "left")
@@ -512,13 +538,7 @@ def kcore(edges: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
     und = _undirected_pairs(edges).localCheckpoint(eager=True)
     prev_edges = und.count()
     for _ in range(max_rounds):
-        deg = (
-            und.select(F.col("a").alias("entity"))
-            .unionByName(und.select(F.col("b").alias("entity")))
-            .groupBy("entity")
-            .agg(F.count("*").alias("d"))
-        )
-        alive = deg.where(F.col("d") >= k).select("entity")
+        alive = _und_degrees(und).where(F.col("d") >= k).select("entity")
         und = (
             und.join(alive.withColumnRenamed("entity", "a"), "a", "left_semi")
             .join(alive.withColumnRenamed("entity", "b"), "b", "left_semi")
@@ -529,12 +549,8 @@ def kcore(edges: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
         if cur == prev_edges:
             break
         prev_edges = cur
-    return (
-        und.select(F.col("a").alias("entity"))
-        .unionByName(und.select(F.col("b").alias("entity")))
-        .groupBy("entity")
-        .agg(F.count("*").alias("core_degree"))
-        .where(F.col("core_degree") >= k)
+    return _und_degrees(und).where(F.col("d") >= k).select(
+        "entity", F.col("d").alias("core_degree")
     )
 
 
@@ -558,12 +574,7 @@ def structural_similarity(
     engines (integer counts; one final per-row division, rounded)."""
     from pyspark.sql import Window
 
-    sym = (
-        edges.select(F.col("src").alias("entity"), F.col("dst").alias("nbr"))
-        .unionByName(edges.select(F.col("dst").alias("entity"), F.col("src").alias("nbr")))
-        .where(F.col("entity") != F.col("nbr"))
-        .distinct()
-    )
+    sym = _sym_edges(edges).toDF("entity", "nbr")
     w = Window.partitionBy("entity").orderBy(F.asc("nbr"))
     capped = sym.withColumn("rk", F.row_number().over(w)).where(
         F.col("rk") <= max_neighbors
@@ -964,13 +975,7 @@ def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
     is one shuffle on the entity key at any scale.
 
     Returns (entity, label) — nodes sharing a label form a community."""
-    sym = (
-        edges.select(F.col("src").alias("entity"), F.col("dst").alias("nbr"))
-        .unionByName(edges.select(F.col("dst").alias("entity"), F.col("src").alias("nbr")))
-        .where(F.col("entity") != F.col("nbr"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _sym_edges(edges).toDF("entity", "nbr").localCheckpoint(eager=True)
     nodes = sym.select("entity").distinct().localCheckpoint(eager=True)
     labels = nodes.withColumn("label", F.col("entity"))
     for _ in range(iterations):
@@ -1279,16 +1284,11 @@ def weighted_pagerank(
         )
         .localCheckpoint(eager=True)
     )
-    nodes = (
-        e.select(F.col("src").alias("entity"))
-        .unionByName(e.select(F.col("dst").alias("entity")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = _graph_nodes(e).localCheckpoint(eager=True)
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("pr_scaled", F.lit(0).cast("bigint"))
-    outw = e.groupBy("src").agg(F.sum("w").alias("out_w"))
+    outw =e.groupBy("src").agg(F.sum("w").alias("out_w"))
     teleport = F.lit(((100 - damping_pct) * scale // 100) // n)
     pr = nodes.withColumn("pr", F.lit(scale // n).cast("bigint"))
     for _ in range(iterations):
@@ -1314,6 +1314,38 @@ def weighted_pagerank(
     return pr.withColumnRenamed("pr", "pr_scaled")
 
 
+def _co_neighbor_pairs(sym: DataFrame, max_neighbors: int) -> DataFrame:
+    """(entity_a, entity_b, z), entity_a < entity_b, once per neighbor z
+    the two share, for every pair *sym* (from ``_sym_edges``) does not
+    already connect — the candidate generator of the link predictors.
+    Pairs are blocked per shared neighbor, and each neighbor list is capped
+    at its ``max_neighbors`` smallest ids, so a hub of degree d emits at
+    most max_neighbors² pairs, not d²."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("src").orderBy("dst")
+    capped = (
+        sym.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= max_neighbors)
+        .select(F.col("src").alias("z"), F.col("dst").alias("entity"))
+    )
+    a, b = capped.alias("a"), capped.alias("b")
+    return (
+        a.join(b, (F.col("a.z") == F.col("b.z")) & (F.col("a.entity") < F.col("b.entity")))
+        .select(
+            F.col("a.entity").alias("entity_a"),
+            F.col("b.entity").alias("entity_b"),
+            F.col("a.z").alias("z"),
+        )
+        # drop pairs that are already edges (either direction is in sym)
+        .join(
+            sym.select(F.col("src").alias("entity_a"), F.col("dst").alias("entity_b")),
+            ["entity_a", "entity_b"],
+            "left_anti",
+        )
+    )
+
+
 def link_prediction_cn(
     edges: DataFrame,
     max_neighbors: int = 64,
@@ -1333,38 +1365,15 @@ def link_prediction_cn(
     neighbor-set sizes; all math is integer (ppm = parts-per-million via
     integer DIV), so the result is aggregation-order-independent and
     exactly twinned in DuckDB. The only window is PARTITION BY entity."""
-    from pyspark.sql import Window
-
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-    )
+    sym = _sym_edges(edges)
     deg = sym.groupBy(F.col("src").alias("entity")).agg(
         F.count("*").alias("degree")
     )
-    w = Window.partitionBy("src").orderBy("dst")
-    capped = (
-        sym.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= max_neighbors)
-        .select(F.col("src").alias("z"), F.col("dst").alias("entity"))
-    )
-    a, b = capped.alias("a"), capped.alias("b")
     pairs = (
-        a.join(b, (F.col("a.z") == F.col("b.z")) & (F.col("a.entity") < F.col("b.entity")))
-        .groupBy(
-            F.col("a.entity").alias("entity_a"),
-            F.col("b.entity").alias("entity_b"),
-        )
+        _co_neighbor_pairs(sym, max_neighbors)
+        .groupBy("entity_a", "entity_b")
         .agg(F.count("*").alias("common_neighbors"))
         .where(F.col("common_neighbors") >= min_common)
-    )
-    # drop pairs that are already edges (either direction is in sym)
-    pairs = pairs.join(
-        sym.select(F.col("src").alias("entity_a"), F.col("dst").alias("entity_b")),
-        ["entity_a", "entity_b"],
-        "left_anti",
     )
     return (
         pairs.join(deg.withColumnRenamed("entity", "entity_a").withColumnRenamed("degree", "deg_a"), "entity_a")
@@ -1531,12 +1540,7 @@ def _landmark_bfs(
     if not seeds:
         raise ValueError("landmark BFS needs a non-empty seed list")
     spark = edges.sparkSession
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-    )
+    sym = _sym_edges(edges)
     visited = spark.createDataFrame(
         [(s, s, 0) for s in seeds], "seed string, entity string, hop int"
     )
@@ -1639,12 +1643,7 @@ def neighborhood_function(
     diameter" diagnostic for the materialized KG.
     """
     R = n_registers
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-    )
+    sym = _sym_edges(edges)
     nodes = sym.select(F.col("src").alias("entity")).distinct()
 
     def h60(expr: str) -> str:
@@ -1703,13 +1702,8 @@ def hits(edges: DataFrame, iterations: int = 2, scale: int = 1_000_000) -> DataF
     pagerank: hub keys are AQE skew-join territory; node state is one
     BIGINT per direction."""
     e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
-    nodes = (
-        e.select(F.col("src").alias("entity"))
-        .unionByName(e.select(F.col("dst").alias("entity")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    auth = nodes.withColumn("a", F.lit(scale).cast("bigint"))
+    nodes = _graph_nodes(e).localCheckpoint(eager=True)
+    auth =nodes.withColumn("a", F.lit(scale).cast("bigint"))
     hub = nodes.withColumn("h", F.lit(scale).cast("bigint"))
 
     def _renorm(df: DataFrame, col: str) -> DataFrame:
@@ -1770,12 +1764,7 @@ def random_walks(
         "rank", F.row_number().over(Window.partitionBy("src").orderBy("dst"))
     )
     deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    nodes = (
-        e.select(F.col("src").alias("entity"))
-        .unionByName(e.select(F.col("dst").alias("entity")))
-        .distinct()
-    )
-    cur = nodes.select(
+    cur = _graph_nodes(e).select(
         F.col("entity").alias("start"),
         F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("walk_id"),
         F.col("entity"),
@@ -1884,12 +1873,7 @@ def node2vec_walks(
         "rank", F.row_number().over(Window.partitionBy("src").orderBy("dst"))
     )
     deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    nodes = (
-        e.select(F.col("src").alias("entity"))
-        .unionByName(e.select(F.col("dst").alias("entity")))
-        .distinct()
-    )
-    cur = nodes.select(
+    cur = _graph_nodes(e).select(
         F.col("entity").alias("start"),
         F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("walk_id"),
         F.col("entity").alias("prev"),  # placeholder; unused at step 1
@@ -1972,16 +1956,20 @@ def strongly_connected_components(
          each is its own (trivial) SCC. This removes the DAG fringe that
          dominates real KGs before any propagation work.
       2. **color**: propagate min-ancestor-id forward along edge
-         direction to a fixpoint (fingerprint-tested, like
-         connected_components): color(v) = min id that reaches v.
+         direction to a fixpoint: color(v) = min id that reaches v.
       3. **confirm**: within each color, propagate "reaches the color
          root" backward to a fixpoint. Nodes confirmed both directions
          form the SCC of that root and leave the active set.
     Every confirmed color removes at least its root each outer round, so
-    progress is guaranteed; ``max_outer_rounds`` bounds worst-case latency
-    and the operator raises if the graph hasn't fully resolved (never at
-    fixture scale; at 10^12-edge scale raise the cap, the per-round cost
-    is O(|E|) shuffle like every other label-prop pass here).
+    progress is guaranteed. Every cap raises ``ValueError`` rather than
+    return wrong labels: ``max_outer_rounds`` when the graph has not fully
+    resolved, and ``max_prop_rounds`` when the color or confirm loop
+    (both run under ``_fixed_point``) has not reached its fixed point — a
+    directed cycle of n nodes needs about n color rounds. The trim loop is
+    best-effort peeling and may stop at ``max_prop_rounds``; whatever it
+    leaves, the color and confirm loops resolve. At 10^12-edge scale raise
+    the caps; the per-round cost is O(|E|) shuffle like every other
+    label-prop pass here.
 
     Output: (entity, scc) for every node of the directed graph.
     Determinism: min/bool-or aggregations only — order-independent, exact
@@ -1994,12 +1982,7 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    active_nodes = (
-        e.select(F.col("src").alias("entity"))
-        .unionByName(e.select(F.col("dst").alias("entity")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    active_nodes = _graph_nodes(e).localCheckpoint(eager=True)
     done_parts: list[DataFrame] = []
 
     for _ in range(max_outer_rounds):
@@ -2033,9 +2016,7 @@ def strongly_connected_components(
         if active_nodes.count() == 0:
             break
         # -- 2. forward coloring: color(v) = min id with a directed path to v.
-        color = active_nodes.select("entity", F.col("entity").alias("color"))
-        prev = _fingerprint(color, "entity", "color")
-        for _ in range(max_prop_rounds):
+        def pull_min(color: DataFrame) -> DataFrame:
             incoming = (
                 e.join(
                     color.select(F.col("entity").alias("src"), F.col("color").alias("c_in")),
@@ -2044,19 +2025,17 @@ def strongly_connected_components(
                 .groupBy(F.col("dst").alias("entity"))
                 .agg(F.min("c_in").alias("c_min"))
             )
-            color = (
-                color.join(incoming, "entity", "left")
-                .select("entity", F.least("color", F.coalesce("c_min", "color")).alias("color"))
-                .localCheckpoint(eager=True)
+            return color.join(incoming, "entity", "left").select(
+                "entity", F.least("color", F.coalesce("c_min", "color")).alias("color")
             )
-            cur = _fingerprint(color, "entity", "color")
-            if cur == prev:
-                break
-            prev = cur
-        # -- 3. backward confirmation within each color: can v reach its root?
-        confirmed = color.where(F.col("entity") == F.col("color")).select(
-            "entity", "color"
+
+        color = _fixed_point(
+            active_nodes.select("entity", F.col("entity").alias("color")),
+            pull_min,
+            max_prop_rounds,
+            "strongly_connected_components color loop: max_prop_rounds",
         )
+        # -- 3. backward confirmation within each color: can v reach its root?
         ec = (
             e.join(color.withColumnRenamed("entity", "src").withColumnRenamed("color", "c_src"), "src")
             .join(color.withColumnRenamed("entity", "dst").withColumnRenamed("color", "c_dst"), "dst")
@@ -2064,8 +2043,8 @@ def strongly_connected_components(
             .select("src", "dst", F.col("c_src").alias("color"))
             .localCheckpoint(eager=True)
         )
-        prev = _fingerprint(confirmed, "entity", "color")
-        for _ in range(max_prop_rounds):
+
+        def reach_root(confirmed: DataFrame) -> DataFrame:
             new = (
                 ec.join(
                     confirmed.select(F.col("entity").alias("dst"), "color"),
@@ -2074,11 +2053,14 @@ def strongly_connected_components(
                 .select(F.col("src").alias("entity"), "color")
                 .distinct()
             )
-            confirmed = confirmed.unionByName(new).distinct().localCheckpoint(eager=True)
-            cur = _fingerprint(confirmed, "entity", "color")
-            if cur == prev:
-                break
-            prev = cur
+            return confirmed.unionByName(new).distinct()
+
+        confirmed = _fixed_point(
+            color.where(F.col("entity") == F.col("color")),
+            reach_root,
+            max_prop_rounds,
+            "strongly_connected_components confirm loop: max_prop_rounds",
+        )
         done_parts.append(
             confirmed.select("entity", F.col("color").alias("scc")).localCheckpoint(
                 eager=True
@@ -2191,29 +2173,10 @@ def link_prediction_ra(
     anti-joined away. The 1/deg(z) weight uses z's TRUE degree, not the
     capped one. Output: (entity_a, entity_b, common_neighbors, ra_ppm).
     """
-    from pyspark.sql import Window
-
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-    )
+    sym = _sym_edges(edges)
     deg = sym.groupBy(F.col("src").alias("z")).agg(F.count("*").alias("z_deg"))
-    w = Window.partitionBy("src").orderBy("dst")
-    capped = (
-        sym.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= max_neighbors)
-        .select(F.col("src").alias("z"), F.col("dst").alias("entity"))
-    )
-    a, b = capped.alias("a"), capped.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.z") == F.col("b.z")) & (F.col("a.entity") < F.col("b.entity")))
-        .select(
-            F.col("a.entity").alias("entity_a"),
-            F.col("b.entity").alias("entity_b"),
-            F.col("a.z").alias("z"),
-        )
+    return (
+        _co_neighbor_pairs(sym, max_neighbors)
         .join(deg, "z")
         .groupBy("entity_a", "entity_b")
         .agg(
@@ -2221,11 +2184,6 @@ def link_prediction_ra(
             F.sum(F.expr("1000000 DIV z_deg")).cast("bigint").alias("ra_ppm"),
         )
         .where(F.col("common_neighbors") >= min_common)
-    )
-    return pairs.join(
-        sym.select(F.col("src").alias("entity_a"), F.col("dst").alias("entity_b")),
-        ["entity_a", "entity_b"],
-        "left_anti",
     )
 
 
@@ -2242,13 +2200,7 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     hash-agg and one left join — nothing here outgrows the triangle count
     itself.
     """
-    und = _undirected_pairs(edges)
-    deg = (
-        und.select(F.col("a").alias("entity"))
-        .unionByName(und.select(F.col("b").alias("entity")))
-        .groupBy("entity")
-        .agg(F.count("*").alias("degree"))
-    )
+    deg = _und_degrees(_undirected_pairs(edges)).withColumnRenamed("d", "degree")
     tri = triangles(edges)
     return (
         deg.where(F.col("degree") >= 2)
@@ -2281,12 +2233,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     single-row output is the reduction, so no skew concern beyond the
     degree join itself (AQE handles the hub key).
     """
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-    )
+    sym = _sym_edges(edges)
     deg = sym.groupBy(F.col("src").alias("entity")).agg(F.count("*").alias("d"))
     dx = deg.select(F.col("entity").alias("src"), F.col("d").alias("x"))
     dy = deg.select(F.col("entity").alias("dst"), F.col("d").alias("y"))
@@ -2340,12 +2287,7 @@ def katz_centrality(
     if iterations < 1:
         raise ValueError("katz_centrality needs iterations >= 1")
     g = edges.where(F.col("src") != F.col("dst")).select("src", "dst").distinct()
-    walks = (
-        g.select(F.col("src").alias("entity"))
-        .unionByName(g.select(F.col("dst").alias("entity")))
-        .distinct()
-        .withColumn("w", F.lit(1).cast("bigint"))
-    )
+    walks = _graph_nodes(g).withColumn("w", F.lit(1).cast("bigint"))
     contribs: list[DataFrame] = []
     for i in range(1, iterations + 1):
         walks = (
@@ -2440,13 +2382,7 @@ def maximal_independent_set(edges: DataFrame, rounds: int = 4) -> DataFrame:
     one min hash-agg of neighbor priorities, and anti-joins to shrink the
     undecided set — two shuffles on the entity key at any scale, with
     ``localCheckpoint`` truncating lineage per round."""
-    sym = (
-        edges.select(F.col("src").alias("entity"), F.col("dst").alias("nbr"))
-        .unionByName(edges.select(F.col("dst").alias("entity"), F.col("src").alias("nbr")))
-        .where(F.col("entity") != F.col("nbr"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _sym_edges(edges).toDF("entity", "nbr").localCheckpoint(eager=True)
     und = sym.select("entity").distinct().localCheckpoint(eager=True)
     decided: DataFrame | None = None
     for r in range(1, rounds + 1):
@@ -2529,14 +2465,10 @@ def maximal_matching(edges: DataFrame, rounds: int = 4) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         matched = sel if matched is None else matched.unionByName(sel)
-        used = (
-            sel.select(F.col("a").alias("node"))
-            .unionByName(sel.select(F.col("b").alias("node")))
-            .distinct()
-        )
+        used = _graph_nodes(sel.select(F.col("a").alias("src"), F.col("b").alias("dst")))
         cand = (
-            cand.join(used.select(F.col("node").alias("a")), "a", "left_anti")
-            .join(used.select(F.col("node").alias("b")), "b", "left_anti")
+            cand.join(used.select(F.col("entity").alias("a")), "a", "left_anti")
+            .join(used.select(F.col("entity").alias("b")), "b", "left_anti")
             .select("a", "b")
             .localCheckpoint(eager=True)
         )
@@ -2566,12 +2498,7 @@ def partition_modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     state, no window.
     """
     und = _undirected_pairs(edges)
-    deg = (
-        und.select(F.col("a").alias("entity"))
-        .unionByName(und.select(F.col("b").alias("entity")))
-        .groupBy("entity")
-        .agg(F.count("*").alias("d"))
-    )
+    deg = _und_degrees(und)
     m = und.agg(F.count("*").cast("bigint").alias("n_edges"))
     intra = (
         und.join(labels.select(F.col("entity").alias("a"), F.col("label").alias("la")), "a")
@@ -2624,15 +2551,7 @@ def graph_stats(edges: DataFrame) -> DataFrame:
     directed = edges.where(F.col("src") != F.col("dst")).select("src", "dst").distinct()
     rev = directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     recip = directed.join(rev, ["src", "dst"], "left_semi")
-    und = directed.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-    ).distinct()
-    deg = (
-        und.select(F.col("a").alias("entity"))
-        .unionByName(und.select(F.col("b").alias("entity")))
-        .groupBy("entity")
-        .agg(F.count("*").alias("d"))
-    )
+    deg = _und_degrees(_undirected_pairs(directed))
     census = deg.agg(
         F.count("*").cast("bigint").alias("n_nodes"),
         (F.sum("d") / F.lit(2)).cast("bigint").alias("n_edges_und"),
@@ -2688,12 +2607,7 @@ def wl_colors(edges: DataFrame, rounds: int = 2) -> DataFrame:
     here has (cap upstream via skew_report + salting if a 10^6-degree hub
     matters).
     """
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-    )
+    sym = _sym_edges(edges)
     nodes = sym.select(F.col("src").alias("entity")).distinct()
     colors = nodes.withColumn("color", F.lit(0).cast("bigint"))
     for _ in range(rounds):
@@ -2746,21 +2660,17 @@ def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 64) -> DataFrame:
     Scale shape: each round re-lists triangles with ``_triangle_list``
     (the degree-oriented O(m^1.5) wedge join ``triangles`` uses,
     hub-safe), then one hash-agg for per-edge support and one semi-join
-    filter; lineage truncated per round. The loop runs to the TRUE fixed
-    point (a round that deletes nothing); ``max_rounds`` is a safety
-    bound only — deep peeling cascades (e.g. a chain of triangles) need
-    one round per cascade step, so the default is generous and a warning
-    fires if it ever binds (the result would then be a supergraph of the
-    k-truss). The DuckDB twin unrolls a fixed round count; peeling is
-    monotone and the fixed point is idempotent, so the unrolled twin
-    equals the converged result whenever convergence happens within the
-    unroll depth.
+    filter; the rounds run under ``_fixed_point`` to the TRUE fixed point
+    (a round that deletes nothing). Deep peeling cascades (e.g. a strip of
+    triangles) need one round per cascade step, so the ``max_rounds``
+    default is generous; rounds that end at it before the fixed point
+    raise ``ValueError`` instead of returning a supergraph of the k-truss.
+    The DuckDB twin unrolls a fixed round count; peeling is monotone and
+    the fixed point is idempotent, so the unrolled twin equals the
+    converged result whenever convergence happens within the unroll depth.
     """
-    import warnings
     if k < 2:
         raise ValueError("ktruss needs k >= 2")
-    cur = _undirected_pairs(edges).localCheckpoint(eager=True)
-    n_cur = cur.count()
 
     def support(e: DataFrame) -> DataFrame:
         tri = _triangle_list(e)
@@ -2776,26 +2686,19 @@ def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 64) -> DataFrame:
         )
         return edge_hits.groupBy("a", "b").agg(F.count("*").alias("support"))
 
-    converged = False
-    for _ in range(max_rounds):
-        sup = support(cur)
-        cur = (
-            cur.join(sup, ["a", "b"], "left")
+    def peel(e: DataFrame) -> DataFrame:
+        return (
+            e.join(support(e), ["a", "b"], "left")
             .where(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-        n_next = cur.count()
-        if n_next == n_cur:
-            converged = True
-            break
-        n_cur = n_next
-    if not converged:
-        warnings.warn(
-            f"ktruss stopped at max_rounds={max_rounds} before reaching a "
-            "fixed point; the result is a supergraph of the true k-truss",
-            stacklevel=2,
-        )
+
+    cur = _fixed_point(
+        _undirected_pairs(edges).localCheckpoint(eager=True),
+        peel,
+        max_rounds,
+        "ktruss: max_rounds",
+    )
     final = support(cur)
     return (
         cur.join(final, ["a", "b"], "left")
@@ -2846,54 +2749,35 @@ def coreness(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
     vector (shuffle on entity), then the h-index per node = max over
     rank-ordered neighbor values of min(value, rank) — one window
     PARTITION BY entity (integer arithmetic only, deterministic under the
-    multiset regardless of tie order). The loop runs to the true fixed
-    point; ``max_rounds`` is a warned safety bound (convergence is
-    typically O(diameter)-fast in practice). Values only ever decrease
-    (monotone), so an unrolled oracle twin equals the converged result
-    whenever convergence happens within the unroll depth.
+    multiset regardless of tie order). The rounds run under
+    ``_fixed_point`` to the true fixed point; rounds that end at
+    ``max_rounds`` before it raise ``ValueError`` instead of returning
+    upper bounds on the coreness (convergence is typically
+    O(diameter)-fast in practice). Values only ever decrease (monotone),
+    so an unrolled oracle twin equals the converged result whenever
+    convergence happens within the unroll depth.
     """
-    import warnings
-
     from pyspark.sql import Window
 
-    sym = _undirected_pairs(edges)
-    nbrs = (
-        sym.select(F.col("a").alias("entity"), F.col("b").alias("nbr"))
-        .unionByName(
-            sym.select(F.col("b").alias("entity"), F.col("a").alias("nbr"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    h = nbrs.groupBy("entity").agg(F.count("*").cast("bigint").alias("h"))
-
+    nbrs = _sym_edges(edges).toDF("entity", "nbr").localCheckpoint(eager=True)
     w = Window.partitionBy("entity").orderBy(F.desc("v"), F.asc("nbr"))
-    converged = False
-    for _ in range(max_rounds):
+
+    def h_index(h: DataFrame) -> DataFrame:
         nbr_vals = nbrs.join(
             h.select(F.col("entity").alias("nbr"), F.col("h").alias("v")), "nbr"
         )
-        nxt = (
+        return (
             nbr_vals.withColumn("rk", F.row_number().over(w).cast("bigint"))
             .groupBy("entity")
             .agg(F.max(F.least(F.col("v"), F.col("rk"))).alias("h"))
-            .localCheckpoint(eager=True)
         )
-        changed = (
-            nxt.join(h.withColumnRenamed("h", "h_prev"), "entity")
-            .where(F.col("h") != F.col("h_prev"))
-            .count()
-        )
-        h = nxt
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        warnings.warn(
-            f"coreness stopped at max_rounds={max_rounds} before the "
-            "h-index iteration reached its fixed point; values are an "
-            "upper bound on the true coreness",
-            stacklevel=2,
-        )
+
+    h = _fixed_point(
+        nbrs.groupBy("entity").agg(F.count("*").cast("bigint").alias("h")),
+        h_index,
+        max_rounds,
+        "coreness: max_rounds",
+    )
     return h.select("entity", F.col("h").alias("coreness"))
 
 
@@ -3112,8 +2996,8 @@ def eval_path(edges: DataFrame, expr, max_hops: int = 3) -> DataFrame:
             return (
                 _graph_nodes(edges)
                 .select(
-                    F.col("node").alias("a"),
-                    F.col("node").alias("c"),
+                    F.col("entity").alias("a"),
+                    F.col("entity").alias("c"),
                     F.lit(0).cast("bigint").alias("hops"),
                 )
                 .unionByName(pairs(e[1]))
@@ -3163,15 +3047,6 @@ def eval_path(edges: DataFrame, expr, max_hops: int = 3) -> DataFrame:
         raise ValueError(f"unknown path operator: {op!r}")
 
     return pairs(expr).groupBy("a", "c").agg(F.min("hops").alias("hops"))
-
-
-def _graph_nodes(edges: DataFrame) -> DataFrame:
-    """Distinct endpoint set of the edge table, column ``node``."""
-    return (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
 
 
 def construct_triples(

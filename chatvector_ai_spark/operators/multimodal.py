@@ -180,19 +180,10 @@ def decode_media(media: DataFrame, backend: str = "fake") -> DataFrame:
         for pdf in batches:
             feats, widths, heights, durs = [], [], [], []
             for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                h = hashlib.sha256(bytes(payload)).digest()
-                vec = np.frombuffer(
-                    (h * (FEATURE_DIM // len(h) + 1))[:FEATURE_DIM], dtype=np.uint8
-                ).astype(np.float32)
-                norm = float(np.linalg.norm(vec))
-                feats.append((vec / norm if norm else vec).tolist())
-                if kind == "image":
-                    widths.append(64 + h[0]); heights.append(64 + h[1]); durs.append(None)
-                elif kind in ("audio", "video"):
-                    widths.append(None); heights.append(None)
-                    durs.append(1000 + int.from_bytes(h[2:4], "big"))
-                else:
-                    widths.append(None); heights.append(None); durs.append(None)
+                vec, h = _fake_feature(bytes(payload))
+                feats.append(vec)
+                w, ht, ms = _fake_dims(kind, h)
+                widths.append(w); heights.append(ht); durs.append(ms)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"], "span_idx": pdf["span_idx"],
@@ -215,6 +206,16 @@ def _fake_feature(payload: bytes) -> tuple[list[float], bytes]:
     ).astype(np.float32)
     norm = float(np.linalg.norm(vec))
     return (vec / norm if norm else vec).tolist(), h
+
+
+def _fake_dims(kind: str, h: bytes) -> tuple[int | None, int | None, int | None]:
+    """(width, height, duration_ms) the fake backend derives from the
+    payload digest *h*: dims for images, a duration for audio/video."""
+    if kind == "image":
+        return 64 + h[0], 64 + h[1], None
+    if kind in ("audio", "video"):
+        return None, None, 1000 + int.from_bytes(h[2:4], "big")
+    return None, None, None
 
 
 def _decode_media_stdlib(media: DataFrame) -> DataFrame:
@@ -333,13 +334,8 @@ def _decode_media_stdlib(media: DataFrame) -> DataFrame:
                     # can tell real from pseudo from quarantine-worthy
                     vec, h = _fake_feature(data)
                     feats.append(vec)
-                    if kind == "image":
-                        widths.append(64 + h[0]); heights.append(64 + h[1]); durs.append(None)
-                    elif kind in ("audio", "video"):
-                        widths.append(None); heights.append(None)
-                        durs.append(1000 + int.from_bytes(h[2:4], "big"))
-                    else:
-                        widths.append(None); heights.append(None); durs.append(None)
+                    w, ht, ms = _fake_dims(kind, h)
+                    widths.append(w); heights.append(ht); durs.append(ms)
                     backends.append(backends_label)
             yield pd.DataFrame(
                 {
@@ -353,6 +349,50 @@ def _decode_media_stdlib(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(decode, schema=FEATURE_ROW_DDL)
+
+
+def _gray_of(data: bytes) -> tuple[int, int, bytes, str] | None:
+    """(width, height, 8-bit gray pixels, backend label) of a PNG, GIF, BMP
+    or baseline JPEG payload via the stdlib codecs; None for any other
+    format. Corrupt payloads raise one of ``_DECODE_ERRORS``."""
+    from chatvector_ai_spark.functions.codecs import (
+        BMP_MAGIC,
+        GIF_MAGICS,
+        JPEG_MAGIC,
+        PNG_MAGIC,
+        decode_bmp_pixels,
+        decode_gif_pixels,
+        decode_png,
+    )
+    from chatvector_ai_spark.functions.jpegcodec import decode_jpeg_pixels
+
+    if data.startswith(PNG_MAGIC):
+        w, h, _ch, gray = decode_png(data)
+        return w, h, gray, "stdlib-png"
+    if data.startswith(GIF_MAGICS):
+        w, h, gray = decode_gif_pixels(data)
+        return w, h, gray, "stdlib-gif"
+    if data.startswith(BMP_MAGIC):
+        w, h, gray = decode_bmp_pixels(data)
+        return w, h, gray, "stdlib-bmp"
+    if data.startswith(JPEG_MAGIC):
+        w, h, gray = decode_jpeg_pixels(data)
+        return w, h, gray, "stdlib-jpeg"
+    return None
+
+
+def _pack64(bits: list[int]) -> int:
+    """64 bits, MSB first, as one signed BIGINT."""
+    v = 0
+    for b in bits:
+        v = (v << 1) | (1 if b else 0)
+    return v - (1 << 64) if v >= (1 << 63) else v
+
+
+def _fake_hash(payload: bytes) -> int:
+    """The fake backend's 64-bit hash: the first 64 bits of sha256."""
+    h = hashlib.sha256(payload).digest()
+    return _pack64([(h[i // 8] >> (7 - i % 8)) & 1 for i in range(64)])
 
 
 RESIZED_ROW_DDL = (
@@ -405,33 +445,7 @@ def resize_images(media: DataFrame, width: int = 32, height: int = 32, backend: 
         return (h * (n_out // len(h) + 1))[:n_out], "fake"
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from chatvector_ai_spark.functions.codecs import (
-            BMP_MAGIC,
-            GIF_MAGICS,
-            JPEG_MAGIC,
-            PNG_MAGIC,
-            decode_bmp_pixels,
-            decode_gif_pixels,
-            decode_png,
-            encode_png,
-            resize_gray,
-        )
-        from chatvector_ai_spark.functions.jpegcodec import decode_jpeg_pixels
-
-        def gray_of(data: bytes) -> tuple[int, int, bytes, str] | None:
-            if data.startswith(PNG_MAGIC):
-                w, h, _ch, gray = decode_png(data)
-                return w, h, gray, "stdlib-png"
-            if data.startswith(GIF_MAGICS):
-                w, h, gray = decode_gif_pixels(data)
-                return w, h, gray, "stdlib-gif"
-            if data.startswith(BMP_MAGIC):
-                w, h, gray = decode_bmp_pixels(data)
-                return w, h, gray, "stdlib-bmp"
-            if data.startswith(JPEG_MAGIC):
-                w, h, gray = decode_jpeg_pixels(data)
-                return w, h, gray, "stdlib-jpeg"
-            return None
+        from chatvector_ai_spark.functions.codecs import encode_png, resize_gray
 
         for pdf in batches:
             out_rows = []
@@ -442,7 +456,7 @@ def resize_images(media: DataFrame, width: int = 32, height: int = 32, backend: 
                 grid, label = None, None
                 if backend == "stdlib":
                     try:
-                        got = gray_of(data)
+                        got = _gray_of(data)
                         if got is not None:
                             w, h, gray, label = got
                             small = resize_gray(gray, w, h, width, height)
@@ -494,43 +508,8 @@ def image_phash(media: DataFrame, backend: str = "stdlib") -> DataFrame:
             "present in this environment; 'stdlib' and 'fake' are available"
         )
 
-    def pack(bits: list[int]) -> int:
-        v = 0
-        for b in bits:
-            v = (v << 1) | (1 if b else 0)
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    def fake_hash(payload: bytes) -> int:
-        h = hashlib.sha256(payload).digest()
-        return pack([(h[i // 8] >> (7 - i % 8)) & 1 for i in range(64)])
-
     def phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from chatvector_ai_spark.functions.codecs import (
-            BMP_MAGIC,
-            GIF_MAGICS,
-            JPEG_MAGIC,
-            PNG_MAGIC,
-            decode_bmp_pixels,
-            decode_gif_pixels,
-            decode_png,
-            resize_gray,
-        )
-        from chatvector_ai_spark.functions.jpegcodec import decode_jpeg_pixels
-
-        def gray_of(data: bytes) -> tuple[int, int, bytes, str] | None:
-            if data.startswith(PNG_MAGIC):
-                w, h, _ch, gray = decode_png(data)
-                return w, h, gray, "stdlib-png"
-            if data.startswith(GIF_MAGICS):
-                w, h, gray = decode_gif_pixels(data)
-                return w, h, gray, "stdlib-gif"
-            if data.startswith(BMP_MAGIC):
-                w, h, gray = decode_bmp_pixels(data)
-                return w, h, gray, "stdlib-bmp"
-            if data.startswith(JPEG_MAGIC):
-                w, h, gray = decode_jpeg_pixels(data)
-                return w, h, gray, "stdlib-jpeg"
-            return None
+        from chatvector_ai_spark.functions.codecs import resize_gray
 
         for pdf in batches:
             out_rows = []
@@ -541,18 +520,18 @@ def image_phash(media: DataFrame, backend: str = "stdlib") -> DataFrame:
                 hv, label = None, None
                 if backend == "stdlib":
                     try:
-                        got = gray_of(data)
+                        got = _gray_of(data)
                         if got is not None:
                             w, h, gray, label = got
                             small = resize_gray(gray, w, h, 8, 8)
                             # integer mean; strictly-above threshold so a
                             # flat image hashes to all-zero bits
                             mean = sum(small) // 64
-                            hv = pack([1 if px > mean else 0 for px in small])
+                            hv = _pack64([1 if px > mean else 0 for px in small])
                     except _DECODE_ERRORS:
-                        hv, label = fake_hash(data), "decode-error"
+                        hv, label = _fake_hash(data), "decode-error"
                 if hv is None:
-                    hv, label = fake_hash(data), ("fake" if label is None else label)
+                    hv, label = _fake_hash(data), ("fake" if label is None else label)
                 bands = [(hv >> (48 - 16 * i)) & 0xFFFF for i in range(4)]
                 out_rows.append(
                     {
@@ -569,13 +548,6 @@ def image_phash(media: DataFrame, backend: str = "stdlib") -> DataFrame:
             ])
 
     return media.where(F.col("kind") == "image").mapInPandas(phash, schema=PHASH_ROW_DDL)
-
-
-def _pack64(bits: list[int]) -> int:
-    v = 0
-    for b in bits:
-        v = (v << 1) | (1 if b else 0)
-    return v - (1 << 64) if v >= (1 << 63) else v
 
 
 def audio_phash(media: DataFrame, backend: str = "stdlib") -> DataFrame:
@@ -596,10 +568,6 @@ def audio_phash(media: DataFrame, backend: str = "stdlib") -> DataFrame:
             f"audio phash backend {backend!r} requires codec libraries not "
             "present in this environment; 'stdlib' and 'fake' are available"
         )
-
-    def fake_hash(payload: bytes) -> int:
-        h = hashlib.sha256(payload).digest()
-        return _pack64([(h[i // 8] >> (7 - i % 8)) & 1 for i in range(64)])
 
     def phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from chatvector_ai_spark.functions.codecs import WAV_MAGIC, decode_wav
@@ -624,9 +592,9 @@ def audio_phash(media: DataFrame, backend: str = "stdlib") -> DataFrame:
                             hv = _pack64([1 if e > mean else 0 for e in energies])
                             label = "stdlib-wav"
                     except _DECODE_ERRORS:
-                        hv, label = fake_hash(data), "decode-error"
+                        hv, label = _fake_hash(data), "decode-error"
                 if hv is None:
-                    hv, label = fake_hash(data), ("fake" if label is None else label)
+                    hv, label = _fake_hash(data), ("fake" if label is None else label)
                 bands = [(hv >> (48 - 16 * i)) & 0xFFFF for i in range(4)]
                 out_rows.append(
                     {
@@ -717,12 +685,8 @@ def sample_frames(media: DataFrame, every_ms: int = 1000, max_frames: int = 8, b
         n_frames = min(max_frames, max(1, duration_ms // every_ms))
         out = []
         for i in range(n_frames):
-            fh = hashlib.sha256(h + i.to_bytes(4, "big")).digest()
-            vec = np.frombuffer(
-                (fh * (FEATURE_DIM // len(fh) + 1))[:FEATURE_DIM], dtype=np.uint8
-            ).astype(np.float32)
-            norm = float(np.linalg.norm(vec))
-            out.append((i, (vec / norm if norm else vec).tolist(), label))
+            vec, _ = _fake_feature(h + i.to_bytes(4, "big"))
+            out.append((i, vec, label))
         return out
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

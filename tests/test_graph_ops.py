@@ -1338,6 +1338,62 @@ def test_scc_dag_is_all_trivial_and_trim_handles_it(spark):
     assert got == {f"p{i}": f"p{i}" for i in range(7)}
 
 
+def test_scc_propagation_loops_raise_when_rounds_run_out(spark):
+    """A 12-node directed cycle needs 11 color rounds; labels taken before
+    the color fixed point would split it into 12 singleton SCCs, so a
+    ``max_prop_rounds`` cap below that raises, and the default caps give
+    the one SCC Tarjan gives. The star-plus-chain graph colors in one round
+    but needs 11 confirm rounds, so the cap also binds on the confirm
+    loop."""
+    from chatvector_ai_spark.operators.graph import strongly_connected_components
+
+    cycle = [(f"v{i:02d}", f"v{(i + 1) % 12:02d}") for i in range(12)]
+    df = _edges_df(spark, cycle)
+    with pytest.raises(ValueError, match="color loop: max_prop_rounds=5"):
+        strongly_connected_components(df, max_prop_rounds=5)
+    got = {r["entity"]: r["scc"] for r in strongly_connected_components(df).collect()}
+    assert got == _py_tarjan(cycle)
+    assert set(got.values()) == {"v00"}
+
+    star_chain = [("v00", f"v{i:02d}") for i in range(1, 12)] + [
+        (f"v{i:02d}", f"v{(i + 1) % 12:02d}") for i in range(1, 12)
+    ]
+    with pytest.raises(ValueError, match="confirm loop: max_prop_rounds=5"):
+        strongly_connected_components(_edges_df(spark, star_chain), max_prop_rounds=5)
+
+
+_LOOP_FREE = [
+    ("a", "b"), ("a", "c"), ("b", "c"), ("c", "d"),
+    ("d", "e"), ("b", "d"), ("e", "f"), ("a", "e"),
+]
+
+
+@pytest.mark.parametrize(
+    "op, kwargs",
+    [
+        ("degree_assortativity", {}),
+        ("wl_colors", {}),
+        ("link_prediction_cn", {}),
+        ("link_prediction_ra", {}),
+        ("closeness", {"seeds": ["a", "c"]}),
+        ("neighborhood_function", {}),
+    ],
+)
+def test_self_loop_leaves_output_unchanged(spark, op, kwargs):
+    """Undirected operators work on the simple graph: one added self-loop
+    row (on the hub ``c``) must leave every output row as it was, as the
+    DuckDB twins drop it too."""
+    from chatvector_ai_spark.operators import graph
+
+    run = getattr(graph, op)
+    want = sorted(map(tuple, run(_edges_df(spark, _LOOP_FREE), **kwargs).collect()))
+    got = sorted(
+        map(tuple, run(_edges_df(spark, _LOOP_FREE + [("c", "c")]), **kwargs).collect())
+    )
+    assert want
+    assert got == want
+
+
 def test_skipgram_pairs_window_and_symmetry(spark):
     from chatvector_ai_spark.operators.graph import skipgram_pairs
 

@@ -109,6 +109,20 @@ def test_ktruss_keeps_true_truss_in_cascade(spark):
     assert all(r["support"] == 3 for r in out)
 
 
+def test_ktruss_and_coreness_raise_when_rounds_run_out(spark):
+    # the n=14 strip of test_ktruss_deep_cascade_converges: k-truss peels
+    # it one round per strip position, and the h-index iteration moves in
+    # its first round, so both caps below bind before the fixed point
+    n = 14
+    rows = [(f"v{i:02d}", "r", f"v{i + 1:02d}") for i in range(n - 1)]
+    rows += [(f"v{i:02d}", "r", f"v{i + 2:02d}") for i in range(n - 2)]
+    strip = _edges(spark, rows)
+    with pytest.raises(ValueError, match="ktruss: max_rounds=2"):
+        ktruss(strip, k=4, max_rounds=2)
+    with pytest.raises(ValueError, match="coreness: max_rounds=1"):
+        coreness(strip, max_rounds=1)
+
+
 # ---------------------------------------------------------------------------
 # property paths / FILTER / CONSTRUCT
 # ---------------------------------------------------------------------------
