@@ -1,7 +1,8 @@
 """Benchmark: KG pipeline throughput + headline operator queries.
 
 Driver contract: run at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1)
-on ``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line::
+on ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may run
+on) and print ONE JSON line::
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ..., ...}
@@ -89,7 +90,7 @@ def _refresh_dist() -> None:
 def main() -> int:
     _refresh_dist()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     n_docs = int(os.environ.get("CVS_BENCH_DOCS", "20000"))
     repeats = int(os.environ.get("CVS_BENCH_REPEATS", "3"))
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"

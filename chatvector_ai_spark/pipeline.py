@@ -206,7 +206,7 @@ def _stage(
         run.stage_secs[table] = round(time.time() - t0, 2)
         run.stages_run.append(table)
     if delta_of is not None:
-        return spark.read.parquet(wh._entry_data_dir(wh.latest_entry(table, key)))  # noqa: SLF001
+        return wh.read_delta(spark, table, key)
     return wh.read(spark, table, key)
 
 

@@ -70,6 +70,14 @@ def get_spark(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_MAX_RECORDS_PER_BATCH),
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # Generated-class cache, keyed by generated source. Spark's default
+        # of 100 is below the engine's working set, measured at local[4]
+        # with perfbench's workloads: a 1,000-doc build plus a 100-doc fold
+        # uses ~145 classes, the graph operators plus dedup ~335. At 100
+        # every pass evicted and recompiled its own plans (one build +
+        # fold + checks: 235 Janino compiles at 100, 24 at 1000), and the
+        # JIT then compiled each reloaded class again. 1000 holds both.
+        "spark.sql.codegen.cache.maxEntries": "1000",
         "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
         "spark.sql.session.timeZone": "UTC",
         "spark.ui.enabled": "false",

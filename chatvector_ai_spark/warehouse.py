@@ -14,7 +14,17 @@ stale-sweep, /root/reference/backend/main.py:133-155):
 - the commit is a single ``os.replace`` of ``root/_manifest/T.json`` — POSIX
   rename atomicity is the snapshot commit. The manifest entry carries the
   lineage row: (run_id, stage, input_key, snapshot, row_count,
-  per-partition row counts, metrics, committed_at);
+  per-partition row counts, metrics, committed_at) and the snapshot's read
+  schema (data columns, then partition columns with the types directory
+  inference gives them), taken from the written DataFrame's analyzed plan;
+- a read passes that schema to ``spark.read.schema(...)`` for every
+  directory it unions, so it launches no Spark job (an unschematized
+  parquet read runs one to infer it). Entries without a schema — written
+  before it was recorded, or partitioned by a column that is not an
+  integer — fall back to inference;
+- the load-append-store of a manifest runs under an exclusive ``flock``
+  on ``root/_manifest/T.lock``, so concurrent writers to one table on one
+  host cannot drop each other's entries;
 - a stage is *done* iff a manifest entry for its (stage, input_key) exists
   AND its snapshot dir exists. A crash between data write and manifest
   rename leaves an orphan dir that is never read and is swept lazily —
@@ -25,14 +35,17 @@ stale-sweep, /root/reference/backend/main.py:133-155):
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import shutil
 import time
 import uuid
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StructType
 
 # Above this many files the footer scan runs as a parallel Spark job on the
 # executors instead of sequentially on the driver (a driver walk is fine at
@@ -67,6 +80,38 @@ def _hive_value(v: Any) -> str:
         return "true" if v else "false"
     s = str(v)
     return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPE else c for c in s)
+
+
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _read_schema(
+    df: DataFrame, partition_by: list[str], part_counts: list[dict[str, Any]]
+) -> dict[str, Any] | None:
+    """The schema a parquet read of this snapshot infers, as JSON: the data
+    columns in written order, then the partition columns with the type
+    directory inference gives their values — int if every value fits 32
+    bits, else bigint, so a written bigint ``bucket`` reads back as int.
+    Analysis and a walk of *part_counts* only, no job. None (read-time
+    inference) when a partition column is not integral or has only null
+    values: Spark then infers string, date, decimal or double from the
+    directory names."""
+    fields = {f.name: f for f in df.schema.fields}
+    parts = []
+    for col in partition_by:
+        values = {
+            seg.split("=", 1)[1]
+            for p in part_counts
+            for seg in p["partition"].split("/")[:-1]
+            if seg.startswith(f"{col}=")
+        } - {_HIVE_NULL}
+        if not isinstance(fields[col].dataType, _INTEGRAL) or (not values and part_counts):
+            return None
+        wide = any(not -(2**31) <= int(v) < 2**31 for v in values)
+        parts.append({**fields[col].jsonValue(), "type": "long" if wide else "integer"})
+    data = [f.jsonValue() for f in df.schema.fields if f.name not in partition_by]
+    return {"type": "struct", "fields": data + parts}
 
 
 def _footer_rows(path: str) -> int:
@@ -126,6 +171,15 @@ class Warehouse:
             json.dump(entries, f, indent=1)
         os.replace(tmp, path)  # the atomic commit point
 
+    def _append(self, table: str, entry: dict[str, Any]) -> None:
+        """Add *entry* to *table*'s manifest. The load-append-store holds an
+        exclusive lock on the table's lock file, so two writers (threads or
+        processes on this host) cannot both append to the same old list."""
+        lock = os.path.join(self.root, "_manifest", f"{table}.lock")
+        with open(lock, "a") as f:
+            fcntl.flock(f, fcntl.LOCK_EX)  # released when f closes
+            self._store(table, self._load(table) + [entry])
+
     # -- commit / read -----------------------------------------------------
 
     def commit(
@@ -179,17 +233,18 @@ class Warehouse:
             "metrics": metrics or {},
             "committed_at": time.time(),
         }
+        schema = _read_schema(df, partition_by or [], part_counts)
+        if schema is not None:
+            entry["schema"] = schema
         if delta_of is not None:
             entry["delta_of"] = delta_of
-        entries = self._load(table)
-        entries.append(entry)
-        self._store(table, entries)
+        self._append(table, entry)
         return snap
 
-    def _chain_dirs(self, table: str, entry: dict[str, Any]) -> list[str]:
-        """Data directories for *entry*, base-first: a plain snapshot is
-        one dir; a delta entry walks its ``delta_of`` links back to the
-        base. Raises if a link is dangling (manifest corruption)."""
+    def _chain(self, table: str, entry: dict[str, Any]) -> list[dict[str, Any]]:
+        """Data entries a read of *entry* unions, base-first: a plain
+        snapshot is itself; a delta entry walks its ``delta_of`` links back
+        to the base. Raises if a link is dangling (manifest corruption)."""
         by_snap = {e["snapshot"]: e for e in self._load(table)}
         chain: list[dict[str, Any]] = []
         cur: dict[str, Any] | None = entry
@@ -205,9 +260,7 @@ class Warehouse:
                         f"delta chain of {entry['snapshot']!r} references "
                         f"missing snapshot {parent!r}"
                     )
-        return [
-            os.path.join(self.root, table, e["snapshot"]) for e in reversed(chain)
-        ]
+        return chain[::-1]
 
     def commit_view(
         self,
@@ -271,20 +324,19 @@ class Warehouse:
                 "select": select,
             },
         }
-        entries = self._load(table)
-        entries.append(entry)
-        self._store(table, entries)
+        self._append(table, entry)
         return entry["snapshot"]
 
     def _resolve_entry(
         self, entry: dict[str, Any]
-    ) -> tuple[list[str], list[dict[str, Any]]]:
-        """(data dirs base-first, view specs innermost-first) for an entry:
-        view entries dereference through their parents — including views of
-        views (e.g. a re-keyed dimension view atop a filtered view) — down
-        to a data entry, whose delta chain supplies the directories. The
-        returned specs apply in order (closest-to-data first) so nested
-        filters/projections compose exactly as committed."""
+    ) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
+        """(data entries base-first, view specs innermost-first) for an
+        entry: view entries dereference through their parents — including
+        views of views (e.g. a re-keyed dimension view atop a filtered view)
+        — down to a data entry, whose delta chain supplies the directories
+        and their recorded schemas. The returned specs apply in order
+        (closest-to-data first) so nested filters/projections compose
+        exactly as committed."""
         specs: list[dict[str, Any]] = []
         cur = entry
         while cur.get("view") is not None:
@@ -301,16 +353,16 @@ class Warehouse:
             if nxt is None:
                 # parent manifest row gone (superseded + swept): dangle so
                 # liveness checks reject this entry
-                return (
-                    [os.path.join(self.root, v["parent_table"], v["parent_snapshot"])],
-                    [],
-                )
+                return [{"table": v["parent_table"], "snapshot": v["parent_snapshot"]}], []
             cur = nxt
-        return self._chain_dirs(cur["table"], cur), list(reversed(specs))
+        return self._chain(cur["table"], cur), list(reversed(specs))
+
+    def _data_dir(self, entry: dict[str, Any]) -> str:
+        return os.path.join(self.root, entry["table"], entry["snapshot"])
 
     def _entry_data_dirs(self, entry: dict[str, Any]) -> list[str]:
         """All data directories an entry's read must union, base-first."""
-        return self._resolve_entry(entry)[0]
+        return [self._data_dir(e) for e in self._resolve_entry(entry)[0]]
 
     def _entry_data_dir(self, entry: dict[str, Any]) -> str:
         """Primary (newest) data directory — the single-snapshot accessor
@@ -318,7 +370,7 @@ class Warehouse:
         view = entry.get("view")
         if view is not None:
             return os.path.join(self.root, view["parent_table"], view["parent_snapshot"])
-        return os.path.join(self.root, entry["table"], entry["snapshot"])
+        return self._data_dir(entry)
 
     def latest_entry(self, table: str, input_key: str | None = None) -> dict[str, Any] | None:
         """Newest committed entry whose full data-dir chain is live."""
@@ -411,13 +463,8 @@ class Warehouse:
             entry = self.latest_entry(table, input_key)
         if entry is None:
             raise FileNotFoundError(f"no committed snapshot for {table!r} ({input_key=}, {snapshot=})")
-        # a delta chain unions one read per snapshot dir (each dir is its
-        # own hive root, so per-dir partition discovery stays correct —
-        # a single multi-root read would mistake snap dirs for partitions)
-        dirs, specs = self._resolve_entry(entry)
-        df = spark.read.parquet(dirs[0])
-        for d in dirs[1:]:
-            df = df.unionByName(spark.read.parquet(d))
+        chain, specs = self._resolve_entry(entry)
+        df = self._scan(spark, chain)
         if specs:
             from pyspark.sql import functions as F
 
@@ -427,6 +474,28 @@ class Warehouse:
                 if view["select"]:
                     df = df.selectExpr(*view["select"])
         return df
+
+    def read_delta(self, spark: SparkSession, table: str, input_key: str) -> DataFrame:
+        """Rows of the newest live entry of *table* under *input_key* alone:
+        an append delta without the base chain it extends."""
+        entry = self.latest_entry(table, input_key)
+        if entry is None or entry.get("view") is not None:
+            raise FileNotFoundError(f"no committed data snapshot for {table!r} ({input_key=})")
+        return self._scan(spark, [entry])
+
+    def _scan(self, spark: SparkSession, chain: list[dict[str, Any]]) -> DataFrame:
+        """Union of the data entries' directories, base-first. Each is read
+        with the schema recorded at its commit (no inference job), or
+        inferred when it has none. One read per dir: each is its own hive
+        root, so per-dir partition discovery stays correct — a single
+        multi-root read would mistake snap dirs for partitions."""
+        def scan(e: dict[str, Any]) -> DataFrame:
+            reader = spark.read
+            if "schema" in e:
+                reader = reader.schema(StructType.fromJson(e["schema"]))
+            return reader.parquet(self._data_dir(e))
+
+        return reduce(DataFrame.unionByName, map(scan, chain))
 
     # -- lineage / maintenance --------------------------------------------
 

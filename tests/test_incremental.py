@@ -72,6 +72,46 @@ def test_incremental_stages_write_delta_sized_snapshots(spark, built):
     assert delta_docs and not (delta_docs & base_ids)
 
 
+def test_empty_batch_fold_commits_empty_deltas(spark, corpus, built):
+    """A fold of zero new documents commits empty chunks/triples_raw
+    deltas (the triples_raw delta is an ``ok``-partitioned write with no
+    file to infer a schema from) and leaves the graph tables unchanged."""
+    wh, base, _inc, _fw, _f = built
+    empty = spark.read.parquet(str(corpus / "new")).limit(0)
+    key = f"{base.input_key}+empty"
+    run = incremental_update(spark, wh, base.input_key, new_docs=empty, new_input_key=key)
+    assert run.stages_skipped == []
+    for table in ("chunks", "triples_raw"):
+        delta = wh.latest_entry(table, key)
+        assert delta["delta_of"] == wh.latest_entry(table, base.input_key)["snapshot"]
+        assert delta["row_count"] == 0
+    for table in ("chunks", "triples", "quarantine", "canonical_map", "nodes", "edges"):
+        assert _rows(spark, wh, table, key) == _rows(spark, wh, table, base.input_key), table
+
+
+def test_tables_read_the_same_without_recorded_schema(spark, built, tmp_path):
+    """Every table of the build and of the fold reads back with the same
+    schema and rows from its recorded schema as through inference (the
+    reads of a copy of the warehouse whose manifests carry no schema)."""
+    import shutil
+
+    wh, base, inc, _fw, _f = built
+    copy = Warehouse(shutil.copytree(wh.root, str(tmp_path / "copy")))
+    for table in os.listdir(os.path.join(copy.root, "_manifest")):
+        if table.endswith(".json"):
+            table = table[: -len(".json")]
+            entries = copy._load(table)  # noqa: SLF001
+            copy._store(table, [{k: v for k, v in e.items() if k != "schema"} for e in entries])  # noqa: SLF001
+    tables = ("alias_dict", "chunks", "triples_raw", "triples", "quarantine",
+              "linked_mentions", "canonical_map", "nodes", "edges")
+    for key in (base.input_key, inc.input_key):
+        for table in tables:
+            recorded, inferred = wh.read(spark, table, key), copy.read(spark, table, key)
+            assert "schema" in wh.latest_entry(table, key) or "view" in wh.latest_entry(table, key)
+            assert recorded.schema == inferred.schema, (key, table)
+            assert sorted(recorded.collect()) == sorted(inferred.collect()), (key, table)
+
+
 def test_incremental_resume_is_idempotent(spark, built):
     wh, base, inc, _fw, _f = built
     before, _ = _rows(spark, wh, "edges", inc.input_key)

@@ -44,6 +44,21 @@ def test_all_stages_commit_once(spark, full_run):
         assert e["row_count"] == sum(p["rows"] for p in e["partitions"])
 
 
+def test_second_build_reuses_generated_code(spark, tmp_path):
+    """The session's codegen cache holds a build's generated classes, so
+    a second identical build into a new warehouse compiles almost none
+    (with Spark's default 100-entry cache it compiled 87)."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+
+    def compiles():
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
+    run_pipeline(spark, Warehouse(str(tmp_path / "a")), N_DOCS, n_entities=N_ENTITIES)
+    before = compiles()
+    run_pipeline(spark, Warehouse(str(tmp_path / "b")), N_DOCS, n_entities=N_ENTITIES)
+    assert compiles() - before <= 5
+
+
 def test_rerun_is_pure_resume(spark, full_run):
     wh, run = full_run
     run2 = run_pipeline(spark, wh, N_DOCS, n_entities=N_ENTITIES)
