@@ -55,38 +55,53 @@ def text_tokens(c: Column | str) -> Column:
 
 
 def minhash_signature(c: Column | str, n_hashes: int = 8) -> Column:
-    """MinHash signature over distinct tokens: element i = min over tokens
-    of (A_i * x + B_i) mod P where x = first 28 bits of md5(token) — ONE
-    md5 per token, not one per (token, i). Array<bigint> of length
-    n_hashes."""
-    toks = F.array_distinct(text_tokens(c))
+    """MinHash signature of the distinct tokens of text column ``c``
+    (``set_minhash`` over ``array_distinct(text_tokens(c))``)."""
+    return set_minhash(F.array_distinct(text_tokens(c)), n_hashes)
+
+
+def set_minhash(toks: Column | str, n_hashes: int = 8) -> Column:
+    """MinHash signature of a distinct-token array: element i = min over
+    tokens of (A_i * x + B_i) mod P where x = first 28 bits of md5(token).
+    One fold over the base values computes all n_hashes minima, so the
+    expression holds ONE md5 per token (n_hashes separate ``array_min``
+    transforms would each re-evaluate the base-value transform: higher-order
+    functions are interpreted, so Spark does not share it). Array<bigint>
+    of length n_hashes; an element is NULL when there is no token, the
+    whole array only when ``toks`` is NULL."""
     tx = F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 7), 16, 10).cast("bigint")
+        _col(toks), lambda t: F.conv(F.substring(F.md5(t), 1, 7), 16, 10).cast("bigint")
     )
+    empty = F.array(*[F.lit(None).cast("bigint")] * n_hashes)
 
-    def affine(i: int) -> Column:
-        a, b = minhash_ab(i)
-        return F.array_min(
-            F.transform(tx, lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_P))
-        )
+    def merge(acc: Column, x: Column) -> Column:
+        def h(i: int) -> Column:
+            a, b = minhash_ab(i)
+            return (F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_P)
 
-    return F.array(*[affine(i) for i in range(n_hashes)])
+        return F.array(*[F.least(acc[i], h(i)) for i in range(n_hashes)])
+
+    return F.aggregate(tx, empty, merge)
+
+
+def band_keys(sig: Column | str, n_bands: int, rows: int) -> list[Column]:
+    """LSH band keys of a signature: key i = md5 of hashes
+    ``rows*i .. rows*i + rows - 1`` joined with ':' — the suite SQL's
+    ``md5(concat(h0, ':', h1, ...))``. A key is NULL when any of its hashes
+    is (a doc without tokens), so such docs never collide on a band."""
+    sig = _col(sig)
+
+    def key(i: int) -> Column:
+        parts = [p for r in range(rows) for p in (F.lit(":"), sig[rows * i + r].cast("string"))]
+        return F.md5(F.concat(*parts[1:]))
+
+    return [key(i) for i in range(n_bands)]
 
 
 def lsh_bands(sig: Column | str, n_bands: int = 2) -> Column:
-    """Hash the signature into n_bands band keys (join on any equal band)."""
-    sig = _col(sig)
-    return F.array(
-        *[
-            F.md5(
-                F.array_join(
-                    F.transform(F.slice(sig, 1 + i * 4, 4), lambda x: x.cast("string")),
-                    ":",
-                )
-            )
-            for i in range(n_bands)
-        ]
-    )
+    """Hash the signature into n_bands band keys of 4 hashes each (join on
+    any equal band)."""
+    return F.array(*band_keys(sig, n_bands, 4))
 
 
 def simhash16(c: Column | str) -> Column:

@@ -7,10 +7,14 @@ ships: given a documents table, return the kept rows plus an audit report.
 Pipeline (all candidate-generated, never all-pairs):
 
 1. **Exact** — first-wins per md5(text): one hash-groupBy.
-2. **Near-dup candidates** — the suite's verified-Jaccard pair query
-   (``dd_jaccard_pairs``: 12 affine MinHashes over one-md5-per-token base
-   values, 6 bands of 2, banded within the ``source`` block, exact token
-   Jaccard ≥ 0.8 on candidates only) run over the exact-kept set.
+2. **Near-dup candidates** — ``near_dup_pairs`` over the exact-kept set:
+   the rows of the suite's ``dd_jaccard_pairs`` (12 affine MinHashes over
+   one-md5-per-token base values, 6 bands of 2, banded within the
+   ``source`` block, exact token Jaccard ≥ 0.8 on candidates only), built
+   from the ``functions.text`` columns. Each call tokenizes and MinHashes
+   every document once into one checkpointed (doc_id, source, tk,
+   bd0..bd5) table; the six band joins and the Jaccard check read only
+   that table.
 3. **Clusters** — connected components over the verified pair graph
    (``graph.connected_components``: a driver union-find up to
    ``CC_SMALL_CORE_EDGES`` pairs, large-star/small-star above);
@@ -23,21 +27,27 @@ surface the brief adds on top. Semantics follow Lee et al. 2022
 ("Deduplicating Training Data Makes Language Models Better") — exact-then-
 near, keep-one-per-cluster.
 
-100 TB posture: one hash-groupBy, band equi-joins within source blocks,
-CC in O(log² n) shuffle rounds, two anti-joins. The only collects are the
-CC convergence fingerprints, plus the pair set itself when it is at most
-``CC_SMALL_CORE_EDGES`` rows (solved by the driver union-find); no per-row
-Python in any Spark task.
+100 TB posture: one hash-groupBy, one signature pass per call (a
+narrow map over the input, materialized once), band equi-joins within
+source blocks over that table, CC in O(log² n) shuffle rounds, two
+anti-joins. The only collects are the CC convergence fingerprints, plus
+the pair set itself when it is at most ``CC_SMALL_CORE_EDGES`` rows
+(solved by the driver union-find); no per-row Python in any Spark task.
+Signatures last one call: a fold re-signs the kept corpus it is given.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chatvector_ai_spark.functions.text import band_keys, set_minhash, text_tokens
 from chatvector_ai_spark.operators.graph import connected_components
 
 _REQUIRED_COLS = ("doc_id", "source", "text")
+_N_HASHES = 12
 
 
 def _text_key() -> Column:
@@ -47,17 +57,33 @@ def _text_key() -> Column:
     return F.coalesce(F.md5(F.col("text")), F.lit("__null_text__"))
 
 
+def _signature_table(docs: DataFrame) -> DataFrame:
+    """(doc_id, source, tk, bd0..bd5): each doc's distinct tokens and its
+    six LSH band keys (12 MinHashes, bands of 2). Three projections, so
+    that the tokens and the signature are each computed once per row:
+    Spark does not merge a projection into the next when that would
+    repeat a non-trivial expression."""
+    toks = docs.select("doc_id", "source", F.array_distinct(text_tokens("text")).alias("tk"))
+    sigs = toks.select("doc_id", "source", "tk", set_minhash("tk", _N_HASHES).alias("sig"))
+    bands = band_keys("sig", _N_HASHES // 2, 2)
+    return sigs.select(
+        "doc_id", "source", "tk", *[k.alias(f"bd{i}") for i, k in enumerate(bands)]
+    )
+
+
 def near_dup_pairs(
     spark: SparkSession, docs: DataFrame, threshold: float = 0.8
 ) -> DataFrame:
-    """Verified near-dup pairs (a_id, b_id, jaccard) over ``docs`` via the
-    suite's LSH pair query — banded within ``source``, exact token-set
-    Jaccard on candidates. ``threshold`` tightens the verify filter; it
-    cannot go below the 0.8 the band geometry is tuned for (12 hashes /
-    6 bands of 2 → band-collision probability ≈0.998 at J=0.8; recall at
-    lower J is not engineered, so asking for it raises)."""
-    from chatvector_ai_spark.suite import SPARK_SQL
+    """Verified near-dup pairs (a_id, b_id, jaccard) over ``docs``: the
+    rows of the suite's ``dd_jaccard_pairs`` — banded within ``source``,
+    exact token-set Jaccard on candidates. ``threshold`` tightens the
+    verify filter; it cannot go below the 0.8 the band geometry is tuned
+    for (12 hashes / 6 bands of 2 → band-collision probability ≈0.998 at
+    J=0.8; recall at lower J is not engineered, so asking for it raises).
 
+    The signature table is materialized once (eager ``localCheckpoint``);
+    the six band self-joins and the Jaccard check all read it, so every
+    document is tokenized and MinHashed once per call."""
     if threshold < 0.8:
         raise ValueError(
             f"threshold {threshold} < 0.8: the 6x2 band geometry only "
@@ -67,13 +93,30 @@ def near_dup_pairs(
     missing = [c for c in _REQUIRED_COLS if c not in docs.columns]
     if missing:
         raise ValueError(f"dedup input is missing columns {missing}")
-    view = "cvs_dedup_input_docs"
-    docs.createOrReplaceTempView(view)
-    sql = SPARK_SQL["dd_jaccard_pairs"].replace("FROM documents", f"FROM {view}")
-    pairs = spark.sql(sql)
-    if threshold > 0.8:
-        pairs = pairs.where(F.col("jaccard") >= F.lit(threshold))
-    return pairs
+    sigs = _signature_table(docs).localCheckpoint(eager=True)
+
+    def band_pairs(i: int) -> DataFrame:
+        a = sigs.select(F.col("doc_id").alias("a_id"), "source", F.col(f"bd{i}").alias("bd"))
+        b = sigs.select(F.col("doc_id").alias("b_id"), "source", F.col(f"bd{i}").alias("bd"))
+        return a.join(b, ["source", "bd"]).where(F.col("a_id") < F.col("b_id")).select(
+            "a_id", "b_id"
+        )
+
+    cand = reduce(DataFrame.union, [band_pairs(i) for i in range(_N_HASHES // 2)]).distinct()
+    ta = sigs.select(F.col("doc_id").alias("a_id"), F.col("tk").alias("ta"))
+    tb = sigs.select(F.col("doc_id").alias("b_id"), F.col("tk").alias("tb"))
+    sizes = cand.join(ta, "a_id").join(tb, "b_id").select(
+        "a_id",
+        "b_id",
+        F.size(F.array_intersect("ta", "tb")).alias("inter"),
+        (F.size("ta") + F.size("tb")).alias("total"),
+    )
+    jaccard = F.col("inter").cast("double") / (F.col("total") - F.col("inter")).cast("double")
+    return (
+        sizes.select("a_id", "b_id", jaccard.alias("j"))
+        .where(F.col("j") >= F.lit(threshold))
+        .select("a_id", "b_id", F.round("j", 6).alias("jaccard"))
+    )
 
 
 def dedup_corpus(

@@ -132,13 +132,13 @@ def cooccurring_entities(
     )
 
 
-def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Exact (node, label) connected-component labels for a small edge set:
-    one collect of its first two columns, then a path-compressing
-    union-find with the component minimum as the label — O(E α(E)), zero
-    shuffle rounds. Both columns of the output take the type of the first
-    input column. Only ever called on an edge set the caller has already
-    counted at broadcast scale (≤ ``CC_SMALL_CORE_EDGES``)."""
+def _driver_union_find(edges: DataFrame, edge_rows: list) -> DataFrame:
+    """Exact (node, label) connected-component labels for ``edge_rows``,
+    the collected rows of ``edges``: a path-compressing union-find over
+    their first two columns with the component minimum as the label —
+    O(E α(E)), zero shuffle rounds. Both columns of the output take the
+    type of the first column of ``edges``. Only ever called on rows the
+    caller collected at broadcast scale (≤ ``CC_SMALL_CORE_EDGES``)."""
     parent: dict = {}
 
     def find(x):
@@ -149,7 +149,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for row in edges.collect():
+    for row in edge_rows:
         ra, rb = find(row[0]), find(row[1])
         if ra != rb:
             parent[ra] = rb
@@ -453,9 +453,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     Returns (entity, component) for every endpoint of a non-self edge,
     component = the minimum entity id in the component.
 
-    The distinct oriented pairs are checkpointed first. If there are at
-    most ``CC_SMALL_CORE_EDGES`` of them (broadcast scale), they are
-    collected and resolved by ``_driver_union_find`` — at that size each
+    One bounded action decides the path: a ``limit(CC_SMALL_CORE_EDGES +
+    1)`` collect of the distinct oriented pairs, as in ``pagerank``. If
+    there are at most ``CC_SMALL_CORE_EDGES`` of them (broadcast scale),
+    ``_driver_union_find`` resolves the collected rows — at that size each
     shuffle round would be pure scheduler latency. ``CC_SMALL_CORE_EDGES
     = 0`` disables this path. Canonicalization, dedup and the component
     queries all run on this one operator.
@@ -478,12 +479,14 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    if CC_SMALL_CORE_EDGES > 0 and pairs.count() <= CC_SMALL_CORE_EDGES:
-        return _driver_union_find(pairs).select(
-            F.col("node").alias("entity"), F.col("label").alias("component")
-        )
+    if CC_SMALL_CORE_EDGES > 0:
+        small = pairs.limit(CC_SMALL_CORE_EDGES + 1).collect()
+        if len(small) <= CC_SMALL_CORE_EDGES:
+            return _driver_union_find(pairs, small).select(
+                F.col("node").alias("entity"), F.col("label").alias("component")
+            )
+    pairs = pairs.localCheckpoint(eager=True)
     nodes = _graph_nodes(pairs.toDF("src", "dst")).localCheckpoint(eager=True)
 
     def large_star(p: DataFrame) -> DataFrame:

@@ -15,6 +15,16 @@ from pyspark.sql import SparkSession
 from chatvector_ai_spark.config import ARROW_MAX_RECORDS_PER_BATCH, SHUFFLE_PARTITIONS
 
 
+def local_memory(phys_bytes: int) -> tuple[str, str]:
+    """(driver heap, JVM direct-memory cap) for a local master on a host
+    with ``phys_bytes`` of physical memory: 40% and 25% of it, capped at
+    12g and 8g. The local driver is the whole engine, so both must leave
+    the host room for the Python workers, the page cache and the other
+    processes on it; the caps are what a large host has always been given."""
+    mb = phys_bytes // (1024 * 1024)
+    return f"{min(mb * 2 // 5, 12 * 1024)}m", f"{min(mb // 4, 8 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "chatvector-ai-spark",
     master: str | None = None,
@@ -24,17 +34,19 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
+    heap, direct = local_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # Local-mode JVM heap: Spark's 1g default starves a 32-slot local
         # session — the parquet MemoryManager pool (0.95 × heap) throttles
         # row-group sizes under concurrent bucketed writers (the "Total
         # allocation exceeds 95%" warnings in the round-4 bench log) and
-        # hash aggregations spill early. Only applied for local masters
-        # and only when the caller didn't set it; a real cluster sizes
-        # driver/executor memory in the spark-submit conf instead.
+        # hash aggregations spill early. Sized from the host
+        # (``local_memory``); only applied for local masters and only when
+        # the caller didn't set it; a real cluster sizes driver/executor
+        # memory in the spark-submit conf instead.
         **(
-            {"spark.driver.memory": os.getenv("CVS_DRIVER_MEMORY", "12g")}
+            {"spark.driver.memory": os.getenv("CVS_DRIVER_MEMORY", heap)}
             if (master or "").startswith("local")
             and "spark.driver.memory" not in (extra_conf or {})
             else {}
@@ -53,10 +65,11 @@ def get_spark(
         ),
         # Arrow UDF transfers allocate netty DIRECT memory per concurrent
         # stream; the JVM default cap (1 GiB) OOMs with 32 task slots ×
-        # 16 MiB arrow buffers. Scale the cap with local core count; on a
-        # real cluster this is per-executor and set by the submit conf.
-        "spark.driver.extraJavaOptions": "-XX:MaxDirectMemorySize=8g",
-        "spark.executor.extraJavaOptions": "-XX:MaxDirectMemorySize=8g",
+        # 16 MiB arrow buffers. The cap is sized from the host
+        # (``local_memory``); on a real cluster this is per-executor and
+        # set by the submit conf.
+        "spark.driver.extraJavaOptions": f"-XX:MaxDirectMemorySize={direct}",
+        "spark.executor.extraJavaOptions": f"-XX:MaxDirectMemorySize={direct}",
         # zstd over the default snappy: ~16% fewer bytes per snapshot, and
         # on this box the write path is memory-bandwidth-bound, not
         # CPU-bound — trading compression CPU (which scales with cores)

@@ -593,9 +593,11 @@ def _jp_tail(concat2) -> str:
     # posexplode(bi, bdk) join + DISTINCT is 2-3x SLOWER here — Catalyst
     # column-prunes each UNION branch down to its single band key (narrow
     # build sides, no generator, no extra dedup shuffle), and exchange
-    # reuse does not fire across the fused join's sides. At warehouse
-    # scale the same banding runs over a MATERIALIZED signature table
-    # (one pass), so the branch re-scan this shape implies is local-only.
+    # reuse does not fire across the fused join's sides. Spark inlines
+    # each CTE at every use, so this query tokenizes and MinHashes every
+    # document 12 times (both sides of six band joins); the dedup operator
+    # (operators/dedup.near_dup_pairs) returns the same rows from ONE
+    # materialized signature table instead.
     bands = ", ".join(
         f"md5({concat2(f'h{2 * i}', f'h{2 * i + 1}')}) AS bd{i}" for i in range(_JP_N_HASH // 2)
     )
@@ -643,9 +645,9 @@ _q(
 # Duplicate clusters: connected components over the verified ≥0.8 Jaccard
 # pair graph, canonical representative = min doc_id per component — the
 # full dedup shape (pairs → clusters → keep one). The Spark side runs the
-# distributed large-star/small-star operator over the pair DataFrame (a
+# dedup operator's pairs through graph.connected_components (a
 # python-callable query, PY_QUERIES below); the oracle takes min over the
-# recursive transitive closure of the same pair SQL.
+# recursive transitive closure of the dd_jaccard_pairs twin.
 DUCK_SQL["dd_dup_clusters"] = f"""
     WITH RECURSIVE sym AS (
         SELECT a_id AS u, b_id AS v FROM ({DUCK_SQL["dd_jaccard_pairs"]}) p
@@ -5370,15 +5372,18 @@ def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters = connected components
     (operators/graph.connected_components: driver union-find up to
     ``CC_SMALL_CORE_EDGES`` pairs, large-star/small-star above) over the
-    verified ≥0.8 Jaccard pair graph; one row per cluster with the min-id
-    representative and how many members dedup would drop."""
+    verified ≥0.8 Jaccard pair graph of the dedup operator
+    (operators/dedup.near_dup_pairs: the rows of dd_jaccard_pairs); one
+    row per cluster with the min-id representative and how many
+    members dedup would drop."""
     from pyspark.sql import functions as F
 
+    from chatvector_ai_spark.operators.dedup import near_dup_pairs
     from chatvector_ai_spark.operators.graph import connected_components
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     register_views(spark, sf_dir)
-    pairs = spark.sql(SPARK_SQL["dd_jaccard_pairs"])
+    pairs = near_dup_pairs(spark, spark.table("documents"))
     comp = connected_components(
         pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     )

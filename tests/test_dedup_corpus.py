@@ -57,6 +57,32 @@ def test_near_dup_pairs_block_within_source(spark, corpus):
     assert all(not ({a, b} & {5, 6}) for a, b in got)
 
 
+def test_near_dup_pairs_equal_suite_pair_query(spark, corpus):
+    """The operator returns exactly the rows of the suite's
+    dd_jaccard_pairs, on the sf0.001 documents and on the fixture corpus,
+    and at threshold 0.9 exactly the >= 0.9 subset of them."""
+    from chatvector_ai_spark.suite import SPARK_SQL, register_views
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    register_views(spark, "/root/testdata/sf0.001")
+    docs = spark.table("documents")
+    suite = rows(spark.sql(SPARK_SQL["dd_jaccard_pairs"]))
+    assert suite and rows(near_dup_pairs(spark, docs)) == suite
+    tight = rows(near_dup_pairs(spark, docs, threshold=0.9))
+    assert tight == [r for r in suite if r[2] >= 0.9] and 0 < len(tight) < len(suite)
+
+    corpus.createOrReplaceTempView("documents")
+    try:
+        suite = rows(spark.sql(SPARK_SQL["dd_jaccard_pairs"]))
+    finally:
+        register_views(spark, "/root/testdata/sf0.001")
+    assert rows(near_dup_pairs(spark, corpus)) == suite == [
+        (1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0)
+    ]
+
+
 def test_threshold_tightens_and_guards(spark):
     # J(7,8) = 9/11 ~ 0.818: in at 0.8, out at 0.9
     docs = _docs(spark, [

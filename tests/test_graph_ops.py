@@ -322,6 +322,26 @@ def test_connected_components_raises_when_rounds_run_out(spark, monkeypatch):
     assert got == {"c00"}
 
 
+def test_connected_components_driver_path_runs_one_bounded_action(spark):
+    """At or below ``CC_SMALL_CORE_EDGES`` the path is decided by one
+    ``limit`` collect whose rows the union-find resolves: 2 jobs (the
+    distinct's shuffle and the collect), no checkpoint or count."""
+    import uuid
+
+    from chatvector_ai_spark.operators.graph import connected_components
+
+    df = _edges_df(spark, [(f"n{i}", f"n{(i * 7 + 3) % 40}") for i in range(40)])
+    sc = spark.sparkContext
+    group = f"cc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "connected_components")
+    try:
+        comp = connected_components(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert comp.count() == 40
+
+
 def test_connected_components_two_disjoint_cliques(spark, on_both_paths):
     from chatvector_ai_spark.operators.graph import connected_components
 

@@ -132,6 +132,38 @@ def test_pair_dedup_candidates_are_bucketed(spark):
     assert "cid" in nd.text  # cell id participates in the pair join
 
 
+def test_near_dup_pairs_minhash_once_per_call(spark, monkeypatch):
+    """The dedup operator's plans — its result and every plan it
+    checkpoints on the way — compute the per-token md5 transform in one
+    Project and scan the input once. The suite's dd_jaccard_pairs, whose
+    CTEs Spark inlines at each use, does it in 12 Projects over 14 scans."""
+    import re
+
+    from chatvector_ai_spark.operators.dedup import near_dup_pairs
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    plans = []
+    checkpoint = type(docs).localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(plan_facts(self).text)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", recording)
+    plans.append(plan_facts(near_dup_pairs(spark, docs)).text)
+
+    def node_details(text):
+        # the formatted plan's detail sections: "(<id>) <Op>" then its lines
+        return re.findall(r"^\(\d+\) (\w+)(.*?)(?=^\(\d+\) |\Z)", text, re.M | re.S)
+
+    nodes = [n for text in plans for n in node_details(text)]
+    token_md5 = re.compile(r"md5\((cast\()?lambda ")
+    md5_projects = [op for op, body in nodes if op == "Project" and token_md5.search(body)]
+    scans = [op for op, body in nodes if op == "Scan" and "documents.parquet" in body]
+    assert len(md5_projects) == 1, plans
+    assert len(scans) == 1, plans
+
+
 def test_bm25_and_ivf_rerank_plans_window_free(spark):
     """w2_bm25_topk ranks by TakeOrdered over per-row scores (corpus stats
     are scalar-subquery aggregates, not windows); ann_ivf_rerank's probe is
