@@ -1,12 +1,17 @@
-"""Training-data generation over the materialized KG: deterministic
-negative sampling for knowledge-graph-embedding (TransE/DistMult-style)
-training sets.
+"""Knowledge-graph-embedding (KGE) training over the materialized KG:
+deterministic negative sampling, four scorers at a deterministic hash
+init — TransE, DistMult, ComplEx and RotatE — and a TransE subgradient
+step. A scorer is a function ``(src, rel, tail) -> Column`` plus whether a
+lower score wins; the public losses and evals are thin bindings over two
+shared helpers, ``_margin_loss`` (filtered-setting margin loss per
+relation) and ``_filtered_rank_eval`` (filtered-ranking MRR / hits@k).
 
-For each distinct positive triple (src, rel, dst) the sampler emits
-``n_neg`` corrupted-tail negatives drawn near-uniformly from the entity
-vocabulary by a *deterministic* hash (md5 of the triple + sample index),
-then removes false negatives — corrupted triples that exist as positives —
-in the standard "filtered setting" (Bordes et al., TransE).
+Negative sampling: for each distinct positive triple (src, rel, dst) the
+sampler emits ``n_neg`` corrupted-tail negatives drawn near-uniformly from
+the entity vocabulary by a *deterministic* hash (md5 of the triple +
+sample index), then removes false negatives — corrupted triples that
+exist as positives — in the standard "filtered setting" (Bordes et al.,
+TransE).
 
 Scale shape (the part that matters at 10^9 entities):
 
@@ -28,7 +33,7 @@ Scale shape (the part that matters at 10^9 entities):
   (src, rel, neg_dst) against the positive set.
 
 Everything is md5/integer arithmetic expressible identically in DuckDB,
-so the suite query has an exact value-level oracle twin.
+so each suite query on this module has an exact value-level oracle twin.
 
 Reference analog: the reference has no KGE training path (it is a RAG
 service, backend/services/*); this is part of the "operations a
@@ -37,8 +42,12 @@ large-scale training-data pipeline would need" surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+_Scorer = Callable[[F.Column, F.Column, F.Column], F.Column]
 
 
 def _h60(col: F.Column) -> F.Column:
@@ -62,8 +71,6 @@ def negative_samples(
         .distinct()
         .withColumn("bk", _h60(F.concat(F.lit("vb:"), F.col("entity"))) % n_buckets)
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("bk").orderBy("entity")
     indexed = vocab.withColumn("i", F.row_number().over(w) - 1)
     sizes = indexed.groupBy("bk").agg(F.count("*").alias("bk_n"))
@@ -120,19 +127,18 @@ def negative_samples(
 _TWO60 = float(1 << 60)
 
 
+def _draw(prefix: str, name: F.Column, i: F.Column) -> F.Column:
+    """The per-element hash draw of every init: _h60(prefix || name || ':' || i)."""
+    return _h60(F.concat(F.lit(prefix), name, F.lit(":"), i.cast("string")))
+
+
 def _emb_expr(prefix: str, name: F.Column, dim: int) -> F.Column:
     """array<double> embedding — element i is a deterministic uniform in
     (-6/sqrt(dim), 6/sqrt(dim)) from md5(prefix || name || ':' || i)."""
     scale = 6.0 / (dim ** 0.5)
     return F.transform(
         F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: (
-            _h60(F.concat(F.lit(prefix), name, F.lit(":"), i.cast("string")))
-            / F.lit(_TWO60)
-            * 2.0
-            - 1.0
-        )
-        * F.lit(scale),
+        lambda i: (_draw(prefix, name, i) / F.lit(_TWO60) * 2.0 - 1.0) * F.lit(scale),
     )
 
 
@@ -154,40 +160,255 @@ def init_relation_embeddings(edges: DataFrame, dim: int = 16) -> DataFrame:
     )
 
 
+def _translate(es: F.Column, rr: F.Column, eo: F.Column) -> F.Column:
+    """TransE difference array e_s + r - e_o, element-wise."""
+    return F.zip_with(F.zip_with(es, rr, lambda x, y: x + y), eo, lambda x, y: x - y)
+
+
+def _l1_norm(v: F.Column) -> F.Column:
+    """Σ_i |v_i| as an index-order left fold."""
+    return F.aggregate(v, F.lit(0.0), lambda acc, x: acc + F.abs(x))
+
+
 def _l1_score(es: F.Column, rr: F.Column, eo: F.Column) -> F.Column:
     """L1 TransE score ||e_s + r - e_o||_1 as a single JVM expression."""
-    diff = F.zip_with(F.zip_with(es, rr, lambda x, y: x + y), eo, lambda x, y: x - y)
-    return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + F.abs(x))
+    return _l1_norm(_translate(es, rr, eo))
 
 
-def transe_margin_loss(
-    edges: DataFrame, dim: int = 16, n_neg: int = 2, gamma: float = 1.0
+def _transe_scorer(dim: int) -> _Scorer:
+    """TransE (Bordes et al. 2013) L1 distance over the "te:"/"tr:" init;
+    LOWER is better."""
+    return lambda s, r, t: _l1_score(
+        _emb_expr("te:", s, dim), _emb_expr("tr:", r, dim), _emb_expr("te:", t, dim)
+    )
+
+
+def _dot3(a: F.Column, b: F.Column, c: F.Column) -> F.Column:
+    """DistMult trilinear score sum_i a_i * b_i * c_i as one JVM
+    expression (index-order left fold — matches DuckDB's list_sum over
+    the same index order, so the twin is bit-compatible before the
+    6-decimal rounding)."""
+    prod = F.zip_with(F.zip_with(a, b, lambda x, y: x * y), c, lambda x, y: x * y)
+    return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _distmult_scorer(dim: int) -> _Scorer:
+    """DistMult (Yang et al. 2015: s(h, r, t) = <e_h, w_r, e_t>) over the
+    "de:"/"dr:" init; HIGHER is better. Distinct init prefixes keep the
+    model's parameter space separate from TransE's."""
+    return lambda s, r, t: _dot3(
+        _emb_expr("de:", s, dim), _emb_expr("dr:", r, dim), _emb_expr("de:", t, dim)
+    )
+
+
+def _complex_score(
+    hr: F.Column, hi: F.Column, rr: F.Column, ri: F.Column, tr: F.Column, ti: F.Column
+) -> F.Column:
+    """ComplEx trilinear score Re(<e_h, w_r, conj(e_t)>) (Trouillon et al.
+    2016, eq. 11) expanded over the real/imag component arrays:
+    Σ_i Re(h)Re(r)Re(t) + Re(h)Im(r)Im(t) + Im(h)Re(r)Im(t)
+        − Im(h)Im(r)Re(t).
+    Four index-order left folds — same fold order as the DuckDB twin, so
+    the double result is bit-compatible before the 6-decimal rounding."""
+    return (
+        _dot3(hr, rr, tr) + _dot3(hr, ri, ti) + _dot3(hi, rr, ti) - _dot3(hi, ri, tr)
+    )
+
+
+def _complex_scorer(dim: int) -> _Scorer:
+    """ComplEx (Trouillon et al., ICML 2016) over complex vectors carried
+    as two real arrays ("cer:"/"cei:" entity re/im, "crr:"/"cri:" relation
+    re/im); HIGHER is better. Unlike DistMult it handles asymmetric
+    relations: the score is NOT symmetric in (h, t), because the
+    conjugation flips the sign of the Im(h)Im(r)Re(t) term."""
+    e = lambda prefix, name: _emb_expr(prefix, name, dim)  # noqa: E731
+    return lambda s, r, t: _complex_score(
+        e("cer:", s), e("cei:", s), e("crr:", r), e("cri:", r), e("cer:", t), e("cei:", t)
+    )
+
+
+_ROT_MOD = 1 << 20
+
+
+def _rotation_arrays(name: F.Column, dim: int) -> tuple[F.Column, F.Column]:
+    """(cos_arr, sin_arr) — a deterministic unit rotation per dimension for
+    a relation name, WITHOUT trig: two 20-bit hash draws (a, b) map to the
+    rational point on the unit circle via the tan-half-angle
+    parameterization c = (a²−b²)/(a²+b²), s = ±2ab/(a²+b²). Every value is
+    an integer ratio evaluated in one IEEE division, so the DuckDB twin is
+    bit-identical — cos()/sin() across two engines' libm are not, which is
+    why RotatE's phases are carried this way here. a ≥ 1 keeps the
+    denominator nonzero. The sine carries an independent hash-parity sign
+    ("rrs:" draw): with a ≥ 1, b ≥ 0 alone, s would always be ≥ 0 and every
+    phase would land in [0, π] — half the circle, with conjugate/inverse
+    rotations unrepresentable at init; the sign bit restores the full
+    [−π, π] phase space RotatE's inversion-modeling claim rests on."""
+
+    def elem(i: F.Column, kind: str) -> F.Column:
+        a = (_draw("rra:", name, i) % F.lit(_ROT_MOD) + F.lit(1)).cast("double")
+        b = (_draw("rrb:", name, i) % F.lit(_ROT_MOD)).cast("double")
+        denom = a * a + b * b
+        if kind == "cos":
+            return (a * a - b * b) / denom
+        sign = (F.lit(1) - F.lit(2) * (_draw("rrs:", name, i) % F.lit(2))).cast("double")
+        return sign * (F.lit(2.0) * a * b) / denom
+
+    idx = F.sequence(F.lit(0), F.lit(dim - 1))
+    return (
+        F.transform(idx, lambda i: elem(i, "cos")),
+        F.transform(idx, lambda i: elem(i, "sin")),
+    )
+
+
+def _rotate_dist(
+    hr: F.Column, hi: F.Column, c: F.Column, s: F.Column, tr: F.Column, ti: F.Column, dim: int
+) -> F.Column:
+    """RotatE L1 distance ‖h∘r − t‖₁ over component arrays: per dimension
+    |hr·c − hi·s − tr| + |hr·s + hi·c − ti|, summed in index order (one
+    fold — matches the DuckDB list_transform/list_sum twin term for
+    term)."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        F.lit(0.0),
+        # acc + (|re| + |im|): the inner sum is grouped first so the fold
+        # associates exactly like the DuckDB twin's list_sum over
+        # per-element (|re| + |im|) terms — FP addition is not associative.
+        lambda acc, i: acc
+        + (
+            F.abs(
+                F.element_at(hr, i + 1) * F.element_at(c, i + 1)
+                - F.element_at(hi, i + 1) * F.element_at(s, i + 1)
+                - F.element_at(tr, i + 1)
+            )
+            + F.abs(
+                F.element_at(hr, i + 1) * F.element_at(s, i + 1)
+                + F.element_at(hi, i + 1) * F.element_at(c, i + 1)
+                - F.element_at(ti, i + 1)
+            )
+        ),
+    )
+
+
+def _rotate_scorer(dim: int) -> _Scorer:
+    """RotatE (Sun et al., ICLR 2019: t ≈ h ∘ r with |r_i| = 1) distance;
+    LOWER is better. It models composition + inversion: rotations compose
+    by phase addition and invert by conjugation, which translation
+    (TransE) gets but symmetric DistMult cannot. Entities are two real
+    arrays ("rer:"/"rei:"); relation rotations are unit-modulus by
+    construction (``_rotation_arrays``), so need no normalization."""
+    e = lambda prefix, name: _emb_expr(prefix, name, dim)  # noqa: E731
+    return lambda s, r, t: _rotate_dist(
+        e("rer:", s), e("rei:", s), *_rotation_arrays(r, dim), e("rer:", t), e("rei:", t), dim
+    )
+
+
+def _hinge(pos: F.Column, neg: F.Column, gamma: float, lower_wins: bool) -> F.Column:
+    """max(0, margin): (γ + pos) − neg for distances, (γ − pos) + neg for
+    similarities. The association is fixed — FP addition is not
+    associative, and the twins group it the same way."""
+    if lower_wins:
+        return F.greatest(F.lit(0.0), F.lit(gamma) + pos - neg)
+    return F.greatest(F.lit(0.0), F.lit(gamma) - pos + neg)
+
+
+def _loss_by_rel(hinged: DataFrame) -> DataFrame:
+    """(rel, n_samples, n_active, avg_loss) over a per-sample ``hinge``."""
+    return hinged.groupBy("rel").agg(
+        F.count("*").alias("n_samples"),
+        F.sum((F.col("hinge") > 0).cast("bigint")).alias("n_active"),
+        F.round(F.avg("hinge"), 6).alias("avg_loss"),
+    )
+
+
+def _margin_loss(
+    edges: DataFrame, score: _Scorer, lower_wins: bool, n_neg: int, gamma: float
 ) -> DataFrame:
-    """Per-relation filtered-setting margin loss at the deterministic
-    initialization: for each (positive, corrupted-tail) sample from
-    ``negative_samples``, hinge = max(0, gamma + d(s,r,o) - d(s,r,o')),
-    aggregated per relation. Returns (rel, n_samples, n_active, avg_loss).
+    """Per-relation filtered-setting margin loss: for each (positive,
+    corrupted-tail) sample from ``negative_samples``, the hinge of the
+    positive's score against the negative's, aggregated per relation.
 
     Scale shape: embeddings are computed inline per row (no embedding
     join); the only shuffles are the negative sampler's bucketed vocab
     join and one final hash-agg on rel."""
     samples = negative_samples(edges, n_neg=n_neg)
-    es = _emb_expr("te:", F.col("src"), dim)
-    rr = _emb_expr("tr:", F.col("rel"), dim)
-    eo = _emb_expr("te:", F.col("dst"), dim)
-    en = _emb_expr("te:", F.col("neg_dst"), dim)
-    hinge = F.greatest(
-        F.lit(0.0), F.lit(gamma) + _l1_score(es, rr, eo) - _l1_score(es, rr, en)
-    )
+    src, rel = F.col("src"), F.col("rel")
+    pos, neg = score(src, rel, F.col("dst")), score(src, rel, F.col("neg_dst"))
+    return _loss_by_rel(samples.withColumn("hinge", _hinge(pos, neg, gamma, lower_wins)))
+
+
+def _type_candidates(pos: DataFrame, max_candidates: int, name: str) -> DataFrame:
+    """(rel, <name>) — type-constrained candidate tails: the entities that
+    appear as the relation's tails anywhere, capped at the
+    ``max_candidates`` most frequent (ties to the smallest id)."""
+    w_cand = Window.partitionBy("rel").orderBy(F.desc("n"), F.asc("dst"))
     return (
-        samples.withColumn("hinge", hinge)
-        .groupBy("rel")
-        .agg(
-            F.count("*").alias("n_samples"),
-            F.sum((F.col("hinge") > 0).cast("bigint")).alias("n_active"),
-            F.round(F.avg("hinge"), 6).alias("avg_loss"),
-        )
+        pos.groupBy("rel", "dst")
+        .agg(F.count("*").alias("n"))
+        .withColumn("rk", F.row_number().over(w_cand))
+        .where(F.col("rk") <= max_candidates)
+        .select("rel", F.col("dst").alias(name))
     )
+
+
+def _filtered_rank_eval(
+    edges: DataFrame, score: _Scorer, lower_wins: bool, hits_k: int, max_candidates: int
+) -> DataFrame:
+    """Link-prediction quality in the standard **filtered ranking**
+    protocol (Bordes et al. 2013): every distinct positive (src, rel, dst)
+    is a test query; its tail is ranked among the relation's
+    type-constrained candidates, and other true tails of the same
+    (src, rel) are ignored when counting rivals. Returns per-relation
+    (rel, n_queries, mrr, hits_at_k).
+
+    rank = 1 + |candidates with strictly better (score, id) that are not
+    themselves positives|, computed as one candidate-join + hash-agg — no
+    sort of the full candidate list, no window at all: the per-query rank
+    is a COUNT, so the plan is join → filter → groupBy. Scores round to 6
+    decimals before comparison so both engines agree on "better"."""
+    pos = edges.select("src", "rel", "dst").distinct()
+    cands = _type_candidates(pos, max_candidates, "cand")
+    src, rel = F.col("src"), F.col("rel")
+    scored = (
+        pos.withColumn("true_score", F.round(score(src, rel, F.col("dst")), 6))
+        .join(cands, "rel")
+        .where(F.col("cand") != F.col("dst"))
+        .withColumn("cand_score", F.round(score(src, rel, F.col("cand")), 6))
+    )
+    # a rival beats the true tail on (score, id asc), the score ascending
+    # for distances and descending for similarities; positives are
+    # filtered out of the rival set (left_anti on the positive identity)
+    cs, ts = F.col("cand_score"), F.col("true_score")
+    better = cs < ts if lower_wins else cs > ts
+    rivals = (
+        scored.where(better | ((cs == ts) & (F.col("cand") < F.col("dst"))))
+        .join(
+            pos.select("src", "rel", F.col("dst").alias("cand")),
+            ["src", "rel", "cand"],
+            "left_anti",
+        )
+        .groupBy("src", "rel", "dst")
+        .agg(F.count("*").alias("n_better"))
+    )
+    ranked = pos.join(rivals, ["src", "rel", "dst"], "left").select(
+        "src", "rel", "dst",
+        (F.coalesce(F.col("n_better"), F.lit(0)) + 1).alias("rank"),
+    )
+    return ranked.groupBy("rel").agg(
+        F.count("*").alias("n_queries"),
+        F.round(F.avg(1.0 / F.col("rank")), 6).alias("mrr"),
+        F.round(
+            F.avg((F.col("rank") <= hits_k).cast("double")), 6
+        ).alias("hits_at_k"),
+    )
+
+
+def transe_margin_loss(
+    edges: DataFrame, dim: int = 16, n_neg: int = 2, gamma: float = 1.0
+) -> DataFrame:
+    """Per-relation TransE margin loss at the deterministic init,
+    hinge = max(0, gamma + d(s,r,o) - d(s,r,o')). Returns
+    (rel, n_samples, n_active, avg_loss)."""
+    return _margin_loss(edges, _transe_scorer(dim), True, n_neg, gamma)
 
 
 def transe_sgd_step(
@@ -217,19 +438,15 @@ def transe_sgd_step(
     samples = negative_samples(edges, n_neg=n_neg)
     es = _emb_expr("te:", F.col("src"), dim)
     rr = _emb_expr("tr:", F.col("rel"), dim)
-    eo = _emb_expr("te:", F.col("dst"), dim)
-    en = _emb_expr("te:", F.col("neg_dst"), dim)
-    v_pos = F.zip_with(F.zip_with(es, rr, lambda x, y: x + y), eo, lambda x, y: x - y)
-    v_neg = F.zip_with(F.zip_with(es, rr, lambda x, y: x + y), en, lambda x, y: x - y)
+    v_pos = _translate(es, rr, _emb_expr("te:", F.col("dst"), dim))
+    v_neg = _translate(es, rr, _emb_expr("te:", F.col("neg_dst"), dim))
     sgn = lambda c: F.when(c > 0, F.lit(1.0)).when(c < 0, F.lit(-1.0)).otherwise(F.lit(0.0))  # noqa: E731
 
     active = (
         samples.withColumn("sp", F.transform(v_pos, sgn))
         .withColumn("sn", F.transform(v_neg, sgn))
-        .withColumn(
-            "hinge",
-            F.greatest(F.lit(0.0), F.lit(gamma) + _l1_score(es, rr, eo) - _l1_score(es, rr, en)),
-        )
+        # the hinge's L1 distances fold the same difference arrays
+        .withColumn("hinge", _hinge(_l1_norm(v_pos), _l1_norm(v_neg), gamma, True))
         .where(F.col("hinge") > 0)
     )
     dsr = F.zip_with("sp", "sn", lambda a, b: a - b)  # grad for s and rel
@@ -304,21 +521,10 @@ def transe_loss_with(
             F.col("rel") == F.col("rel_k"),
         )
         .drop("rel_k")
-        .withColumn(
-            "hinge",
-            F.greatest(
-                F.lit(0.0),
-                F.lit(gamma)
-                + _l1_score(F.col("es"), F.col("rr"), F.col("eo"))
-                - _l1_score(F.col("es"), F.col("rr"), F.col("en")),
-            ),
-        )
     )
-    return scored.groupBy("rel").agg(
-        F.count("*").alias("n_samples"),
-        F.sum((F.col("hinge") > 0).cast("bigint")).alias("n_active"),
-        F.round(F.avg("hinge"), 6).alias("avg_loss"),
-    )
+    es, rr = F.col("es"), F.col("rr")
+    hinge = _hinge(_l1_score(es, rr, F.col("eo")), _l1_score(es, rr, F.col("en")), gamma, True)
+    return _loss_by_rel(scored.withColumn("hinge", hinge))
 
 
 def transe_predict_tails(
@@ -329,11 +535,8 @@ def transe_predict_tails(
 ) -> DataFrame:
     """Link prediction: for every observed (src, rel) query, the top-``k``
     NEW tail entities by TransE L1 score (filtered ranking — tails already
-    observed for that (src, rel) are excluded), with type-constrained
-    candidate generation: candidates for a relation are the entities that
-    appear as ITS tails anywhere, capped at the ``max_candidates`` most
-    frequent (ties to the smallest id). Returns
-    (src, rel, pred_dst, score, rank).
+    observed for that (src, rel) are excluded) among the relation's
+    ``_type_candidates``. Returns (src, rel, pred_dst, score, rank).
 
     Scale shape: the query×candidate fan-out is per-relation
     |queries_r| × min(|tails_r|, max_candidates) — bounded by the cap, and
@@ -342,24 +545,11 @@ def transe_predict_tails(
     are PARTITION BY (src, rel) / PARTITION BY rel top-k
     (WindowGroupLimit). Scores round to 6 decimals BEFORE ranking so the
     ordering is reproducible across engines."""
-    from pyspark.sql import Window
-
     pos = edges.select("src", "rel", "dst").distinct()
-    w_cand = Window.partitionBy("rel").orderBy(F.desc("n"), F.asc("dst"))
-    cands = (
-        pos.groupBy("rel", "dst")
-        .agg(F.count("*").alias("n"))
-        .withColumn("rk", F.row_number().over(w_cand))
-        .where(F.col("rk") <= max_candidates)
-        .select("rel", F.col("dst").alias("pred_dst"))
-    )
+    cands = _type_candidates(pos, max_candidates, "pred_dst")
     queries = pos.select("src", "rel").distinct()
-    es = _emb_expr("te:", F.col("src"), dim)
-    rr = _emb_expr("tr:", F.col("rel"), dim)
-    ec = _emb_expr("te:", F.col("pred_dst"), dim)
-    scored = queries.join(cands, "rel").withColumn(
-        "score", F.round(_l1_score(es, rr, ec), 6)
-    )
+    score = _transe_scorer(dim)(F.col("src"), F.col("rel"), F.col("pred_dst"))
+    scored = queries.join(cands, "rel").withColumn("score", F.round(score, 6))
     known = pos.select("src", "rel", F.col("dst").alias("pred_dst"))
     fresh = scored.join(known, ["src", "rel", "pred_dst"], "left_anti")
     w_rank = Window.partitionBy("src", "rel").orderBy(F.asc("score"), F.asc("pred_dst"))
@@ -376,288 +566,34 @@ def transe_eval(
     hits_k: int = 3,
     max_candidates: int = 256,
 ) -> DataFrame:
-    """Link-prediction quality of the (deterministic-init) TransE model in
-    the standard **filtered ranking** protocol: every distinct positive
-    (src, rel, dst) is a test query; its tail is ranked among the
-    relation's type-constrained candidate set by L1 score (other true
-    tails of the same (src, rel) are ignored when counting rivals — the
-    Bordes et al. filtered setting). Returns per-relation
-    (rel, n_queries, mrr, hits_at_k).
-
-    rank = 1 + |candidates with strictly better (score, id) that are not
-    themselves positives|, computed as one candidate-join + hash-agg — no
-    sort of the full candidate list, no window at all: the per-query rank
-    is a COUNT, so the plan is join → filter → groupBy. Scores round to 6
-    decimals before comparison so both engines agree on "better"."""
-    from pyspark.sql import Window
-
-    pos = edges.select("src", "rel", "dst").distinct()
-    w_cand = Window.partitionBy("rel").orderBy(F.desc("n"), F.asc("dst"))
-    cands = (
-        pos.groupBy("rel", "dst")
-        .agg(F.count("*").alias("n"))
-        .withColumn("rk", F.row_number().over(w_cand))
-        .where(F.col("rk") <= max_candidates)
-        .select("rel", F.col("dst").alias("cand"))
-    )
-    es = _emb_expr("te:", F.col("src"), dim)
-    rr = _emb_expr("tr:", F.col("rel"), dim)
-    true_score = F.round(_l1_score(es, rr, _emb_expr("te:", F.col("dst"), dim)), 6)
-    cand_score = F.round(_l1_score(es, rr, _emb_expr("te:", F.col("cand"), dim)), 6)
-
-    scored = (
-        pos.withColumn("true_score", true_score)
-        .join(cands, "rel")
-        .where(F.col("cand") != F.col("dst"))
-        .withColumn("cand_score", cand_score)
-    )
-    # a rival beats the true tail on (score asc, id asc); positives are
-    # filtered out of the rival set (left_anti on the positive identity)
-    rivals = (
-        scored.where(
-            (F.col("cand_score") < F.col("true_score"))
-            | (
-                (F.col("cand_score") == F.col("true_score"))
-                & (F.col("cand") < F.col("dst"))
-            )
-        )
-        .join(
-            pos.select("src", "rel", F.col("dst").alias("cand")),
-            ["src", "rel", "cand"],
-            "left_anti",
-        )
-        .groupBy("src", "rel", "dst")
-        .agg(F.count("*").alias("n_better"))
-    )
-    ranked = pos.join(rivals, ["src", "rel", "dst"], "left").select(
-        "src", "rel", "dst",
-        (F.coalesce(F.col("n_better"), F.lit(0)) + 1).alias("rank"),
-    )
-    return ranked.groupBy("rel").agg(
-        F.count("*").alias("n_queries"),
-        F.round(F.avg(1.0 / F.col("rank")), 6).alias("mrr"),
-        F.round(
-            F.avg((F.col("rank") <= hits_k).cast("double")), 6
-        ).alias("hits_at_k"),
-    )
-
-
-def _dot3(a: F.Column, b: F.Column, c: F.Column) -> F.Column:
-    """DistMult trilinear score sum_i a_i * b_i * c_i as one JVM
-    expression (index-order left fold — matches DuckDB's list_sum over
-    the same index order, so the twin is bit-compatible before the
-    6-decimal rounding)."""
-    prod = F.zip_with(F.zip_with(a, b, lambda x, y: x * y), c, lambda x, y: x * y)
-    return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
+    """Filtered-ranking quality of the deterministic-init TransE model: a
+    rival beats the true tail on (score ASC, id ASC). Returns per-relation
+    (rel, n_queries, mrr, hits_at_k)."""
+    return _filtered_rank_eval(edges, _transe_scorer(dim), True, hits_k, max_candidates)
 
 
 def distmult_margin_loss(
     edges: DataFrame, dim: int = 16, n_neg: int = 2, gamma: float = 1.0
 ) -> DataFrame:
-    """Per-relation filtered-setting margin loss for a DistMult scorer
-    (Yang et al. 2015: s(h, r, t) = <e_h, w_r, e_t>, HIGHER is better —
-    hinge = max(0, gamma - s_pos + s_neg)) at the deterministic hash
-    initialization. Demonstrates the KGE layer is scorer-pluggable: the
-    sampler, inline-embedding trick, and shuffle shape are shared with
-    TransE; only the scoring expression differs. Distinct init prefixes
-    ("de:"/"dr:") keep the model's parameter space separate from TransE's.
-
-    Scale shape: identical to transe_margin_loss — embeddings computed
-    inline per row (no embedding join), one bucketed sampler join, one
-    final hash-agg on rel."""
-    samples = negative_samples(edges, n_neg=n_neg)
-    es = _emb_expr("de:", F.col("src"), dim)
-    rr = _emb_expr("dr:", F.col("rel"), dim)
-    eo = _emb_expr("de:", F.col("dst"), dim)
-    en = _emb_expr("de:", F.col("neg_dst"), dim)
-    hinge = F.greatest(
-        F.lit(0.0), F.lit(gamma) - _dot3(es, rr, eo) + _dot3(es, rr, en)
-    )
-    return (
-        samples.withColumn("hinge", hinge)
-        .groupBy("rel")
-        .agg(
-            F.count("*").alias("n_samples"),
-            F.sum((F.col("hinge") > 0).cast("bigint")).alias("n_active"),
-            F.round(F.avg("hinge"), 6).alias("avg_loss"),
-        )
-    )
-
-
-def _complex_score(
-    hr: F.Column, hi: F.Column, rr: F.Column, ri: F.Column, tr: F.Column, ti: F.Column
-) -> F.Column:
-    """ComplEx trilinear score Re(<e_h, w_r, conj(e_t)>) (Trouillon et al.
-    2016, eq. 11) expanded over the real/imag component arrays:
-    Σ_i Re(h)Re(r)Re(t) + Re(h)Im(r)Im(t) + Im(h)Re(r)Im(t)
-        − Im(h)Im(r)Re(t).
-    Four index-order left folds — same fold order as the DuckDB twin, so
-    the double result is bit-compatible before the 6-decimal rounding."""
-    return (
-        _dot3(hr, rr, tr) + _dot3(hr, ri, ti) + _dot3(hi, rr, ti) - _dot3(hi, ri, tr)
-    )
+    """Per-relation DistMult margin loss at the deterministic init,
+    hinge = max(0, gamma - s_pos + s_neg)."""
+    return _margin_loss(edges, _distmult_scorer(dim), False, n_neg, gamma)
 
 
 def complex_margin_loss(
     edges: DataFrame, dim: int = 16, n_neg: int = 2, gamma: float = 1.0
 ) -> DataFrame:
-    """Per-relation filtered-setting margin loss for a **ComplEx** scorer
-    (Trouillon et al., ICML 2016) at the deterministic hash init — the
-    third scorer on the shared KGE substrate (TransE L1, DistMult, now
-    ComplEx), proving the layer handles asymmetric relations: unlike
-    DistMult, ComplEx's score is NOT symmetric in (h, t), because the
-    conjugation flips the sign of the Im(h)Im(r)Re(t) term.
-
-    Embeddings are complex vectors carried as two real arrays with
-    distinct init prefixes ("cer:"/"cei:" entity re/im, "crr:"/"cri:"
-    relation re/im), computed inline per row exactly like the TransE /
-    DistMult paths — no embedding join, one bucketed sampler join
-    (negative_samples), one final hash-agg on rel. HIGHER score is
-    better; hinge = max(0, gamma - s_pos + s_neg)."""
-    samples = negative_samples(edges, n_neg=n_neg)
-    hr = _emb_expr("cer:", F.col("src"), dim)
-    hi = _emb_expr("cei:", F.col("src"), dim)
-    rr = _emb_expr("crr:", F.col("rel"), dim)
-    ri = _emb_expr("cri:", F.col("rel"), dim)
-    tr = _emb_expr("cer:", F.col("dst"), dim)
-    ti = _emb_expr("cei:", F.col("dst"), dim)
-    nr = _emb_expr("cer:", F.col("neg_dst"), dim)
-    ni = _emb_expr("cei:", F.col("neg_dst"), dim)
-    hinge = F.greatest(
-        F.lit(0.0),
-        F.lit(gamma)
-        - _complex_score(hr, hi, rr, ri, tr, ti)
-        + _complex_score(hr, hi, rr, ri, nr, ni),
-    )
-    return (
-        samples.withColumn("hinge", hinge)
-        .groupBy("rel")
-        .agg(
-            F.count("*").alias("n_samples"),
-            F.sum((F.col("hinge") > 0).cast("bigint")).alias("n_active"),
-            F.round(F.avg("hinge"), 6).alias("avg_loss"),
-        )
-    )
-
-
-_ROT_MOD = 1 << 20
-
-
-def _rotation_arrays(name: F.Column, dim: int) -> tuple[F.Column, F.Column]:
-    """(cos_arr, sin_arr) — a deterministic unit rotation per dimension for
-    a relation name, WITHOUT trig: two 20-bit hash draws (a, b) map to the
-    rational point on the unit circle via the tan-half-angle
-    parameterization c = (a²−b²)/(a²+b²), s = ±2ab/(a²+b²). Every value is
-    an integer ratio evaluated in one IEEE division, so the DuckDB twin is
-    bit-identical — cos()/sin() across two engines' libm are not, which is
-    why RotatE's phases are carried this way here. a ≥ 1 keeps the
-    denominator nonzero. The sine carries an independent hash-parity sign
-    ("rrs:" draw): with a ≥ 1, b ≥ 0 alone, s would always be ≥ 0 and every
-    phase would land in [0, π] — half the circle, with conjugate/inverse
-    rotations unrepresentable at init; the sign bit restores the full
-    [−π, π] phase space RotatE's inversion-modeling claim rests on."""
-
-    def elem(i: F.Column, kind: str) -> F.Column:
-        a = (
-            _h60(F.concat(F.lit("rra:"), name, F.lit(":"), i.cast("string")))
-            % F.lit(_ROT_MOD)
-            + F.lit(1)
-        ).cast("double")
-        b = (
-            _h60(F.concat(F.lit("rrb:"), name, F.lit(":"), i.cast("string")))
-            % F.lit(_ROT_MOD)
-        ).cast("double")
-        denom = a * a + b * b
-        if kind == "cos":
-            return (a * a - b * b) / denom
-        sign = (
-            F.lit(1)
-            - F.lit(2)
-            * (
-                _h60(F.concat(F.lit("rrs:"), name, F.lit(":"), i.cast("string")))
-                % F.lit(2)
-            )
-        ).cast("double")
-        return sign * (F.lit(2.0) * a * b) / denom
-
-    idx = F.sequence(F.lit(0), F.lit(dim - 1))
-    return (
-        F.transform(idx, lambda i: elem(i, "cos")),
-        F.transform(idx, lambda i: elem(i, "sin")),
-    )
-
-
-def _rotate_dist(
-    hr: F.Column, hi: F.Column, c: F.Column, s: F.Column, tr: F.Column, ti: F.Column, dim: int
-) -> F.Column:
-    """RotatE L1 distance ‖h∘r − t‖₁ over component arrays: per dimension
-    |hr·c − hi·s − tr| + |hr·s + hi·c − ti|, summed in index order (one
-    fold — matches the DuckDB list_transform/list_sum twin term for
-    term)."""
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        F.lit(0.0),
-        # acc + (|re| + |im|): the inner sum is grouped first so the fold
-        # associates exactly like the DuckDB twin's list_sum over
-        # per-element (|re| + |im|) terms — FP addition is not associative.
-        lambda acc, i: acc
-        + (
-            F.abs(
-                F.element_at(hr, i + 1) * F.element_at(c, i + 1)
-                - F.element_at(hi, i + 1) * F.element_at(s, i + 1)
-                - F.element_at(tr, i + 1)
-            )
-            + F.abs(
-                F.element_at(hr, i + 1) * F.element_at(s, i + 1)
-                + F.element_at(hi, i + 1) * F.element_at(c, i + 1)
-                - F.element_at(ti, i + 1)
-            )
-        ),
-    )
+    """Per-relation ComplEx margin loss at the deterministic init,
+    hinge = max(0, gamma - s_pos + s_neg)."""
+    return _margin_loss(edges, _complex_scorer(dim), False, n_neg, gamma)
 
 
 def rotate_margin_loss(
     edges: DataFrame, dim: int = 16, n_neg: int = 2, gamma: float = 1.0
 ) -> DataFrame:
-    """Per-relation filtered-setting margin loss for a **RotatE** scorer
-    (Sun et al., ICLR 2019: t ≈ h ∘ r with |r_i| = 1, i.e. each relation
-    is an element-wise rotation in ℂ; distance LOWER is better, hinge =
-    max(0, gamma + d_pos − d_neg)) at the deterministic hash init — the
-    fourth scorer on the shared KGE substrate (TransE, DistMult, ComplEx,
-    RotatE), and the one that models composition + inversion: rotations
-    compose by phase addition and invert by conjugation, which
-    translation (TransE) gets but symmetric DistMult cannot.
-
-    Entity embeddings are complex vectors as two real arrays (init
-    prefixes "rer:"/"rei:"); relation rotations are unit-modulus by
-    construction via the trig-free rational parameterization in
-    ``_rotation_arrays`` (prefixes "rra:"/"rrb:"), so no normalization
-    step is needed. Scale shape identical to the sibling losses: inline
-    per-row embeddings (no embedding join), one bucketed sampler join,
-    one final hash-agg on rel."""
-    samples = negative_samples(edges, n_neg=n_neg)
-    hr = _emb_expr("rer:", F.col("src"), dim)
-    hi = _emb_expr("rei:", F.col("src"), dim)
-    c, s = _rotation_arrays(F.col("rel"), dim)
-    tr = _emb_expr("rer:", F.col("dst"), dim)
-    ti = _emb_expr("rei:", F.col("dst"), dim)
-    nr = _emb_expr("rer:", F.col("neg_dst"), dim)
-    ni = _emb_expr("rei:", F.col("neg_dst"), dim)
-    hinge = F.greatest(
-        F.lit(0.0),
-        F.lit(gamma)
-        + _rotate_dist(hr, hi, c, s, tr, ti, dim)
-        - _rotate_dist(hr, hi, c, s, nr, ni, dim),
-    )
-    return (
-        samples.withColumn("hinge", hinge)
-        .groupBy("rel")
-        .agg(
-            F.count("*").alias("n_samples"),
-            F.sum((F.col("hinge") > 0).cast("bigint")).alias("n_active"),
-            F.round(F.avg("hinge"), 6).alias("avg_loss"),
-        )
-    )
+    """Per-relation RotatE margin loss at the deterministic init,
+    hinge = max(0, gamma + d_pos − d_neg)."""
+    return _margin_loss(edges, _rotate_scorer(dim), True, n_neg, gamma)
 
 
 def distmult_eval(
@@ -666,70 +602,9 @@ def distmult_eval(
     hits_k: int = 3,
     max_candidates: int = 256,
 ) -> DataFrame:
-    """Filtered-ranking link-prediction quality of the deterministic-init
-    **DistMult** scorer — the same Bordes-style protocol as
-    ``transe_eval`` (every distinct positive is a test query, tail ranked
-    among the relation's type-constrained candidates, other true tails
-    filtered out of the rival set) with the trilinear score, proving the
-    eval harness is scorer-pluggable exactly like the loss layer: HIGHER
-    score is better here, so a rival beats the true tail on
-    (score DESC, id ASC). Returns per-relation
-    (rel, n_queries, mrr, hits_at_k).
-
-    Scale shape: identical to transe_eval — rank is a rival COUNT (one
-    candidate join + hash-agg, no window over the full candidate list);
-    embeddings inline ("de:"/"dr:" prefixes, the distmult_margin_loss
-    parameter space); scores round to 6 decimals before comparison so
-    both engines agree on "better"."""
-    from pyspark.sql import Window
-
-    pos = edges.select("src", "rel", "dst").distinct()
-    w_cand = Window.partitionBy("rel").orderBy(F.desc("n"), F.asc("dst"))
-    cands = (
-        pos.groupBy("rel", "dst")
-        .agg(F.count("*").alias("n"))
-        .withColumn("rk", F.row_number().over(w_cand))
-        .where(F.col("rk") <= max_candidates)
-        .select("rel", F.col("dst").alias("cand"))
-    )
-    es = _emb_expr("de:", F.col("src"), dim)
-    rr = _emb_expr("dr:", F.col("rel"), dim)
-    true_score = F.round(_dot3(es, rr, _emb_expr("de:", F.col("dst"), dim)), 6)
-    cand_score = F.round(_dot3(es, rr, _emb_expr("de:", F.col("cand"), dim)), 6)
-
-    scored = (
-        pos.withColumn("true_score", true_score)
-        .join(cands, "rel")
-        .where(F.col("cand") != F.col("dst"))
-        .withColumn("cand_score", cand_score)
-    )
-    rivals = (
-        scored.where(
-            (F.col("cand_score") > F.col("true_score"))
-            | (
-                (F.col("cand_score") == F.col("true_score"))
-                & (F.col("cand") < F.col("dst"))
-            )
-        )
-        .join(
-            pos.select("src", "rel", F.col("dst").alias("cand")),
-            ["src", "rel", "cand"],
-            "left_anti",
-        )
-        .groupBy("src", "rel", "dst")
-        .agg(F.count("*").alias("n_better"))
-    )
-    ranked = pos.join(rivals, ["src", "rel", "dst"], "left").select(
-        "src", "rel", "dst",
-        (F.coalesce(F.col("n_better"), F.lit(0)) + 1).alias("rank"),
-    )
-    return ranked.groupBy("rel").agg(
-        F.count("*").alias("n_queries"),
-        F.round(F.avg(1.0 / F.col("rank")), 6).alias("mrr"),
-        F.round(
-            F.avg((F.col("rank") <= hits_k).cast("double")), 6
-        ).alias("hits_at_k"),
-    )
+    """Filtered-ranking quality of the deterministic-init DistMult model:
+    a rival beats the true tail on (score DESC, id ASC)."""
+    return _filtered_rank_eval(edges, _distmult_scorer(dim), False, hits_k, max_candidates)
 
 
 def complex_eval(
@@ -738,78 +613,6 @@ def complex_eval(
     hits_k: int = 3,
     max_candidates: int = 256,
 ) -> DataFrame:
-    """Filtered-ranking link-prediction quality of the deterministic-init
-    **ComplEx** scorer — completes the scorer-pluggable eval trio
-    (TransE L1 lower-better, DistMult trilinear higher-better, now the
-    complex trilinear real part, which is asymmetric in (h, t)): same
-    Bordes-style protocol, rank = rival COUNT, HIGHER is better. Returns
-    per-relation (rel, n_queries, mrr, hits_at_k).
-
-    Scale shape: identical to transe_eval/distmult_eval — one candidate
-    join + hash-agg, embeddings inline ("cer:"/"cei:"/"crr:"/"cri:", the
-    complex_margin_loss parameter space), 6-decimal rounding before
-    comparison."""
-    from pyspark.sql import Window
-
-    pos = edges.select("src", "rel", "dst").distinct()
-    w_cand = Window.partitionBy("rel").orderBy(F.desc("n"), F.asc("dst"))
-    cands = (
-        pos.groupBy("rel", "dst")
-        .agg(F.count("*").alias("n"))
-        .withColumn("rk", F.row_number().over(w_cand))
-        .where(F.col("rk") <= max_candidates)
-        .select("rel", F.col("dst").alias("cand"))
-    )
-    hr = _emb_expr("cer:", F.col("src"), dim)
-    hi = _emb_expr("cei:", F.col("src"), dim)
-    rr = _emb_expr("crr:", F.col("rel"), dim)
-    ri = _emb_expr("cri:", F.col("rel"), dim)
-    true_score = F.round(
-        _complex_score(
-            hr, hi, rr, ri,
-            _emb_expr("cer:", F.col("dst"), dim),
-            _emb_expr("cei:", F.col("dst"), dim),
-        ),
-        6,
-    )
-    cand_score = F.round(
-        _complex_score(
-            hr, hi, rr, ri,
-            _emb_expr("cer:", F.col("cand"), dim),
-            _emb_expr("cei:", F.col("cand"), dim),
-        ),
-        6,
-    )
-    scored = (
-        pos.withColumn("true_score", true_score)
-        .join(cands, "rel")
-        .where(F.col("cand") != F.col("dst"))
-        .withColumn("cand_score", cand_score)
-    )
-    rivals = (
-        scored.where(
-            (F.col("cand_score") > F.col("true_score"))
-            | (
-                (F.col("cand_score") == F.col("true_score"))
-                & (F.col("cand") < F.col("dst"))
-            )
-        )
-        .join(
-            pos.select("src", "rel", F.col("dst").alias("cand")),
-            ["src", "rel", "cand"],
-            "left_anti",
-        )
-        .groupBy("src", "rel", "dst")
-        .agg(F.count("*").alias("n_better"))
-    )
-    ranked = pos.join(rivals, ["src", "rel", "dst"], "left").select(
-        "src", "rel", "dst",
-        (F.coalesce(F.col("n_better"), F.lit(0)) + 1).alias("rank"),
-    )
-    return ranked.groupBy("rel").agg(
-        F.count("*").alias("n_queries"),
-        F.round(F.avg(1.0 / F.col("rank")), 6).alias("mrr"),
-        F.round(
-            F.avg((F.col("rank") <= hits_k).cast("double")), 6
-        ).alias("hits_at_k"),
-    )
+    """Filtered-ranking quality of the deterministic-init ComplEx model:
+    a rival beats the true tail on (score DESC, id ASC)."""
+    return _filtered_rank_eval(edges, _complex_scorer(dim), False, hits_k, max_candidates)

@@ -1,4 +1,1 @@
-from chatvector_ai_spark.streaming.incremental import (  # noqa: F401
-    stream_event_rollup,
-    stream_ingest_chunks,
-)
+from chatvector_ai_spark.streaming.incremental import stream_event_rollup  # noqa: F401

@@ -1,121 +1,19 @@
-"""Structured Streaming front-end: incremental ingest + windowed rollups.
-
-The reference's ingestion queue (queue_asyncio.py:44-205 / queue_redis.py)
-delivers documents continuously; the batch pipeline resumes from snapshots.
-This module is the streaming twin: a file-source ``readStream`` over the
-interleaved-documents directory feeds the SAME ingest transformation
-(mapInPandas is stateless, so the batch operator runs unchanged on a
-streaming DataFrame), and the checkpoint directory provides the
-exactly-once/resume contract the warehouse manifest provides in batch —
-new files are processed once, reprocessing after restart picks up where
-the checkpoint left off (the K1/K5 semantics of SURVEY §2.10).
+"""Structured Streaming operators that keep no pipeline stage of their own:
+windowed event rollups and watermark-bounded streaming dedup.
 
 ``stream_event_rollup`` is the streaming twin of the suite's
 ``ev_hourly_rollup``: event-time windows + a watermark bounding state for
-late data.
+late data. ``stream_dedup`` / ``stream_dedup_docs`` drop exact duplicates
+within a watermark window. The streaming KG build is
+``streaming/kgstream.stream_kg_updates``: each micro-batch of new documents
+folds into the warehouse through ``pipeline.incremental_update``, with
+lineage and exactly-once epoch keys.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-from chatvector_ai_spark.config import CHUNK_OVERLAP, CHUNK_SIZE
-from chatvector_ai_spark.operators.ingest import ingest_chunks
-from chatvector_ai_spark.sources.tables import DOCUMENTS_SCHEMA
-
-
-def stream_ingest_chunks(
-    spark: SparkSession,
-    docs_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    strategy: str = "fixed",
-    size: int = CHUNK_SIZE,
-    overlap: int = CHUNK_OVERLAP,
-    embed_dim: int | None = None,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Incrementally ingest document files appearing under *docs_dir*.
-
-    ``available_now=True`` drains everything currently present then stops
-    (test/batch-catchup mode); ``False`` keeps running on new files.
-    ``max_files_per_trigger`` bounds micro-batch size (backpressure — the
-    queue-capacity analog of the reference's bounded queue, K1).
-    """
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(docs_dir)
-    chunks = ingest_chunks(docs, strategy=strategy, size=size, overlap=overlap, embed_dim=embed_dim)
-    writer = (
-        chunks.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_kg_edges(
-    spark: SparkSession,
-    docs_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    alias_dict: DataFrame,
-    canonical_map: DataFrame | None = None,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Incremental KG construction: each micro-batch of new document files
-    runs the FULL batch operator chain — ingest → extract → link →
-    edge pivot — and lands canonical edges idempotently per micro-batch:
-    each batch overwrites its own ``batch_id=<id>`` partition, so a batch
-    replayed after a crash between the parquet write and the checkpoint
-    commit rewrites the same partition instead of appending duplicates
-    (foreachBatch alone is only at-least-once).
-
-    This is the streaming twin of the batch pipeline's stages 1-6, built
-    via ``foreachBatch`` so the unchanged batch operators run per
-    micro-batch. ``canonical_map`` is the latest committed entity→canonical
-    snapshot (``Warehouse.read(spark, "canonical_map")``): streaming edges
-    resolve against the last canonicalization, and the periodic batch job
-    refreshes the map — the standard lambda split for an operator
-    (connected components) that is inherently global. With no map yet,
-    edges carry raw linked entity ids (identity canonicalization).
-    """
-    from chatvector_ai_spark.operators.extract import extract_triples_df, good_triples
-    from chatvector_ai_spark.operators.link import link_mentions, mentions_from_triples
-    from chatvector_ai_spark.pipeline import edges_from_linked
-
-    cmap = canonical_map
-    if cmap is None:
-        cmap = spark.createDataFrame([], "entity_id string, canonical_entity string")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        chunks = ingest_chunks(batch_df)
-        triples = good_triples(extract_triples_df(chunks, keep_embedding=False))
-        linked = link_mentions(mentions_from_triples(triples), alias_dict)
-        # idempotent sink: replaying batch N overwrites batch N's partition
-        edges_from_linked(linked, cmap).write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
-
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(docs_dir)
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_event_rollup(
@@ -160,7 +58,7 @@ def stream_dedup(
     state forever). Duplicates arriving later than the watermark are
     consciously re-admitted: at that distance the batch dedup layer
     (dd_exact / dd_minhash suite operators) owns them — the standard
-    lambda split this module already uses for canonicalization.
+    lambda split between a bounded streaming layer and a global batch one.
     """
     return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
 

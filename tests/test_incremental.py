@@ -228,10 +228,13 @@ def test_second_increment_chains_and_delete_supersedes(spark, corpus, tmp_path_f
 
 
 def test_stream_kg_updates_folds_microbatches(spark, tmp_path_factory):
-    """Structured Streaming front-end: two file drops fold as two
-    micro-batch epochs, and the chain head's tables are row-identical to
-    a fresh full build over base + both drops. Epoch keys are
-    deterministic in the batch id (the exactly-once replay contract)."""
+    """Structured Streaming front-end, exactly-once across restarts: drop 1
+    folds as one micro-batch epoch; drop 2, written while the query is
+    stopped, folds as the next epoch when the query restarts on the same
+    checkpoint; a third start with no new file commits nothing. The chain
+    head's tables are row-identical to a fresh full build over base + both
+    drops. Epoch keys are deterministic in the batch id (the exactly-once
+    replay contract)."""
     from chatvector_ai_spark.streaming.kgstream import (
         latest_epoch_key,
         stream_kg_updates,
@@ -245,27 +248,41 @@ def test_stream_kg_updates_folds_microbatches(spark, tmp_path_factory):
     full.where(F.col("doc_id").isin(ids[:n_base])).write.parquet(str(d / "base"))
     stream_dir = d / "drops"
     stream_dir.mkdir()
-    full.where(F.col("doc_id").isin(ids[n_base:n_base + n_b1])).coalesce(1).write.parquet(
-        str(stream_dir / "drop1")
-    )
-    full.where(F.col("doc_id").isin(ids[n_base + n_b1:])).coalesce(1).write.parquet(
-        str(stream_dir / "drop2")
-    )
     full.write.parquet(str(d / "all"))
 
     wh = Warehouse(str(tmp_path_factory.mktemp("kgstream_wh")))
     base = run_pipeline(spark, wh, docs_path=str(d / "base"), resume=False)
-    q = stream_kg_updates(
-        spark, wh, f"{stream_dir}/*/", base.input_key,
-        str(d / "ckpt"), max_files_per_trigger=1, available_now=True,
-    )
-    q.awaitTermination(300)
 
-    head = latest_epoch_key(wh, base.input_key)
-    assert head != base.input_key and "#epoch=" in head
+    def run_stream():
+        q = stream_kg_updates(
+            spark, wh, f"{stream_dir}/*/", base.input_key,
+            str(d / "ckpt"), max_files_per_trigger=1, available_now=True,
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None, q.exception()
+        return latest_epoch_key(wh, base.input_key)
+
+    full.where(F.col("doc_id").isin(ids[n_base:n_base + n_b1])).coalesce(1).write.parquet(
+        str(stream_dir / "drop1")
+    )
+    first = run_stream()
+    assert first != base.input_key and "#epoch=" in first
+    assert len(wh._entry_data_dirs(wh.latest_entry("chunks", first))) == 2  # noqa: SLF001
+
+    # restart on the same checkpoint: only the new drop folds
+    full.where(F.col("doc_id").isin(ids[n_base + n_b1:])).coalesce(1).write.parquet(
+        str(stream_dir / "drop2")
+    )
+    head = run_stream()
+    assert head != first and "#epoch=" in head
     # two epochs committed, chain depth 3 on the Arrow tables
     entry = wh.latest_entry("chunks", head)
     assert len(wh._entry_data_dirs(entry)) == 3  # noqa: SLF001
+
+    # a third start with no new file adds no manifest entry
+    n_entries = len(wh.lineage())
+    assert run_stream() == head
+    assert len(wh.lineage()) == n_entries
 
     full_wh = Warehouse(str(tmp_path_factory.mktemp("kgstream_full")))
     fres = run_pipeline(spark, full_wh, docs_path=str(d / "all"), resume=False)
@@ -278,7 +295,7 @@ def test_stream_kg_updates_folds_microbatches(spark, tmp_path_factory):
     # previous epoch, not onto its own commits
     m = int(head.rsplit("=", 1)[1])
     prev = latest_epoch_key(wh, base.input_key, below=m)
-    assert prev != head and (prev == base.input_key or "#epoch=" in prev)
+    assert prev == first
 
 
 def test_compact_collapses_chain_preserving_rows(spark, built):

@@ -136,13 +136,13 @@ def test_transe_eval_single_candidate_relation(spark):
     assert solo["mrr"] == 1.0 and solo["hits_at_k"] == 1.0
 
 
-def test_transe_eval_matches_pure_python_recompute(spark):
+def _eval_matches_pure_python(spark, eval_fn, ent_prefix, rel_prefix, score, rivals):
     """Filtered MRR recomputed with hashlib+math from the documented
-    embedding construction must equal the DataFrame plan's output."""
+    embedding construction must equal the DataFrame plan's output.
+    ``score(es, rr, et)`` is the model's score over python vectors;
+    ``rivals(cs, ts)`` says whether a candidate score beats the true one."""
     import hashlib
     import math
-
-    from chatvector_ai_spark.operators.kgtrain import transe_eval
 
     rows = [(f"e{i}", "r", f"e{(i + 3) % 11}") for i in range(11)]
     df = spark.createDataFrame(rows, "src string, rel string, dst string")
@@ -158,32 +158,57 @@ def test_transe_eval_matches_pure_python_recompute(spark):
             for i in range(dim)
         ]
 
-    def l1(a, b, c):
-        return round(sum(abs(x + y - z) for x, y, z in zip(a, b, c)), 6)
+    def rounded(a, b, c):
+        return round(score(a, b, c), 6)
 
     pos = {(s, r, d) for s, r, d in rows}
     tails = sorted({d for _, _, d in rows})
-    rr = emb("tr:", "r")
+    rr = emb(rel_prefix, "r")
     ranks = []
     for s, r, d in sorted(pos):
-        es = emb("te:", s)
-        ts = l1(es, rr, emb("te:", d))
+        es = emb(ent_prefix, s)
+        ts = rounded(es, rr, emb(ent_prefix, d))
         better = 0
         for c in tails:
             if c == d or (s, r, c) in pos:
                 continue
-            cs = l1(es, rr, emb("te:", c))
-            if cs < ts or (cs == ts and c < d):
+            cs = rounded(es, rr, emb(ent_prefix, c))
+            if rivals(cs, ts) or (cs == ts and c < d):
                 better += 1
         ranks.append(better + 1)
     exp_mrr = round(sum(1.0 / k for k in ranks) / len(ranks), 6)
     exp_hits = round(sum(1 for k in ranks if k <= 3) / len(ranks), 6)
 
-    got = transe_eval(df, dim=dim).collect()
+    got = eval_fn(df, dim=dim).collect()
     assert len(got) == 1
     assert got[0]["n_queries"] == len(pos)
     assert got[0]["mrr"] == exp_mrr
     assert got[0]["hits_at_k"] == exp_hits
+
+
+def test_transe_eval_matches_pure_python_recompute(spark):
+    """TransE: L1 distance, a LOWER candidate score is a rival."""
+    from chatvector_ai_spark.operators.kgtrain import transe_eval
+
+    def l1(a, b, c):
+        return sum(abs(x + y - z) for x, y, z in zip(a, b, c))
+
+    _eval_matches_pure_python(
+        spark, transe_eval, "te:", "tr:", l1, lambda cs, ts: cs < ts
+    )
+
+
+def test_distmult_eval_matches_pure_python_recompute(spark):
+    """DistMult: trilinear score, a HIGHER candidate score is a rival —
+    the value pin of the higher-is-better ranking branch."""
+    from chatvector_ai_spark.operators.kgtrain import distmult_eval
+
+    def trilinear(a, b, c):
+        return sum(x * y * z for x, y, z in zip(a, b, c))
+
+    _eval_matches_pure_python(
+        spark, distmult_eval, "de:", "dr:", trilinear, lambda cs, ts: cs > ts
+    )
 
 
 def test_sgd_step_namespaces_entity_and_relation_grads(spark):

@@ -1,90 +1,11 @@
-"""Streaming ingest: incremental exactly-once file processing + windowed
-rollups with watermark (streaming twins of the batch operators)."""
+"""Streaming operators: windowed rollups with watermark and watermark-
+bounded dedup (streaming twins of the batch operators). The streaming KG
+build, exactly-once across restarts, is tested against a full build in
+tests/test_incremental.py::test_stream_kg_updates_folds_microbatches."""
 
-import time
-
-import pytest
 from pyspark.sql import functions as F
 
-from chatvector_ai_spark import datagen as dg
-from chatvector_ai_spark.operators.ingest import ingest_chunks
-from chatvector_ai_spark.streaming import stream_event_rollup, stream_ingest_chunks
-from chatvector_ai_spark.streaming.incremental import stream_kg_edges
-
-
-def _write_docs(spark, lo, hi, path):
-    import pandas as pd
-
-    rows = [dg.doc_row(i) for i in range(lo, hi)]
-    spark.createDataFrame(pd.DataFrame(rows), schema=dg.SPANS_SCHEMA_DDL).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-
-
-def test_incremental_ingest_processes_each_file_once(spark, tmp_path):
-    docs_dir = str(tmp_path / "docs")
-    out_dir = str(tmp_path / "chunks")
-    ckpt = str(tmp_path / "ckpt")
-
-    _write_docs(spark, 0, 20, docs_dir)
-    q = stream_ingest_chunks(spark, docs_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    first = spark.read.parquet(out_dir)
-    n_first = first.count()
-    assert n_first > 0
-    assert first.select("doc_id").distinct().count() == 20
-
-    # batch parity: streaming output == batch operator over the same input
-    batch = ingest_chunks(spark.read.parquet(docs_dir))
-    assert batch.count() == n_first
-
-    # new files arrive; resume from checkpoint processes ONLY the new ones
-    _write_docs(spark, 20, 30, docs_dir)
-    q2 = stream_ingest_chunks(spark, docs_dir, out_dir, ckpt)
-    q2.awaitTermination(120)
-    again = spark.read.parquet(out_dir)
-    assert again.select("doc_id").distinct().count() == 30
-    # no duplicates: per-doc row counts match the batch operator exactly
-    merged = again.groupBy("doc_id").count()
-    batch2 = ingest_chunks(spark.read.parquet(docs_dir)).groupBy("doc_id").count()
-    diff = merged.join(batch2, "doc_id").where(merged["count"] != batch2["count"]).count()
-    assert diff == 0
-
-
-def test_stream_kg_edges_end_to_end_incremental(spark, tmp_path):
-    """Full KG chain per micro-batch (ingest → extract → link → edges),
-    exactly-once across restarts, batch-parity on edge counts."""
-    from chatvector_ai_spark.operators.extract import extract_triples_df, good_triples
-    from chatvector_ai_spark.operators.link import link_mentions, mentions_from_triples
-    from chatvector_ai_spark.pipeline import edges_from_linked
-
-    docs_dir = str(tmp_path / "docs")
-    out_dir = str(tmp_path / "edges")
-    ckpt = str(tmp_path / "ckpt_kg")
-    aliases = dg.alias_df(spark, 200).cache()
-
-    _write_docs(spark, 0, 15, docs_dir)
-    q = stream_kg_edges(spark, docs_dir, out_dir, ckpt, aliases)
-    q.awaitTermination(180)
-    n_first = spark.read.parquet(out_dir).count()
-    assert n_first > 0
-
-    # restart with new files: only the new docs' edges are appended
-    _write_docs(spark, 15, 25, docs_dir)
-    q2 = stream_kg_edges(spark, docs_dir, out_dir, ckpt, aliases)
-    q2.awaitTermination(180)
-    edges = spark.read.parquet(out_dir)
-
-    # batch parity: same operators over the full input give the same count
-    # (streaming used identity canonicalization → so does the batch twin)
-    docs = spark.read.parquet(docs_dir).select("doc_id", "spans")
-    chunks = ingest_chunks(docs)
-    triples = good_triples(extract_triples_df(chunks, keep_embedding=False))
-    linked = link_mentions(mentions_from_triples(triples), aliases)
-    cmap0 = spark.createDataFrame([], "entity_id string, canonical_entity string")
-    batch_edges = edges_from_linked(linked, cmap0)
-    assert edges.count() == batch_edges.count()
-    assert edges.select("doc_id").distinct().count() == 25
+from chatvector_ai_spark.streaming import stream_event_rollup
 
 
 def test_stream_event_rollup_with_watermark(spark, tmp_path):

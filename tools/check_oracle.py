@@ -107,7 +107,9 @@ def non_atomic_cols(pdf) -> list[str]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     filters = sys.argv[2:]
-    spark = get_spark(master="local[8]")
+    # no console progress bar: it redraws with \r over the ok/FAIL lines,
+    # so a captured log loses verdicts
+    spark = get_spark(master="local[8]", extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
