@@ -311,5 +311,8 @@ def documents_df(spark, n_docs: int, n_entities: int = N_ENTITIES, media_ratio: 
 
 
 def alias_df(spark, n_entities: int = N_ENTITIES):
-    """Alias dictionary as a (small, broadcastable) DataFrame."""
-    return spark.createDataFrame(alias_rows(n_entities), schema=ALIAS_SCHEMA_DDL)
+    """Alias dictionary as a (small, broadcastable) DataFrame: a JVM
+    ``LocalRelation`` built through Arrow (``session.local_frame``)."""
+    from chatvector_ai_spark.session import local_frame
+
+    return local_frame(spark, alias_rows(n_entities), ALIAS_SCHEMA_DDL)

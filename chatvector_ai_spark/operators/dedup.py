@@ -6,15 +6,18 @@ ships: given a documents table, return the kept rows plus an audit report.
 
 Pipeline (all candidate-generated, never all-pairs):
 
-1. **Exact** — first-wins per md5(text): one hash-groupBy.
+1. **Exact** — first-wins per (source, md5(text)), both keys null-safe:
+   one hash-groupBy and one semi-join, materialized once per call (eager
+   ``localCheckpoint``); the counts, the signature pass, the kept or
+   admitted rows and the caller's commit all read that table.
 2. **Near-dup candidates** — ``near_dup_pairs`` over the exact-kept set:
    the rows of the suite's ``dd_jaccard_pairs`` (12 affine MinHashes over
    one-md5-per-token base values, 6 bands of 2, banded within the
    ``source`` block, exact token Jaccard ≥ 0.8 on candidates only), built
    from the ``functions.text`` columns. Each call tokenizes and MinHashes
    every document once into one checkpointed (doc_id, source, tk,
-   bd0..bd5) table; the six band joins and the Jaccard check read only
-   that table.
+   bd0..bd5) table; one self-join on (source, band, bd) over its exploded
+   band keys and the Jaccard check read only that table.
 3. **Clusters** — connected components over the verified pair graph
    (``graph.connected_components``: a driver union-find up to
    ``CC_SMALL_CORE_EDGES`` pairs, large-star/small-star above);
@@ -27,17 +30,23 @@ surface the brief adds on top. Semantics follow Lee et al. 2022
 ("Deduplicating Training Data Makes Language Models Better") — exact-then-
 near, keep-one-per-cluster.
 
-100 TB posture: one hash-groupBy, one signature pass per call (a
-narrow map over the input, materialized once), band equi-joins within
-source blocks over that table, CC in O(log² n) shuffle rounds, two
-anti-joins. The only collects are the CC convergence fingerprints, plus
-the pair set itself when it is at most ``CC_SMALL_CORE_EDGES`` rows
-(solved by the driver union-find); no per-row Python in any Spark task.
-Signatures last one call: a fold re-signs the kept corpus it is given.
+100 TB posture: one scan of the input, one hash-groupBy and one
+semi-join for the exact step, one signature pass (a narrow map), one band
+equi-join within source blocks, CC in O(log² n) shuffle rounds, one
+anti-join. Two tables per call are materialized in executor storage
+(memory, then disk): the exact survivors, at most the input's size (the
+new batch's in a fold), and the signature table, of the same order; every
+later plan reads them, not the input. The only collects are the CC
+convergence fingerprints, plus the pair set itself when it is at most
+``CC_SMALL_CORE_EDGES`` rows (solved by the driver union-find, whose
+labels come back as a JVM ``LocalRelation``); no per-row Python in any
+Spark task. Signatures last one call: a fold re-signs the kept corpus it
+is given.
 """
 
 from __future__ import annotations
 
+import operator
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -55,6 +64,31 @@ def _text_key() -> Column:
     NULL-text rows dedup among themselves instead of vanishing through
     NULL-key join semantics."""
     return F.coalesce(F.md5(F.col("text")), F.lit("__null_text__"))
+
+
+def _null_safe_join(
+    left: DataFrame, right: DataFrame, keys: tuple[str, ...], how: str
+) -> DataFrame:
+    """``left.join(right, keys, how)`` for a ``left_semi`` or ``left_anti``
+    join, with NULL matching NULL on every key: a NULL ``source`` is a
+    source block of its own in the exact step, not a row that vanishes
+    through NULL-key join semantics. ``right``'s keys are renamed so that
+    each side of the condition names one column."""
+    r = right.select(*[F.col(k).alias(f"_r{i}") for i, k in enumerate(keys)])
+    on = reduce(operator.and_, [F.col(k).eqNullSafe(F.col(f"_r{i}")) for i, k in enumerate(keys)])
+    return left.join(r, on, how)
+
+
+def _first_per_text(keyed: DataFrame) -> DataFrame:
+    """The rows of ``keyed`` (with its ``_h`` text key) that hold the min
+    doc_id of their (source, _h) group, ``_h`` dropped: one hash-groupBy
+    and one semi-join, materialized once with an eager
+    ``localCheckpoint``. The counts, the signature table, the kept or
+    admitted rows and the caller's commit all read that table instead of
+    re-running the hash, the joins and the input scan."""
+    first = keyed.groupBy("source", "_h").agg(F.min("doc_id").alias("doc_id"))
+    kept = _null_safe_join(keyed, first, ("source", "_h", "doc_id"), "left_semi").drop("_h")
+    return kept.localCheckpoint(eager=True)
 
 
 def _signature_table(docs: DataFrame) -> DataFrame:
@@ -81,9 +115,13 @@ def near_dup_pairs(
     for (12 hashes / 6 bands of 2 → band-collision probability ≈0.998 at
     J=0.8; recall at lower J is not engineered, so asking for it raises).
 
-    The signature table is materialized once (eager ``localCheckpoint``);
-    the six band self-joins and the Jaccard check all read it, so every
-    document is tokenized and MinHashed once per call."""
+    The signature table is materialized once (eager ``localCheckpoint``),
+    so every document is tokenized and MinHashed once per call. Candidates
+    come from one self-join on (source, band, bd) over its six band keys
+    exploded with their band index, not a union of six per-band joins.
+    NULL band keys (NULL text) are dropped first and a NULL source matches
+    nothing, so pairs form within equal non-NULL sources, as in
+    ``dd_jaccard_pairs``."""
     if threshold < 0.8:
         raise ValueError(
             f"threshold {threshold} < 0.8: the 6x2 band geometry only "
@@ -94,15 +132,19 @@ def near_dup_pairs(
     if missing:
         raise ValueError(f"dedup input is missing columns {missing}")
     sigs = _signature_table(docs).localCheckpoint(eager=True)
-
-    def band_pairs(i: int) -> DataFrame:
-        a = sigs.select(F.col("doc_id").alias("a_id"), "source", F.col(f"bd{i}").alias("bd"))
-        b = sigs.select(F.col("doc_id").alias("b_id"), "source", F.col(f"bd{i}").alias("bd"))
-        return a.join(b, ["source", "bd"]).where(F.col("a_id") < F.col("b_id")).select(
-            "a_id", "b_id"
-        )
-
-    cand = reduce(DataFrame.union, [band_pairs(i) for i in range(_N_HASHES // 2)]).distinct()
+    bands = sigs.select(
+        "doc_id",
+        "source",
+        F.posexplode(F.array(*[f"bd{i}" for i in range(_N_HASHES // 2)])).alias("band", "bd"),
+    ).where(F.col("bd").isNotNull())
+    a = bands.select(F.col("doc_id").alias("a_id"), "source", "band", "bd")
+    b = bands.select(F.col("doc_id").alias("b_id"), "source", "band", "bd")
+    cand = (
+        a.join(b, ["source", "band", "bd"])
+        .where(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id")
+        .distinct()
+    )
     ta = sigs.select(F.col("doc_id").alias("a_id"), F.col("tk").alias("ta"))
     tb = sigs.select(F.col("doc_id").alias("b_id"), F.col("tk").alias("tb"))
     sizes = cand.join(ta, "a_id").join(tb, "b_id").select(
@@ -126,7 +168,8 @@ def dedup_corpus(
 
     ``kept`` preserves the input schema. ``report`` is a plain dict of
     exact integer counts (driver-side scalars only — the four counts are
-    one aggregate action each, not data-scale collects). Deterministic:
+    one aggregate action each, not data-scale collects; all but the input
+    count read materialized or driver-built tables). Deterministic:
     first-wins keeps the min doc_id of every exact group and every
     near-dup cluster, so reruns and re-partitionings keep the same rows.
     Idempotent: every surviving pair of docs has verified Jaccard below
@@ -137,16 +180,11 @@ def dedup_corpus(
     # 1) exact: min doc_id per md5(text), within the same source block
     # (cross-source exact dups are kept — source is the tenancy boundary,
     # mirroring the suite's banded-within-source contract). NULL text gets
-    # a sentinel key: md5(NULL) is NULL, and NULL join keys never match, so
-    # without it every NULL-text row — including its group's min-id
-    # representative — would silently vanish in the semi-join.
-    keyed = docs.withColumn("_h", _text_key())
-    exact_keep = keyed.groupBy("source", "_h").agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    exact_kept = keyed.join(
-        exact_keep, ["source", "_h", "doc_id"], "left_semi"
-    ).drop("_h")
+    # a sentinel key and the source key matches null-safely: NULL join keys
+    # never match, so without both every NULL-text or NULL-source row —
+    # including its group's min-id representative — would silently vanish
+    # in the semi-join.
+    exact_kept = _first_per_text(docs.withColumn("_h", _text_key()))
     n_exact_kept = exact_kept.count()
 
     # 2-3) near-dup clusters over the exact survivors
@@ -203,20 +241,17 @@ def dedup_fold(
 
     Scale shape: the near-dup candidate join runs over kept ∪ new, but
     every stage is the same banded/candidate-generated machinery as the
-    full pass; the admitted set is delta-sized.
+    full pass; the exact survivors are materialized once and the admitted
+    set is delta-sized.
     """
     n_new = new_docs.count()
 
     # exact: a new doc survives if its (source, md5) is unseen in kept
     # and it is the min doc_id of its hash group within the new batch
-    # (same NULL-text sentinel as dedup_corpus)
+    # (same NULL-text sentinel and null-safe source key as dedup_corpus)
     new_keyed = new_docs.withColumn("_h", _text_key())
     kept_keys = kept.select("source", _text_key().alias("_h")).distinct()
-    fresh = new_keyed.join(kept_keys, ["source", "_h"], "left_anti")
-    batch_keep = fresh.groupBy("source", "_h").agg(F.min("doc_id").alias("doc_id"))
-    exact_ok = fresh.join(batch_keep, ["source", "_h", "doc_id"], "left_semi").drop(
-        "_h"
-    )
+    exact_ok = _first_per_text(_null_safe_join(new_keyed, kept_keys, ("source", "_h"), "left_anti"))
     n_exact_ok = exact_ok.count()
 
     # near-dup: clusters over kept ∪ exact-surviving-new; a new doc is

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chatvector_ai_spark.config import N_BUCKETS
+from chatvector_ai_spark.session import local_frame
 from chatvector_ai_spark.warehouse import Warehouse
 
 # doc-keyed tables, cascaded in this order
@@ -43,7 +44,7 @@ def _filter_docs(df: DataFrame, doc_ids: list[str]) -> DataFrame:
     if len(doc_ids) <= 64:
         return df.where(~F.col("doc_id").isin(doc_ids))
     spark = df.sparkSession
-    ids = spark.createDataFrame([(d,) for d in doc_ids], "doc_id string")
+    ids = local_frame(spark, [(d,) for d in doc_ids], "doc_id string")
     return df.join(F.broadcast(ids), "doc_id", "left_anti")
 
 

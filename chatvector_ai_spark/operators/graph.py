@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from chatvector_ai_spark.config import CC_SMALL_CORE_EDGES, N_BUCKETS
+from chatvector_ai_spark.session import local_frame
 
 
 def _bucket_of(entity: str, n_buckets: int) -> F.Column:
@@ -61,7 +62,7 @@ def khop(edges: DataFrame, seeds: list[str], k: int = 2, max_frontier: int | Non
     hub-heavy graphs (the candidate-widening analog)."""
     spark = edges.sparkSession
     sym = _sym_edges(edges)
-    visited = spark.createDataFrame([(s, 0) for s in seeds], "entity string, hop int")
+    visited = local_frame(spark, [(s, 0) for s in seeds], "entity string, hop int")
     frontier = visited.select("entity")
     for hop in range(1, k + 1):
         nxt = (
@@ -138,7 +139,10 @@ def _driver_union_find(edges: DataFrame, edge_rows: list) -> DataFrame:
     their first two columns with the component minimum as the label —
     O(E α(E)), zero shuffle rounds. Both columns of the output take the
     type of the first column of ``edges``. Only ever called on rows the
-    caller collected at broadcast scale (≤ ``CC_SMALL_CORE_EDGES``)."""
+    caller collected at broadcast scale (≤ ``CC_SMALL_CORE_EDGES``). The
+    labels come back through ``local_frame``, a JVM ``LocalRelation``, so
+    plans that read them (dedup's anti-joins, canonicalization's commit)
+    start no Python worker."""
     parent: dict = {}
 
     def find(x):
@@ -161,7 +165,7 @@ def _driver_union_find(edges: DataFrame, edge_rows: list) -> DataFrame:
     node_type = edges.schema.fields[0].dataType
     schema = StructType([StructField("node", node_type), StructField("label", node_type)])
     rows = [(node, comp_min[find(node)]) for node in parent]
-    return edges.sparkSession.createDataFrame(rows, schema)
+    return local_frame(edges.sparkSession, rows, schema)
 
 
 def _fingerprint(df: DataFrame, *cols: str) -> tuple[int, int]:
@@ -232,7 +236,7 @@ def _driver_pagerank(
     nodes = {v for row in edge_rows for v in row}
     n = len(nodes)
     if n == 0:
-        return e.sparkSession.createDataFrame([], schema)
+        return local_frame(e.sparkSession, [], schema)
     teleport_mass = (100 - damping_pct) * scale // 100
     if seeds is None:
         teleport = dict.fromkeys(nodes, teleport_mass // n)
@@ -249,7 +253,7 @@ def _driver_pagerank(
         for src, dst in edge_rows:
             summed[dst] += pr[src] // out_deg[src]
         pr = {v: teleport.get(v, 0) + damping_pct * summed[v] // 100 for v in nodes}
-    return e.sparkSession.createDataFrame(list(pr.items()), schema)
+    return local_frame(e.sparkSession, list(pr.items()), schema)
 
 
 def pagerank(
@@ -1131,10 +1135,9 @@ def paths_between(
 
     spark = edges.sparkSession
     e = edges.select("src", "rel", "dst").distinct()
-    found = spark.createDataFrame(
-        [], "path array<string>, rels array<string>, n_hops int"
-    )
-    frontier = spark.createDataFrame(
+    found = local_frame(spark, [], "path array<string>, rels array<string>, n_hops int")
+    frontier = local_frame(
+        spark,
         [(source, [source], [])],
         "current string, path array<string>, rels array<string>",
     )
@@ -1544,9 +1547,7 @@ def _landmark_bfs(
         raise ValueError("landmark BFS needs a non-empty seed list")
     spark = edges.sparkSession
     sym = _sym_edges(edges)
-    visited = spark.createDataFrame(
-        [(s, s, 0) for s in seeds], "seed string, entity string, hop int"
-    )
+    visited = local_frame(spark, [(s, s, 0) for s in seeds], "seed string, entity string, hop int")
     frontier = visited.select("seed", "entity")
     for hop in range(1, max_hops + 1):
         nxt = (
@@ -3140,9 +3141,7 @@ def cheapest_paths(
         .localCheckpoint(eager=True)
     )
     spark = edges.sparkSession
-    cur = spark.createDataFrame(
-        [(s, s, 0) for s in seeds], "seed string, entity string, cost long"
-    )
+    cur = local_frame(spark, [(s, s, 0) for s in seeds], "seed string, entity string, cost long")
     for _ in range(max_hops):
         relaxed = (
             cur.join(wedges, cur["entity"] == wedges["src"])

@@ -589,15 +589,17 @@ _JP_DUCK_MH = ", ".join(f"{_duck_minhash(i)} AS h{i}" for i in range(_JP_N_HASH)
 
 
 def _jp_tail(concat2) -> str:
-    # Measured note (round 5): fusing the per-band self-joins into one
-    # posexplode(bi, bdk) join + DISTINCT is 2-3x SLOWER here — Catalyst
-    # column-prunes each UNION branch down to its single band key (narrow
-    # build sides, no generator, no extra dedup shuffle), and exchange
-    # reuse does not fire across the fused join's sides. Spark inlines
-    # each CTE at every use, so this query tokenizes and MinHashes every
-    # document 12 times (both sides of six band joins); the dedup operator
-    # (operators/dedup.near_dup_pairs) returns the same rows from ONE
-    # materialized signature table instead.
+    # Measured note (round 5): in THIS query, fusing the per-band
+    # self-joins into one posexplode(bi, bdk) join + DISTINCT is 2-3x
+    # SLOWER — Catalyst column-prunes each UNION branch down to its single
+    # band key (narrow build sides, no generator, no extra dedup shuffle),
+    # and exchange reuse does not fire across the fused join's sides.
+    # Spark inlines each CTE at every use, so this query tokenizes and
+    # MinHashes every document 12 times (both sides of six band joins).
+    # The dedup operator (operators/dedup.near_dup_pairs) returns the same
+    # rows from ONE materialized signature table, and there the fused join
+    # is the cheaper shape: both of its sides explode the already-computed
+    # band keys of that table, so nothing upstream is recomputed.
     bands = ", ".join(
         f"md5({concat2(f'h{2 * i}', f'h{2 * i + 1}')}) AS bd{i}" for i in range(_JP_N_HASH // 2)
     )

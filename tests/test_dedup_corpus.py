@@ -172,3 +172,30 @@ def test_null_text_docs_dedup_among_themselves_not_vanish(spark):
     ids = sorted(r["doc_id"] for r in kept.collect())
     assert ids == [1, 2]  # NULL-text group keeps its min-id representative
     assert report["exact_removed"] == 1 and report["n_kept"] == 2
+
+
+def test_null_source_docs_dedup_as_their_own_block_not_vanish(spark):
+    """A NULL ``source`` is a block of its own in the exact step, as NULL
+    text is: before the null-safe key, the semi-join and the fold's
+    anti-join matched no NULL-source row, so every such row vanished."""
+    from chatvector_ai_spark.operators.dedup import dedup_fold
+
+    docs = _docs(spark, [
+        (1, None, "alpha beta gamma"),
+        (2, "web", "delta eps zeta"),
+        (3, None, "unique words here"),
+        (4, None, "alpha beta gamma"),
+    ])
+    kept, report = dedup_corpus(spark, docs)
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 2, 3]
+    assert report["exact_removed"] == 1 and report["n_kept"] == 3
+
+    new = _docs(spark, [
+        (10, None, "brand new words entirely"),
+        (11, None, "alpha beta gamma"),      # exact copy of kept NULL-source doc 1
+        (12, None, "brand new words entirely"),
+        (13, "web", "alpha beta gamma"),     # same text, other source: kept
+    ])
+    admitted, rep = dedup_fold(spark, kept, new)
+    assert sorted(r["doc_id"] for r in admitted.collect()) == [10, 13]
+    assert rep["exact_dropped"] == 2 and rep["n_admitted"] == 2

@@ -1795,3 +1795,26 @@ def test_partition_modularity_two_triangles_bridge(spark):
         [(n, "ALL") for n in "abcdef"], "entity string, label string")
     r1 = partition_modularity(g, one).collect()[0]
     assert (r1.q_num, r1.modularity) == (0, 0.0)
+
+
+def test_connected_components_at_threshold_scale_equals_distributed_path(spark, on_both_paths):
+    """``CC_SMALL_CORE_EDGES`` input edges, the largest call the driver
+    path takes: the union-find labels, returned through ``local_frame``,
+    are the rows of the large-star/small-star rounds (threshold 0)."""
+    from pyspark.sql import functions as F
+
+    from chatvector_ai_spark.config import CC_SMALL_CORE_EDGES
+    from chatvector_ai_spark.operators.graph import connected_components
+
+    # blocks of 50 nodes, each wired by the permutation x -> 7x + 3 (mod 50):
+    # several cycles per block, no self-loop (6x + 3 is odd)
+    i = F.col("id")
+    edges = spark.range(CC_SMALL_CORE_EDGES).select(
+        F.concat(F.lit("n"), i).alias("src"),
+        F.concat(F.lit("n"), F.floor(i / 50) * 50 + (i * 7 + 3) % 50).alias("dst"),
+    )
+    driver, distributed = on_both_paths(lambda: connected_components(edges))
+    assert "LocalRelation" in driver._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+    assert driver.count() == distributed.count() == CC_SMALL_CORE_EDGES
+    assert driver.exceptAll(distributed).count() == 0
+    assert distributed.exceptAll(driver).count() == 0

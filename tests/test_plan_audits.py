@@ -5,6 +5,8 @@ scan, column pruning, broadcast of dimensions, no Python eval in JVM-only
 paths, no shuffle in narrow stages.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -397,3 +399,69 @@ def test_no_unpartitioned_windows_engine_wide(spark):
         if n:
             bad[name] = n
     assert not bad, f"unpartitioned windows in: {bad}"
+
+
+def _node_details(text):
+    # the formatted plan's detail sections: "(<id>) <Op>" then its lines
+    return re.findall(r"^\(\d+\) (\w+)(.*?)(?=^\(\d+\) |\Z)", text, re.M | re.S)
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+
+
+def test_driver_built_frames_are_local_relations(spark):
+    """What the engine builds from driver rows — the driver-path results
+    of connected_components and pagerank, and the alias dictionary — is a
+    JVM LocalRelation made through Arrow, so a plan that reads it starts
+    no Python worker. createDataFrame over a Python list would plan a
+    LogicalRDD over a Python RDD."""
+    from chatvector_ai_spark.operators.graph import connected_components, pagerank
+
+    i = F.col("id")
+    edges = spark.range(40).select(
+        F.concat(F.lit("n"), i).alias("src"), F.concat(F.lit("n"), (i * 7 + 3) % 40).alias("dst")
+    )
+    for df in (connected_components(edges), pagerank(edges), dg.alias_df(spark, 50)):
+        plan = _optimized(df)
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+def test_dedup_results_read_the_materialized_exact_step(spark, tmp_path):
+    """dedup_corpus's kept and dedup_fold's admitted read the checkpointed
+    exact survivors and the driver-path component labels, never the
+    input files: counting and committing them re-runs neither the scan
+    nor the md5 -> anti-join -> groupBy -> semi-join plan."""
+    from chatvector_ai_spark.operators.dedup import dedup_corpus, dedup_fold
+
+    schema = "doc_id bigint, source string, text string"
+    words = ["alpha beta gamma delta epsilon", "the quick brown fox jumps over the lazy dog"]
+    base = [(1, "web", words[0]), (2, "web", words[0]), (3, "web", words[1]),
+            (4, "web", " ".join(reversed(words[1].split())))]
+    batch = [(10, "web", "a wholly new text"), (11, "web", words[0]),
+             (12, "web", " ".join(reversed(words[0].split())))]
+    for name, rows in (("base", base), ("batch", batch)):
+        spark.createDataFrame(rows, schema).write.parquet(f"{tmp_path}/{name}")
+    kept, _ = dedup_corpus(spark, spark.read.parquet(f"{tmp_path}/base"))
+    admitted, _ = dedup_fold(spark, kept, spark.read.parquet(f"{tmp_path}/batch"))
+    assert sorted(r["doc_id"] for r in admitted.collect()) == [10]
+    for df in (kept, admitted):
+        text = plan_facts(df).text
+        assert "Scan parquet" not in text, text
+
+
+def test_near_dup_pairs_runs_one_band_join(spark):
+    """The candidate pairs come from one self-join on (source, band, bd)
+    over the exploded band keys, not a union of six per-band joins."""
+    from chatvector_ai_spark.operators.dedup import near_dup_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "web", "alpha beta gamma delta"), (2, "web", "delta gamma beta alpha")],
+        "doc_id bigint, source string, text string",
+    )
+    text = plan_facts(near_dup_pairs(spark, docs)).text
+    band_joins = [
+        body for op, body in _node_details(text)
+        if op.endswith("Join") and re.search(r"Left keys \[\d+\]: \[[^\]]*\bband#", body)
+    ]
+    assert len(band_joins) == 1, text

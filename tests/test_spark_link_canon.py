@@ -89,6 +89,20 @@ def test_connected_components_match_union_find(spark, linked, on_both_paths):
         assert got == expected
 
 
+def test_canonical_map_depends_on_the_alias_dictionary_alone(linked):
+    """link_mentions links a mention to a dictionary candidate of its
+    lowercased surface, or to the surrogate ``S:<surface>``, which
+    linking_edges drops as a self-edge: every mention edge is already a
+    dictionary edge, so canonical_map with no mentions is the same map."""
+    _, alias, lm = linked
+    mention_edges = linking_edges(lm, alias.limit(0))
+    assert mention_edges.count() > 0
+    assert mention_edges.exceptAll(linking_edges(lm.limit(0), alias)).count() == 0
+    full, dict_only = canonical_map(lm, alias), canonical_map(lm.limit(0), alias)
+    assert full.count() == dict_only.count() > 0
+    assert full.exceptAll(dict_only).count() == 0
+
+
 def test_canonicalize_triples_end_to_end(spark, linked):
     triples, alias, lm = linked
     # attach linked entities to triples via the mention pivot
