@@ -1,4 +1,4 @@
-.PHONY: test dist bench scaling check-oracle clean
+.PHONY: test dist bench scaling check-oracle loc clean
 
 # the Tier-1 gate: cores from the host, spill dirs on local disk, one timeout
 test:
@@ -20,6 +20,10 @@ scaling:
 
 check-oracle:
 	PYTHONPATH=. python tools/check_oracle.py
+
+# the package line count ROADMAP tracks (every .py file, comments included)
+loc:
+	@find chatvector_ai_spark -name '*.py' | xargs cat | wc -l
 
 clean:
 	rm -rf dist .pytest_cache

@@ -10,6 +10,7 @@ expansion, relation filtering — all plain DataFrame ops.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -18,6 +19,8 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from chatvector_ai_spark.config import CC_SMALL_CORE_EDGES, N_BUCKETS
 from chatvector_ai_spark.session import local_frame
+
+_log = logging.getLogger(__name__)
 
 
 def _bucket_of(entity: str, n_buckets: int) -> F.Column:
@@ -57,30 +60,37 @@ def degrees(edges: DataFrame) -> DataFrame:
 
 def khop(edges: DataFrame, seeds: list[str], k: int = 2, max_frontier: int | None = None) -> DataFrame:
     """Entities reachable from *seeds* in ≤ k hops (undirected), with the
-    hop at which each was first reached. Iterative frontier expansion —
-    each hop is one join + distinct; ``max_frontier`` caps explosion on
-    hub-heavy graphs (the candidate-widening analog)."""
-    spark = edges.sparkSession
-    sym = _sym_edges(edges)
-    visited = local_frame(spark, [(s, 0) for s in seeds], "entity string, hop int")
-    frontier = visited.select("entity")
-    for hop in range(1, k + 1):
-        nxt = (
-            sym.join(frontier.withColumnRenamed("entity", "src"), "src")
-            .select(F.col("dst").alias("entity"))
-            .distinct()
-            .join(visited.select("entity"), "entity", "left_anti")
+    hop at which each was first reached: ``_landmark_bfs`` with one seed
+    label shared by every seed, so the seeds grow one ball. Each hop is
+    one join + distinct; ``max_frontier`` caps explosion on hub-heavy
+    graphs (the candidate-widening analog), logged when it binds."""
+    if not seeds:
+        return local_frame(edges.sparkSession, [], "entity string, hop int")
+    return _landmark_bfs(edges, seeds, k, max_frontier, "khop", shared_seed="").select(
+        "entity", "hop"
+    )
+
+
+def _cap_frontier(
+    nxt: DataFrame, order: list, max_frontier: int | None, what: str, hop: int
+) -> tuple[DataFrame, int]:
+    """One BFS hop's frontier, capped and materialized: keep the
+    ``max_frontier`` smallest rows by *order* (an unordered ``limit``
+    would keep an arbitrary, run-varying set) and checkpoint eagerly so
+    later hops never re-run this one. Returns the frontier and its row
+    count. A count at the cap is logged — also when the frontier lands
+    exactly on it — so truncation is never silent."""
+    if max_frontier is not None:
+        nxt = nxt.orderBy(*order).limit(max_frontier)
+    nxt = nxt.localCheckpoint(eager=True)
+    n = nxt.count()
+    if max_frontier is not None and n >= max_frontier:
+        _log.warning(
+            "%s: frontier cap %d reached at hop %d; results beyond the cap are "
+            "truncated — pass max_frontier=None for the exhaustive result",
+            what, max_frontier, hop,
         )
-        if max_frontier is not None:
-            # deterministic cap: keep the lexicographically-smallest entities
-            # (an unordered .limit() would keep an arbitrary, run-varying set)
-            nxt = nxt.orderBy("entity").limit(max_frontier)
-        nxt = nxt.withColumn("hop", F.lit(hop)).localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select("entity")
-    return visited
+    return nxt, n
 
 
 def relation_counts(edges: DataFrame) -> DataFrame:
@@ -1131,8 +1141,6 @@ def paths_between(
     Pass ``max_frontier=None`` to opt out explicitly (exhaustive
     enumeration); a binding cap is logged so truncation is never silent.
     localCheckpoint truncates per-hop lineage."""
-    import logging
-
     spark = edges.sparkSession
     e = edges.select("src", "rel", "dst").distinct()
     found = local_frame(spark, [], "path array<string>, rels array<string>, n_hops int")
@@ -1163,20 +1171,11 @@ def paths_between(
         frontier = (
             step if target is None else step.where(F.col("current") != target)
         )
-        if max_frontier is not None:
-            frontier = frontier.orderBy(F.concat_ws(">", "path")).limit(max_frontier)
-        frontier = frontier.localCheckpoint(eager=True)
-        if max_frontier is not None and frontier.count() >= max_frontier:
-            # the count is a metadata read of the eager checkpoint, not a
-            # recompute; fires also when the frontier lands exactly on the
-            # cap (conservative — truncation is never silent)
-            logging.getLogger(__name__).warning(
-                "paths_between: frontier cap %d reached at hop %d "
-                "(source=%s); results beyond the cap are truncated — pass "
-                "max_frontier=None for exhaustive enumeration",
-                max_frontier, hop, source,
-            )
-        if frontier.isEmpty():
+        frontier, n = _cap_frontier(
+            frontier, [F.concat_ws(">", "path")], max_frontier,
+            f"paths_between (source={source})", hop,
+        )
+        if n == 0:
             break
     return found
 
@@ -1535,19 +1534,26 @@ def _landmark_bfs(
     seeds: list[str],
     max_hops: int,
     max_frontier: int | None,
+    what: str,
+    shared_seed: str | None = None,
 ) -> DataFrame:
     """(seed, entity, hop) first-reach table for a multi-source undirected
     BFS from an explicit landmark list — the shared front half of
-    ``closeness`` and ``harmonic_centrality``. One shuffle join + distinct
-    per hop; the frontier is capped at ``max_frontier`` rows per hop in
-    deterministic smallest-(seed, entity) order (same cap discipline as
-    khop / paths_between), and lineage is truncated per hop with
-    localCheckpoint so the loop never re-executes earlier hops."""
+    ``closeness``, ``harmonic_centrality`` and ``khop``. Each seed labels
+    its own ball, or all seeds share ``shared_seed`` (khop's one ball).
+    One shuffle join + distinct per hop; ``_cap_frontier`` caps the
+    frontier at ``max_frontier`` rows per hop in deterministic
+    smallest-(seed, entity) order, logs a binding cap under *what*, and
+    checkpoints each hop so the loop never re-executes earlier hops."""
     if not seeds:
         raise ValueError("landmark BFS needs a non-empty seed list")
     spark = edges.sparkSession
     sym = _sym_edges(edges)
-    visited = local_frame(spark, [(s, s, 0) for s in seeds], "seed string, entity string, hop int")
+    visited = local_frame(
+        spark,
+        [(s if shared_seed is None else shared_seed, s, 0) for s in seeds],
+        "seed string, entity string, hop int",
+    )
     frontier = visited.select("seed", "entity")
     for hop in range(1, max_hops + 1):
         nxt = (
@@ -1556,10 +1562,10 @@ def _landmark_bfs(
             .distinct()
             .join(visited.select("seed", "entity"), ["seed", "entity"], "left_anti")
         )
-        if max_frontier is not None:
-            nxt = nxt.orderBy("seed", "entity").limit(max_frontier)
-        nxt = nxt.withColumn("hop", F.lit(hop)).localCheckpoint(eager=True)
-        if nxt.isEmpty():
+        nxt, n = _cap_frontier(
+            nxt.withColumn("hop", F.lit(hop)), ["seed", "entity"], max_frontier, what, hop
+        )
+        if n == 0:
             break
         visited = visited.unionByName(nxt)
         frontier = nxt.select("seed", "entity")
@@ -1585,7 +1591,7 @@ def closeness(
     paths_between (deterministic smallest-(seed, entity) order, logged
     when it binds). Landmarks are a small explicit list (driver
     broadcast-scale), never the full node set."""
-    visited = _landmark_bfs(edges, seeds, max_hops, max_frontier)
+    visited = _landmark_bfs(edges, seeds, max_hops, max_frontier, "closeness")
     return visited.groupBy("seed").agg(
         (F.count("*") - F.lit(1)).cast("bigint").alias("n_reached"),
         F.sum("hop").cast("bigint").alias("sum_dist"),
@@ -2345,21 +2351,11 @@ def relation_reachability(
             .distinct()
             .join(reach.select("src", "dst"), ["src", "dst"], "left_anti")
         )
-        if max_frontier is not None:
-            nxt = nxt.orderBy("src", "dst").limit(max_frontier)
-        nxt = nxt.withColumn("hops", F.lit(h)).localCheckpoint(eager=True)
-        if max_frontier is not None and nxt.count() >= max_frontier:
-            # metadata read of the eager checkpoint, not a recompute; fires
-            # also on an exact-cap layer — truncation is never silent
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "relation_reachability: frontier cap %d reached at hop %d "
-                "(rel=%s); closure beyond the cap is truncated — pass "
-                "max_frontier=None for the exhaustive closure",
-                max_frontier, h, rel,
-            )
-        if nxt.isEmpty():
+        nxt, n = _cap_frontier(
+            nxt.withColumn("hops", F.lit(h)), ["src", "dst"], max_frontier,
+            f"relation_reachability (rel={rel})", h,
+        )
+        if n == 0:
             break
         reach = reach.unionByName(nxt)
         frontier = nxt.select("src", "dst")
@@ -2728,7 +2724,7 @@ def harmonic_centrality(
     the multi-source BFS (one shuffle join per hop, capped frontier) with
     ``closeness`` via ``_landmark_bfs``.
     """
-    visited = _landmark_bfs(edges, seeds, max_hops, max_frontier)
+    visited = _landmark_bfs(edges, seeds, max_hops, max_frontier, "harmonic_centrality")
     return visited.groupBy("seed").agg(
         (F.count("*") - F.lit(1)).cast("bigint").alias("n_reached"),
         F.sum(

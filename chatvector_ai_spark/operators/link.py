@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chatvector_ai_spark.config import RERANK_LEXICAL_WEIGHT, RERANK_RETRIEVAL_WEIGHT
-from chatvector_ai_spark.functions.vectors import cosine, dot, lexical_overlap, tokens
+from chatvector_ai_spark.functions.vectors import dot, lexical_overlap, tokens
 
 
 def mentions_from_triples(triples: DataFrame) -> DataFrame:
@@ -62,7 +62,6 @@ def link_mentions(
     mentions: DataFrame,
     alias_dict: DataFrame,
     chunks: DataFrame | None = None,
-    assume_normalized: bool = True,
 ) -> DataFrame:
     """Best-entity assignment per mention occurrence.
 
@@ -76,9 +75,9 @@ def link_mentions(
     all, and only the ambiguous sliver fetches chunk embeddings via a
     broadcast semi-join — so triple/mention tables never carry a vector
     column and the scan never decodes one. If ``mentions`` itself carries
-    an ``embedding`` column the single-phase plan scores every row.
-    ``assume_normalized``: hash embeddings are L2-normalized at creation
-    (oracle/hashembed.py), so cosine reduces to a single dot-product fold.
+    an ``embedding`` column the single-phase plan scores every row. Hash
+    embeddings are L2-normalized at creation (oracle/hashembed.py), so the
+    cosine term is a single dot-product fold.
     """
     has_emb = "embedding" in mentions.columns
 
@@ -116,9 +115,6 @@ def link_mentions(
     w_r = RERANK_RETRIEVAL_WEIGHT / (RERANK_RETRIEVAL_WEIGHT + RERANK_LEXICAL_WEIGHT)
     w_l = RERANK_LEXICAL_WEIGHT / (RERANK_RETRIEVAL_WEIGHT + RERANK_LEXICAL_WEIGHT)
 
-    def emb_term(a, b):
-        return dot(a, b) if assume_normalized else cosine(a, b)
-
     def argmax_cand(emb_col=None, coalesce_emb=True):
         """array_max over candidates scored in-place; comparison key is
         (coalesce(score, -1), entity_id) — identical ordering to the old
@@ -127,7 +123,7 @@ def link_mentions(
         def scored(c):
             s = F.lit(w_l) * c["_alias_lex"]
             if emb_col is not None:
-                term = emb_term(emb_col, c["alias_embedding"])
+                term = dot(emb_col, c["alias_embedding"])
                 if coalesce_emb:
                     term = F.coalesce(term, F.lit(0.0))
                 s = F.lit(w_r) * term + s

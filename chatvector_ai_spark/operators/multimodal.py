@@ -2,14 +2,26 @@
 
 The interleaved input table carries media spans as references
 (``media_ref``); at 100 TB the payload bytes live in object storage and the
-engine treats them as opaque ``binary`` columns with typed metadata structs.
-This module supplies the Spark-side plumbing — schemas, fetch/decode/
-feature-extract operators as Arrow-batched ``mapInPandas`` stages, bounded
-batch shapes — with the codec step stubbed: the sandbox has no image/audio
-libraries, so ``decode_media`` ships a deterministic fake decoder (payload →
-stable pseudo-features) behind the same signature a real libjpeg/ffmpeg
-backend would implement, and raises ``NotImplementedError`` when a real
-backend is requested.
+engine treats them as opaque ``binary`` columns with typed metadata. This
+module is the Spark side of that path: explode the media spans, fetch and
+validate their payloads, and read the bytes with five Arrow-batched
+``mapInPandas`` operators — ``decode_media`` (feature vector + dims),
+``resize_images`` (PNG thumbnails), ``image_phash`` / ``audio_phash``
+(64-bit perceptual hashes with pigeonhole LSH bands) and ``sample_frames``
+(one row per sampled frame).
+
+All five decode through one format table (``_format_table``: magic bytes →
+the pure-stdlib decoder of ``functions/codecs.py`` / ``functions/
+jpegcodec.py`` for PNG, GIF, BMP and baseline-JPEG pixels, WAV samples and
+MP4 sample tables, plus the header parse it falls back to) and one per-row
+degrade loop (``_degrade``). A payload no format takes gets a deterministic
+sha-seeded fake row labelled ``fake``; a corrupt one gets the same fake
+labelled ``decode-error``, so one bad blob degrades its own row and never
+fails the Spark task. Each operator's label column (``decode_backend``,
+``resize_backend``, ``phash_backend``, ``frame_backend``) says which of a
+real decode (``stdlib-<format>``), a header-only parse
+(``stdlib-<format>-header``), the fake or a decode error produced the row,
+so a downstream filter can quarantine ``decode-error`` rows.
 
 Reference parity: media handling extends the reference's MIME
 allowlist/validation gate (ingestion_pipeline.py:752-801) — rows failing
@@ -19,9 +31,12 @@ validation split into a quarantine output, never fail the stage
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from operator import itemgetter
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -32,7 +47,7 @@ from pyspark.sql import functions as F
 # shapes they document, but truncated/hostile bytes can also surface as
 # struct.error (short unpack) or IndexError (short buffer) from deep in a
 # parse — one corrupt payload must degrade ITS row, never fail the whole
-# Spark task, so every mapInPandas degrade handler catches all three.
+# Spark task, so the degrade loop catches all three.
 _DECODE_ERRORS = (ValueError, struct.error, IndexError)
 
 MEDIA_KINDS = ("image", "table", "audio", "video")
@@ -49,12 +64,32 @@ FEATURE_ROW_DDL = (
     "feature array<float>, width int, height int, duration_ms int, decode_backend string"
 )
 
+RESIZED_ROW_DDL = (
+    "doc_id string, span_idx int, media_ref string, "
+    "width int, height int, resized binary, resize_backend string"
+)
+
+FRAME_ROW_DDL = (
+    "doc_id string, span_idx int, media_ref string, "
+    "frame_idx int, frame_ms int, frame_feature array<float>, "
+    "frame_backend string"
+)
+
+PHASH_ROW_DDL = (
+    "doc_id string, span_idx int, media_ref string, "
+    "phash bigint, band0 int, band1 int, band2 int, band3 int, "
+    "phash_backend string"
+)
+
 _CONTENT_TYPES = {
     "png": "image/png", "jpg": "image/jpeg", "csv": "text/csv",
     "wav": "audio/wav", "mp4": "video/mp4",
 }
 
 FEATURE_DIM = 16
+
+# the input columns every operator carries through to its output rows
+_KEY_COLS = ("doc_id", "span_idx", "kind", "media_ref")
 
 
 def media_spans(docs: DataFrame) -> DataFrame:
@@ -75,13 +110,15 @@ def media_spans(docs: DataFrame) -> DataFrame:
     return exploded.where(F.col("kind") != "text")
 
 
-def fetch_payloads(media: DataFrame, max_bytes: int = 1 << 20) -> DataFrame:
+def fetch_payloads(media: DataFrame) -> DataFrame:
     """Attach (deterministic fake) payload bytes + typed metadata.
 
     In production this stage is an object-store range read inside
     mapInPandas (per-executor connection reuse, bounded by Arrow batch
     size); here payloads are synthesized from the ref so the downstream
-    plumbing is real and testable.
+    plumbing is real and testable: ``.png``, ``.wav`` and ``.jpg`` refs get
+    real stdlib-decodable files with ref-seeded content, any other ref
+    opaque ref-seeded bytes.
     """
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -97,7 +134,6 @@ def fetch_payloads(media: DataFrame, max_bytes: int = 1 << 20) -> DataFrame:
                 seed = hashlib.sha256(ref.encode()).digest()
                 ext = ref.rsplit(".", 1)[-1]
                 if ext == "png":
-                    # a REAL (stdlib-decodable) PNG, content seeded by ref
                     w, h = 8 + seed[0] % 8, 8 + seed[1] % 8
                     px = bytes(
                         seed[(x * 7 + y * 13 + seed[2]) % len(seed)]
@@ -106,19 +142,14 @@ def fetch_payloads(media: DataFrame, max_bytes: int = 1 << 20) -> DataFrame:
                     )
                     payload = encode_png(w, h, px, color_type=0)
                 elif ext == "wav":
-                    # a REAL PCM WAV, ~0.1-0.3 s seeded by ref
+                    # ~0.1-0.3 s of 8 kHz PCM
                     n = 800 + seed[0] * 8
                     payload = encode_wav(
-                        [
-                            (seed[i % len(seed)] - 128) * 200
-                            for i in range(n)
-                        ],
+                        [(seed[i % len(seed)] - 128) * 200 for i in range(n)],
                         sample_rate=8000,
                     )
                 elif ext == "jpg":
-                    # a REAL baseline 4:2:0 JPEG (functions/jpegcodec):
-                    # seeded luma content, constant chroma, decodable by
-                    # the stdlib backend end-to-end
+                    # baseline 4:2:0: seeded luma, constant chroma
                     w, h = 8 + seed[0] % 16, 8 + seed[1] % 16
                     px = bytes(
                         seed[(x * 5 + y * 9 + seed[3]) % len(seed)]
@@ -129,8 +160,7 @@ def fetch_payloads(media: DataFrame, max_bytes: int = 1 << 20) -> DataFrame:
                         w, h, px, quant=2, chroma=seed[4], restart=0
                     )
                 else:
-                    n = 64 + seed[0]  # deterministic opaque payload
-                    payload = (seed * ((n // len(seed)) + 1))[:n]
+                    payload = _fake(ref.encode(), 64 + seed[0])
                 payloads.append(payload)
                 ctypes.append(_CONTENT_TYPES.get(ext, "application/octet-stream"))
                 sizes.append(len(payload))
@@ -143,242 +173,125 @@ def fetch_payloads(media: DataFrame, max_bytes: int = 1 << 20) -> DataFrame:
     return media.mapInPandas(fetch, schema=MEDIA_ROW_DDL)
 
 
-def decode_media(media: DataFrame, backend: str = "fake") -> DataFrame:
-    """Decode payloads → fixed-dim feature vectors + media dims.
-
-    ``backend='stdlib'``: REAL decode for PNG, GIF, BMP, baseline JPEG
-    and WAV payloads using the pure-stdlib codecs (functions/codecs.py +
-    functions/jpegcodec.py): PNG pixels inflated+unfiltered, GIF pixels
-    LZW-expanded through the palette, BMP BGR rows unpadded, JPEG
-    Huffman-decoded + dequantized + IDCT'd (gray = luma plane), WAV
-    duration from the PCM frame count — features pooled from the actual
-    decoded content. Shapes outside what each pixel path expresses
-    (progressive/arithmetic/12-bit JPEG, descriptor-only GIF/BMP shells)
-    keep their real header parse under the ``-header`` labels. Other
-    payloads (MP4, …) fall through to the deterministic pseudo-decode with
-    ``decode_backend='fake'`` so the row is still produced (a real
-    deployment would register libjpeg/ffmpeg backends behind the same
-    dispatch for throughput).
-
-    ``backend='fake'``: deterministic pseudo-decode (sha-seeded features,
-    dims derived from payload) — exercises the full distributed path with
-    zero codec work.
-
-    Any other backend raises NotImplementedError (ffmpeg/libjpeg are not
-    in this environment).
-    """
-    if backend == "stdlib":
-        return _decode_media_stdlib(media)
-    if backend != "fake":
-        raise NotImplementedError(
-            f"media decode backend {backend!r} requires codec libraries not "
-            "present in this environment; 'stdlib' (PNG/WAV) and the "
-            "deterministic 'fake' backend are available"
-        )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, widths, heights, durs = [], [], [], []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                vec, h = _fake_feature(bytes(payload))
-                feats.append(vec)
-                w, ht, ms = _fake_dims(kind, h)
-                widths.append(w); heights.append(ht); durs.append(ms)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"], "span_idx": pdf["span_idx"],
-                    "kind": pdf["kind"], "media_ref": pdf["media_ref"],
-                    "feature": feats, "width": pd.array(widths, dtype="Int32"),
-                    "height": pd.array(heights, dtype="Int32"),
-                    "duration_ms": pd.array(durs, dtype="Int32"),
-                    "decode_backend": "fake",
-                }
-            )
-
-    return media.mapInPandas(decode, schema=FEATURE_ROW_DDL)
+# ---------------------------------------------------------------------------
+# The three shared pieces: format table, sha-seeded fake, degrade loop
+# ---------------------------------------------------------------------------
 
 
-def _fake_feature(payload: bytes) -> tuple[list[float], bytes]:
-    """sha-seeded unit feature vector (the fake backend's contract)."""
-    h = hashlib.sha256(payload).digest()
-    vec = np.frombuffer(
-        (h * (FEATURE_DIM // len(h) + 1))[:FEATURE_DIM], dtype=np.uint8
-    ).astype(np.float32)
-    norm = float(np.linalg.norm(vec))
-    return (vec / norm if norm else vec).tolist(), h
+class _Format(NamedTuple):
+    """One payload format. ``data.startswith(magic, at)`` selects it;
+    ``decode`` returns its content — pixels ``(w, h, gray)``, samples
+    ``(rate, duration_ms, samples)`` or an MP4's ``(start_ms, offset,
+    size)`` sample table — and ``header``, where there is one, is the
+    header parse a caller may fall back to: ``(w, h)`` of an image, an
+    MP4's duration in ms."""
+
+    name: str
+    medium: str  # "pixels" | "samples" | "movie"
+    magic: bytes | tuple[bytes, ...]
+    at: int
+    decode: Callable
+    header: Callable | None
 
 
-def _fake_dims(kind: str, h: bytes) -> tuple[int | None, int | None, int | None]:
-    """(width, height, duration_ms) the fake backend derives from the
-    payload digest *h*: dims for images, a duration for audio/video."""
-    if kind == "image":
-        return 64 + h[0], 64 + h[1], None
-    if kind in ("audio", "video"):
-        return None, None, 1000 + int.from_bytes(h[2:4], "big")
-    return None, None, None
-
-
-def _decode_media_stdlib(media: DataFrame) -> DataFrame:
-    """Real PNG/WAV decode via functions/codecs (see decode_media)."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from chatvector_ai_spark.functions.codecs import (
-            BMP_MAGIC,
-            GIF_MAGICS,
-            JPEG_MAGIC,
-            PNG_MAGIC,
-            WAV_MAGIC,
-            bmp_dimensions,
-            decode_bmp_pixels,
-            decode_gif_pixels,
-            decode_png,
-            decode_wav,
-            gif_dimensions,
-            is_mp4,
-            jpeg_dimensions,
-            mp4_duration_ms,
-            png_grid_features,
-            wav_band_features,
-        )
-        from chatvector_ai_spark.functions.jpegcodec import decode_jpeg_pixels
-
-        import struct
-
-        for pdf in batches:
-            feats, widths, heights, durs, backends = [], [], [], [], []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                data = bytes(payload)
-                decoded = False
-                # a corrupt payload must degrade to the labeled fake row,
-                # never crash the task (at scale one bad blob in a billion
-                # would otherwise kill the stage; the label lets a
-                # downstream filter quarantine 'decode-error' rows)
-                try:
-                    if data.startswith(PNG_MAGIC):
-                        w, h, _ch, gray = decode_png(data)
-                        feats.append([float(v) for v in png_grid_features(gray, w, h, grid=4)])
-                        widths.append(w); heights.append(h); durs.append(None)
-                        backends.append("stdlib-png")
-                        decoded = True
-                    elif data.startswith(WAV_MAGIC):
-                        _rate, duration_ms, samples = decode_wav(data)
-                        feats.append([float(v) for v in wav_band_features(samples, bands=FEATURE_DIM)])
-                        widths.append(None); heights.append(None); durs.append(duration_ms)
-                        backends.append("stdlib-wav")
-                        decoded = True
-                    elif data.startswith(JPEG_MAGIC):
-                        # REAL baseline decode (functions/jpegcodec:
-                        # Huffman + dequant + IDCT, gray = luma plane);
-                        # shapes outside baseline (progressive,
-                        # arithmetic, 12-bit) keep the real marker-walk
-                        # header parse under the -header label
-                        try:
-                            w, h, gray = decode_jpeg_pixels(data)
-                            feats.append([float(v) for v in png_grid_features(gray, w, h, grid=4)])
-                            backends.append("stdlib-jpeg")
-                        except _DECODE_ERRORS:
-                            w, h, _ncomp = jpeg_dimensions(data)
-                            vec, _ = _fake_feature(data)
-                            feats.append(vec)
-                            backends.append("stdlib-jpeg-header")
-                        widths.append(w); heights.append(h); durs.append(None)
-                        decoded = True
-                    elif data.startswith(GIF_MAGICS):
-                        # REAL pixel decode (pure-integer GIF LZW +
-                        # palette); shapes the LZW path can't express
-                        # (e.g. descriptor-only shells) degrade to the
-                        # real header parse with the -header label
-                        try:
-                            w, h, gray = decode_gif_pixels(data)
-                            feats.append([float(v) for v in png_grid_features(gray, w, h, grid=4)])
-                            backends.append("stdlib-gif")
-                        except _DECODE_ERRORS:
-                            w, h = gif_dimensions(data)
-                            vec, _ = _fake_feature(data)
-                            feats.append(vec)
-                            backends.append("stdlib-gif-header")
-                        widths.append(w); heights.append(h); durs.append(None)
-                        decoded = True
-                    elif data.startswith(BMP_MAGIC):
-                        # REAL pixel decode for uncompressed 24-bit BMPs;
-                        # other bpp/compression shapes keep the header
-                        # parse with the -header label
-                        try:
-                            w, h, gray = decode_bmp_pixels(data)
-                            feats.append([float(v) for v in png_grid_features(gray, w, h, grid=4)])
-                            backends.append("stdlib-bmp")
-                        except _DECODE_ERRORS:
-                            w, h = bmp_dimensions(data)
-                            vec, _ = _fake_feature(data)
-                            feats.append(vec)
-                            backends.append("stdlib-bmp-header")
-                        widths.append(w); heights.append(h); durs.append(None)
-                        decoded = True
-                    elif is_mp4(data):
-                        # REAL movie duration from the moov/mvhd box walk;
-                        # sample decode needs ffmpeg, label says so
-                        duration_ms = mp4_duration_ms(data)
-                        vec, _ = _fake_feature(data)
-                        feats.append(vec)
-                        widths.append(None); heights.append(None)
-                        durs.append(duration_ms)
-                        backends.append("stdlib-mp4-header")
-                        decoded = True
-                except _DECODE_ERRORS:
-                    backends_label = "decode-error"
-                else:
-                    backends_label = "fake"
-                if not decoded:
-                    # format needs an external codec (or the payload is
-                    # corrupt) → deterministic fake, labeled so downstream
-                    # can tell real from pseudo from quarantine-worthy
-                    vec, h = _fake_feature(data)
-                    feats.append(vec)
-                    w, ht, ms = _fake_dims(kind, h)
-                    widths.append(w); heights.append(ht); durs.append(ms)
-                    backends.append(backends_label)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"], "span_idx": pdf["span_idx"],
-                    "kind": pdf["kind"], "media_ref": pdf["media_ref"],
-                    "feature": feats, "width": pd.array(widths, dtype="Int32"),
-                    "height": pd.array(heights, dtype="Int32"),
-                    "duration_ms": pd.array(durs, dtype="Int32"),
-                    "decode_backend": backends,
-                }
-            )
-
-    return media.mapInPandas(decode, schema=FEATURE_ROW_DDL)
-
-
-def _gray_of(data: bytes) -> tuple[int, int, bytes, str] | None:
-    """(width, height, 8-bit gray pixels, backend label) of a PNG, GIF, BMP
-    or baseline JPEG payload via the stdlib codecs; None for any other
-    format. Corrupt payloads raise one of ``_DECODE_ERRORS``."""
-    from chatvector_ai_spark.functions.codecs import (
-        BMP_MAGIC,
-        GIF_MAGICS,
-        JPEG_MAGIC,
-        PNG_MAGIC,
-        decode_bmp_pixels,
-        decode_gif_pixels,
-        decode_png,
-    )
+@functools.cache
+def _format_table() -> tuple[_Format, ...]:
+    """The formats in dispatch order. Built on first use, inside the
+    Python worker, so importing this module loads no codec."""
+    from chatvector_ai_spark.functions import codecs as c
     from chatvector_ai_spark.functions.jpegcodec import decode_jpeg_pixels
 
-    if data.startswith(PNG_MAGIC):
-        w, h, _ch, gray = decode_png(data)
-        return w, h, gray, "stdlib-png"
-    if data.startswith(GIF_MAGICS):
-        w, h, gray = decode_gif_pixels(data)
-        return w, h, gray, "stdlib-gif"
-    if data.startswith(BMP_MAGIC):
-        w, h, gray = decode_bmp_pixels(data)
-        return w, h, gray, "stdlib-bmp"
-    if data.startswith(JPEG_MAGIC):
-        w, h, gray = decode_jpeg_pixels(data)
-        return w, h, gray, "stdlib-jpeg"
+    png_pixels = itemgetter(0, 1, 3)  # (w, h, gray) of decode_png's (w, h, channels, gray)
+    return (
+        _Format("png", "pixels", c.PNG_MAGIC, 0, lambda d: png_pixels(c.decode_png(d)), None),
+        _Format("wav", "samples", c.WAV_MAGIC, 0, c.decode_wav, None),
+        _Format("jpeg", "pixels", c.JPEG_MAGIC, 0, decode_jpeg_pixels,
+                lambda d: c.jpeg_dimensions(d)[:2]),
+        _Format("gif", "pixels", c.GIF_MAGICS, 0, c.decode_gif_pixels, c.gif_dimensions),
+        _Format("bmp", "pixels", c.BMP_MAGIC, 0, c.decode_bmp_pixels, c.bmp_dimensions),
+        # ISO BMFF: the ftyp box tag sits after the 4-byte box size
+        _Format("mp4", "movie", b"ftyp", 4, c.mp4_sample_table, c.mp4_duration_ms),
+    )
+
+
+def _sniff(data: bytes, media: tuple[str, ...]) -> _Format | None:
+    """The first format of one of *media* whose magic *data* carries."""
+    for fmt in _format_table():
+        if fmt.medium in media and data.startswith(fmt.magic, fmt.at):
+            return fmt
     return None
+
+
+def _fake(seed: bytes, n: int) -> bytes:
+    """The one sha-seeded fake: *n* bytes cycled from sha256(*seed*). Every
+    fake value below (features, dims, hashes, thumbnails, frames) is read
+    from it, so a payload's fake row is the same on every run."""
+    h = hashlib.sha256(seed).digest()
+    return (h * (n // len(h) + 1))[:n]
+
+
+def _fake_feature(seed: bytes) -> list[float]:
+    """Unit-length FEATURE_DIM vector read from ``_fake(seed)``."""
+    vec = np.frombuffer(_fake(seed, FEATURE_DIM), dtype=np.uint8).astype(np.float32)
+    norm = float(np.linalg.norm(vec))
+    return (vec / norm if norm else vec).tolist()
+
+
+def _fake_ms(data: bytes) -> int:
+    """Fake duration of an audio/video payload: 1.000-66.535 s."""
+    return 1000 + int.from_bytes(_fake(data, 4)[2:4], "big")
+
+
+def _fake_hash(data: bytes) -> int:
+    """Fake 64-bit hash: the first 8 fake bytes as one signed BIGINT."""
+    return int.from_bytes(_fake(data, 8), "big", signed=True)
+
+
+def _degrade(
+    media: DataFrame,
+    kinds: tuple[str, ...] | None,
+    ddl: str,
+    decode: Callable[[bytes, str], list[tuple] | None],
+    fake: Callable[[bytes, str, str], list[tuple]],
+) -> DataFrame:
+    """Run *decode* per payload row in Arrow batches: ``decode(data, kind)``
+    returns the row's output values (one tuple each; a 1→N operator
+    returns several), or None when no format takes the payload. None
+    becomes ``fake(data, kind, "fake")`` and a ``_DECODE_ERRORS`` raise
+    becomes ``fake(data, kind, "decode-error")``. Output rows are the
+    input's key columns (those of ``_KEY_COLS`` in *ddl*) followed by the
+    values. Only spans of *kinds* reach Python (JVM-side filter; None
+    keeps every span)."""
+    cols = [c.split()[0] for c in ddl.split(",")]
+    keys = [c for c in cols if c in _KEY_COLS]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for *key, kind, payload in zip(*(pdf[k] for k in keys), pdf["kind"], pdf["payload"]):
+                data = bytes(payload)
+                try:
+                    out = decode(data, kind)
+                except _DECODE_ERRORS:
+                    out = fake(data, kind, "decode-error")
+                if out is None:
+                    out = fake(data, kind, "fake")
+                rows.extend((*key, *values) for values in out)
+            yield pd.DataFrame(rows, columns=cols)
+
+    if kinds is not None:
+        media = media.where(F.col("kind").isin(*kinds))
+    return media.mapInPandas(run, schema=ddl)
+
+
+def _pixels(data: bytes) -> tuple[int, int, bytes, str] | None:
+    """(width, height, 8-bit gray pixels, label) of an image payload; None
+    for a payload no pixel format takes."""
+    fmt = _sniff(data, ("pixels",))
+    if fmt is None:
+        return None
+    w, h, gray = fmt.decode(data)
+    return w, h, gray, f"stdlib-{fmt.name}"
 
 
 def _pack64(bits: list[int]) -> int:
@@ -389,168 +302,135 @@ def _pack64(bits: list[int]) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def _fake_hash(payload: bytes) -> int:
-    """The fake backend's 64-bit hash: the first 64 bits of sha256."""
-    h = hashlib.sha256(payload).digest()
-    return _pack64([(h[i // 8] >> (7 - i % 8)) & 1 for i in range(64)])
+def _phash_row(hv: int, label: str) -> tuple:
+    """(phash, band0..band3, label): the four 16-bit bands, bit 63 down."""
+    return (hv, *[(hv >> (48 - 16 * i)) & 0xFFFF for i in range(4)], label)
 
 
-RESIZED_ROW_DDL = (
-    "doc_id string, span_idx int, media_ref string, "
-    "width int, height int, resized binary, resize_backend string"
-)
-
-FRAME_ROW_DDL = (
-    "doc_id string, span_idx int, media_ref string, "
-    "frame_idx int, frame_ms int, frame_feature array<float>, "
-    "frame_backend string"
-)
-
-PHASH_ROW_DDL = (
-    "doc_id string, span_idx int, media_ref string, "
-    "phash bigint, band0 int, band1 int, band2 int, band3 int, "
-    "phash_backend string"
-)
+# ---------------------------------------------------------------------------
+# The five operators
+# ---------------------------------------------------------------------------
 
 
-def resize_images(media: DataFrame, width: int = 32, height: int = 32, backend: str = "fake") -> DataFrame:
+def decode_media(media: DataFrame) -> DataFrame:
+    """Decode payloads → fixed-dim feature vectors + media dims.
+
+    Real decode for PNG, GIF, BMP, baseline JPEG and WAV payloads with the
+    pure-stdlib codecs: PNG pixels inflated+unfiltered, GIF pixels
+    LZW-expanded through the palette, BMP BGR rows unpadded, JPEG
+    Huffman-decoded + dequantized + IDCT'd (gray = luma plane) — features
+    are the 4×4 mean-intensity grid — and WAV duration from the PCM frame
+    count, features the per-band RMS envelope. Image shapes outside what
+    each pixel path expresses (progressive/arithmetic/12-bit JPEG,
+    descriptor-only GIF/BMP shells) keep their real header dims with fake
+    features under the ``-header`` labels; MP4s keep their real mvhd
+    duration the same way (``stdlib-mp4-header``). Other payloads get the
+    sha-seeded fake (``decode_backend='fake'``: a unit feature vector,
+    dims for images, a duration for audio/video); corrupt ones the same
+    fake labelled ``decode-error``."""
+    from chatvector_ai_spark.functions.codecs import png_grid_features, wav_band_features
+
+    def decode(data: bytes, kind: str) -> list[tuple] | None:
+        fmt = _sniff(data, ("pixels", "samples", "movie"))
+        if fmt is None:
+            return None
+        label = f"stdlib-{fmt.name}"
+        if fmt.medium == "samples":
+            _rate, ms, samples = fmt.decode(data)
+            feat = [float(v) for v in wav_band_features(samples, bands=FEATURE_DIM)]
+            return [(feat, None, None, ms, label)]
+        if fmt.medium == "movie":
+            return [(_fake_feature(data), None, None, fmt.header(data), f"{label}-header")]
+        try:
+            w, h, gray = fmt.decode(data)
+            feat = [float(v) for v in png_grid_features(gray, w, h, grid=4)]
+        except _DECODE_ERRORS:
+            if fmt.header is None:
+                raise
+            w, h = fmt.header(data)
+            return [(_fake_feature(data), w, h, None, f"{label}-header")]
+        return [(feat, w, h, None, label)]
+
+    def fake(data: bytes, kind: str, label: str) -> list[tuple]:
+        h = _fake(data, 2)
+        if kind == "image":
+            dims = (64 + h[0], 64 + h[1], None)
+        elif kind in ("audio", "video"):
+            dims = (None, None, _fake_ms(data))
+        else:
+            dims = (None, None, None)
+        return [(_fake_feature(data), *dims, label)]
+
+    return _degrade(media, None, FEATURE_ROW_DDL, decode, fake)
+
+
+def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
     """Image spans → fixed-size thumbnails as binary (the training-data
     resize step). Narrow, Arrow-batched, image rows only (JVM-side filter).
 
-    ``backend='stdlib'``: REAL resize for PNG, GIF, BMP and baseline JPEG
-    payloads — decode to an 8-bit grayscale grid (functions/codecs: PNG
-    inflate+unfilter, GIF LZW+palette, BMP row unpadding;
-    functions/jpegcodec: Huffman+IDCT, gray = luma), deterministic
-    integer box-filter resample (codecs.resize_gray), re-encode as a
-    grayscale PNG (``resize_backend='stdlib-png'/'stdlib-gif'/
-    'stdlib-bmp'/'stdlib-jpeg'``; thumbnails are always PNG). Corrupt or
-    out-of-profile payloads degrade per row to the labeled fake grid
-    ('fake' / 'decode-error') — same dispatch-and-degrade contract as
-    ``decode_media(backend='stdlib')``, so one bad blob in a billion
-    never kills the stage.
+    PNG, GIF, BMP and baseline JPEG payloads decode to an 8-bit grayscale
+    grid, are box-filter resampled (``codecs.resize_gray``, integer and
+    deterministic) and re-encoded as grayscale PNGs
+    (``resize_backend='stdlib-png'/'stdlib-gif'/'stdlib-bmp'/
+    'stdlib-jpeg'``; thumbnails are always PNG). Any other payload gets a
+    width×height byte grid read from the sha-seeded fake (``fake``), a
+    corrupt or out-of-profile one the same grid labelled
+    ``decode-error``."""
+    from chatvector_ai_spark.functions.codecs import encode_png, resize_gray
 
-    ``backend='fake'``: deterministic width×height byte grid derived from
-    the payload hash — exercises the full distributed path with zero codec
-    work. Anything else raises (libjpeg/PIL not in this environment)."""
-    if backend not in ("fake", "stdlib"):
-        raise NotImplementedError(
-            f"image resize backend {backend!r} requires codec libraries not "
-            "present in this environment; 'stdlib' (PNG) and the "
-            "deterministic 'fake' backend are available"
-        )
-    n_out = width * height
+    def decode(data: bytes, kind: str) -> list[tuple] | None:
+        px = _pixels(data)
+        if px is None:
+            return None
+        w, h, gray, label = px
+        small = resize_gray(gray, w, h, width, height)
+        return [(width, height, encode_png(width, height, small, color_type=0), label)]
 
-    def fake_row(payload: bytes) -> tuple[bytes, str]:
-        h = hashlib.sha256(payload).digest()
-        return (h * (n_out // len(h) + 1))[:n_out], "fake"
+    def fake(data: bytes, kind: str, label: str) -> list[tuple]:
+        return [(width, height, _fake(data, width * height), label)]
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from chatvector_ai_spark.functions.codecs import encode_png, resize_gray
-
-        for pdf in batches:
-            out_rows = []
-            for doc_id, span_idx, ref, payload in zip(
-                pdf["doc_id"], pdf["span_idx"], pdf["media_ref"], pdf["payload"]
-            ):
-                data = bytes(payload)
-                grid, label = None, None
-                if backend == "stdlib":
-                    try:
-                        got = _gray_of(data)
-                        if got is not None:
-                            w, h, gray, label = got
-                            small = resize_gray(gray, w, h, width, height)
-                            grid = encode_png(width, height, small, color_type=0)
-                    except _DECODE_ERRORS:
-                        grid, _ = fake_row(data)
-                        label = "decode-error"
-                if grid is None:
-                    grid, label = fake_row(data)
-                out_rows.append(
-                    {
-                        "doc_id": doc_id, "span_idx": span_idx, "media_ref": ref,
-                        "width": width, "height": height,
-                        "resized": grid, "resize_backend": label,
-                    }
-                )
-            yield pd.DataFrame(out_rows, columns=[
-                "doc_id", "span_idx", "media_ref", "width", "height",
-                "resized", "resize_backend",
-            ])
-
-    return media.where(F.col("kind") == "image").mapInPandas(resize, schema=RESIZED_ROW_DDL)
+    return _degrade(media, ("image",), RESIZED_ROW_DDL, decode, fake)
 
 
-def image_phash(media: DataFrame, backend: str = "stdlib") -> DataFrame:
+def image_phash(media: DataFrame) -> DataFrame:
     """Perceptual average-hash (aHash) over image spans — the multimodal
-    dedup bridge: decode to 8-bit grayscale (REAL stdlib codecs: PNG
-    inflate+unfilter, GIF LZW+palette, BMP, baseline JPEG Huffman+IDCT),
-    box-resize to 8×8 (``codecs.resize_gray``), threshold each cell at the
-    grid mean, and pack the 64 bits row-major (MSB first) into one signed
-    BIGINT. Near-duplicate images — recompressions, small edits — land
-    within small Hamming distance of each other.
+    dedup bridge: decode to 8-bit grayscale (PNG, GIF, BMP, baseline
+    JPEG), box-resize to 8×8 (``codecs.resize_gray``), threshold each cell
+    at the grid mean, and pack the 64 bits row-major (MSB first) into one
+    signed BIGINT. Near-duplicate images — recompressions, small edits —
+    land within small Hamming distance of each other.
 
     Pairing at scale uses the SAME pigeonhole LSH the text SimHash dedup
     uses: the 64 bits split into four 16-bit bands (``band0..band3``, bit
     63 downward); two hashes within Hamming distance 3 must share at least
-    one exact band, so candidate pairs come from four equi-join buckets —
-    never an all-pairs scan. ``backend='fake'`` derives the bits from the
-    payload sha256 (full distributed path, zero codec work); corrupt rows
-    degrade per-row to the fake with ``phash_backend='decode-error'`` —
-    the decode_media/resize_images dispatch-and-degrade contract.
+    one exact band, so candidate pairs come from equi-join buckets —
+    never an all-pairs scan. Payloads no pixel format takes hash from the
+    sha-seeded fake (``phash_backend='fake'``), corrupt ones the same way
+    under ``decode-error``.
 
     Reference scope note: the reference has no media path at all
     (backend/services/extraction_service.py is PDF/TXT-only); this is
     brief-scope multimodal capability, not reference parity."""
-    if backend not in ("fake", "stdlib"):
-        raise NotImplementedError(
-            f"image phash backend {backend!r} requires codec libraries not "
-            "present in this environment; 'stdlib' and 'fake' are available"
-        )
+    from chatvector_ai_spark.functions.codecs import resize_gray
 
-    def phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from chatvector_ai_spark.functions.codecs import resize_gray
+    def decode(data: bytes, kind: str) -> list[tuple] | None:
+        px = _pixels(data)
+        if px is None:
+            return None
+        w, h, gray, label = px
+        small = resize_gray(gray, w, h, 8, 8)
+        # integer mean; strictly-above threshold so a flat image hashes
+        # to all-zero bits
+        mean = sum(small) // 64
+        return [_phash_row(_pack64([1 if p > mean else 0 for p in small]), label)]
 
-        for pdf in batches:
-            out_rows = []
-            for doc_id, span_idx, ref, payload in zip(
-                pdf["doc_id"], pdf["span_idx"], pdf["media_ref"], pdf["payload"]
-            ):
-                data = bytes(payload)
-                hv, label = None, None
-                if backend == "stdlib":
-                    try:
-                        got = _gray_of(data)
-                        if got is not None:
-                            w, h, gray, label = got
-                            small = resize_gray(gray, w, h, 8, 8)
-                            # integer mean; strictly-above threshold so a
-                            # flat image hashes to all-zero bits
-                            mean = sum(small) // 64
-                            hv = _pack64([1 if px > mean else 0 for px in small])
-                    except _DECODE_ERRORS:
-                        hv, label = _fake_hash(data), "decode-error"
-                if hv is None:
-                    hv, label = _fake_hash(data), ("fake" if label is None else label)
-                bands = [(hv >> (48 - 16 * i)) & 0xFFFF for i in range(4)]
-                out_rows.append(
-                    {
-                        "doc_id": doc_id, "span_idx": span_idx, "media_ref": ref,
-                        "phash": hv,
-                        "band0": bands[0], "band1": bands[1],
-                        "band2": bands[2], "band3": bands[3],
-                        "phash_backend": label,
-                    }
-                )
-            yield pd.DataFrame(out_rows, columns=[
-                "doc_id", "span_idx", "media_ref", "phash",
-                "band0", "band1", "band2", "band3", "phash_backend",
-            ])
+    def fake(data: bytes, kind: str, label: str) -> list[tuple]:
+        return [_phash_row(_fake_hash(data), label)]
 
-    return media.where(F.col("kind") == "image").mapInPandas(phash, schema=PHASH_ROW_DDL)
+    return _degrade(media, ("image",), PHASH_ROW_DDL, decode, fake)
 
 
-def audio_phash(media: DataFrame, backend: str = "stdlib") -> DataFrame:
+def audio_phash(media: DataFrame) -> DataFrame:
     """Energy-envelope fingerprint over audio spans — the audio member of
     the cross-modal dedup family: decode 16-bit mono PCM (stdlib
     ``codecs.decode_wav``), split the sample stream into 64 equal time
@@ -560,87 +440,49 @@ def audio_phash(media: DataFrame, backend: str = "stdlib") -> DataFrame:
     ``image_phash`` — so ``image_neardup_pairs`` (which only reads
     media_ref/phash/band columns) pairs near-duplicate audio unchanged.
     Re-encodes, small gain riding, and appended silence barely move the
-    envelope; reordered content does. Same dispatch-and-degrade contract:
-    non-WAV payloads hash from sha256 (``fake``), corrupt WAVs degrade
-    per-row (``decode-error``)."""
-    if backend not in ("fake", "stdlib"):
-        raise NotImplementedError(
-            f"audio phash backend {backend!r} requires codec libraries not "
-            "present in this environment; 'stdlib' and 'fake' are available"
-        )
+    envelope; reordered content does. Non-WAV payloads and WAVs with no
+    samples hash from the sha-seeded fake (``fake``), corrupt WAVs the
+    same way under ``decode-error``."""
 
-    def phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from chatvector_ai_spark.functions.codecs import WAV_MAGIC, decode_wav
+    def decode(data: bytes, kind: str) -> list[tuple] | None:
+        fmt = _sniff(data, ("samples",))
+        if fmt is None:
+            return None
+        _rate, _ms, samples = fmt.decode(data)
+        n = len(samples)
+        if not n:
+            return None
+        energies = [
+            sum(s * s for s in samples[i * n // 64:(i + 1) * n // 64]) for i in range(64)
+        ]
+        mean = sum(energies) // 64
+        return [_phash_row(_pack64([1 if e > mean else 0 for e in energies]), "stdlib-wav")]
 
-        for pdf in batches:
-            out_rows = []
-            for doc_id, span_idx, ref, payload in zip(
-                pdf["doc_id"], pdf["span_idx"], pdf["media_ref"], pdf["payload"]
-            ):
-                data = bytes(payload)
-                hv, label = None, None
-                if backend == "stdlib" and data.startswith(WAV_MAGIC):
-                    try:
-                        _rate, _ms, samples = decode_wav(data)
-                        n = len(samples)
-                        if n:
-                            energies = [
-                                sum(s * s for s in samples[i * n // 64:(i + 1) * n // 64])
-                                for i in range(64)
-                            ]
-                            mean = sum(energies) // 64
-                            hv = _pack64([1 if e > mean else 0 for e in energies])
-                            label = "stdlib-wav"
-                    except _DECODE_ERRORS:
-                        hv, label = _fake_hash(data), "decode-error"
-                if hv is None:
-                    hv, label = _fake_hash(data), ("fake" if label is None else label)
-                bands = [(hv >> (48 - 16 * i)) & 0xFFFF for i in range(4)]
-                out_rows.append(
-                    {
-                        "doc_id": doc_id, "span_idx": span_idx, "media_ref": ref,
-                        "phash": hv,
-                        "band0": bands[0], "band1": bands[1],
-                        "band2": bands[2], "band3": bands[3],
-                        "phash_backend": label,
-                    }
-                )
-            yield pd.DataFrame(out_rows, columns=[
-                "doc_id", "span_idx", "media_ref", "phash",
-                "band0", "band1", "band2", "band3", "phash_backend",
-            ])
+    def fake(data: bytes, kind: str, label: str) -> list[tuple]:
+        return [_phash_row(_fake_hash(data), label)]
 
-    return media.where(F.col("kind") == "audio").mapInPandas(phash, schema=PHASH_ROW_DDL)
+    return _degrade(media, ("audio",), PHASH_ROW_DDL, decode, fake)
 
 
 def image_neardup_pairs(phashes: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Near-duplicate image pairs from ``image_phash`` output: candidates
-    are generated per 16-bit band bucket (pigeonhole: Hamming ≤ 3 over 64
-    bits guarantees one of the four bands matches exactly), then verified
-    with the exact popcount distance — ``bit_count(phash XOR phash)`` —
-    entirely JVM-side. Returns (a_ref, b_ref, hamming), canonical order,
-    each pair once.
+    """Near-duplicate pairs from ``image_phash`` (or ``audio_phash``)
+    output: candidates share one exact 16-bit band (pigeonhole: Hamming ≤
+    3 over 64 bits guarantees one of the four bands matches), then are
+    verified with the exact popcount distance — ``bit_count(phash XOR
+    phash)`` — entirely JVM-side. Returns (a_ref, b_ref, hamming),
+    canonical order, each pair once.
 
-    Scale shape: four narrow equi-joins on (band index, band value)
-    buckets + one distinct — never an all-pairs product; the verify is a
-    per-row bit op. Exactly the SimHash text-dedup plan shape, applied to
-    the perceptual hash."""
-    base = phashes.select(
-        F.col("media_ref").alias("ref"), F.col("phash").alias("h"),
-        "band0", "band1", "band2", "band3",
+    Scale shape: one self-join on (band index, band value) over
+    ``posexplode(array(band0..band3))`` + one distinct — never an
+    all-pairs product; the verify is a per-row bit op. The same plan shape
+    as the MinHash text dedup (``dedup.near_dup_pairs``)."""
+    bands = phashes.select(
+        F.col("media_ref").alias("ref"),
+        F.col("phash").alias("h"),
+        F.posexplode(F.array("band0", "band1", "band2", "band3")).alias("bi", "bv"),
     )
-    keyed = None
-    for i in range(4):
-        k = base.select(
-            "ref", "h", F.lit(i).alias("bi"), F.col(f"band{i}").alias("bv")
-        )
-        keyed = k if keyed is None else keyed.unionByName(k)
-    left = keyed.select(
-        F.col("ref").alias("a_ref"), F.col("h").alias("ha"), "bi", "bv"
-    )
-    right = keyed.select(
-        F.col("ref").alias("b_ref"), F.col("h").alias("hb"), "bi", "bv"
-    )
+    left = bands.select(F.col("ref").alias("a_ref"), F.col("h").alias("ha"), "bi", "bv")
+    right = bands.select(F.col("ref").alias("b_ref"), F.col("h").alias("hb"), "bi", "bv")
     return (
         left.join(right, ["bi", "bv"])
         .where(F.col("a_ref") < F.col("b_ref"))
@@ -650,126 +492,67 @@ def image_neardup_pairs(phashes: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000, max_frames: int = 8, backend: str = "fake") -> DataFrame:
+def sample_frames(media: DataFrame, every_ms: int = 1000, max_frames: int = 8) -> DataFrame:
     """Video/audio spans → one row per sampled frame (1-to-N UDTF shape)
     with a per-frame feature vector; sampling times are every_ms apart,
     capped at max_frames.
 
-    ``backend='stdlib'``: REAL timing and REAL content — for WAV the
-    duration comes from the PCM frame count and each sampled frame's
-    feature is the band-RMS envelope of ITS OWN sample window
-    (``frame_backend='stdlib-wav'``); for MP4s with a complete sample
-    table the stbl walk (stts/stsz/stsc/stco) gives exact per-sample
-    timing and byte ranges, and each sampled frame's feature is the
-    byte-band histogram of ITS OWN mdat payload slice
+    Real timing and real content: for WAV the duration comes from the PCM
+    frame count and each sampled frame's feature is the band-RMS envelope
+    of ITS OWN sample window (``frame_backend='stdlib-wav'``); for MP4s
+    with a complete sample table the stbl walk (stts/stsz/stsc/stco) gives
+    exact per-sample timing and byte ranges, and each sampled frame's
+    feature is the byte-band histogram of ITS OWN mdat payload slice
     (``'stdlib-mp4'``) — container-level ground truth with no codec
-    entropy decode. Metadata-only MP4 shells keep the REAL mvhd duration
-    grid with pseudo features (``'stdlib-mp4-header'``); other/corrupt
-    payloads degrade to the deterministic fake ('fake' /
-    'decode-error'), never failing the stage.
+    entropy decode. Metadata-only MP4 shells keep the real mvhd duration
+    grid with sha-seeded fake features (``'stdlib-mp4-header'``); other
+    payloads get a fake duration and fake features (``'fake'``), corrupt
+    ones the same under ``'decode-error'``, never failing the stage."""
+    from chatvector_ai_spark.functions.codecs import byte_band_features, wav_band_features
 
-    ``backend='fake'``: duration and features derived from the payload
-    hash — the exact batching/row-explosion contract with zero codec
-    work. Anything else raises (ffmpeg is not in this environment)."""
-    if backend not in ("fake", "stdlib"):
-        raise NotImplementedError(
-            f"frame sampling backend {backend!r} requires codec libraries "
-            "not present in this environment; 'stdlib' (WAV/MP4 timing) "
-            "and the deterministic 'fake' backend are available"
-        )
+    def n_frames(duration_ms: int) -> int:
+        return min(max_frames, max(1, duration_ms // every_ms))
 
-    def fake_frames(payload: bytes, label: str, duration_ms: int | None = None):
-        h = hashlib.sha256(payload).digest()
-        if duration_ms is None:
-            duration_ms = 1000 + int.from_bytes(h[2:4], "big")
-        n_frames = min(max_frames, max(1, duration_ms // every_ms))
-        out = []
-        for i in range(n_frames):
-            vec, _ = _fake_feature(h + i.to_bytes(4, "big"))
-            out.append((i, vec, label))
-        return out
+    def fake(data: bytes, kind: str, label: str, duration_ms: int | None = None) -> list[tuple]:
+        h = _fake(data, 32)
+        n = n_frames(_fake_ms(data) if duration_ms is None else duration_ms)
+        return [
+            (i, i * every_ms, _fake_feature(h + i.to_bytes(4, "big")), label) for i in range(n)
+        ]
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from chatvector_ai_spark.functions.codecs import (
-            WAV_MAGIC,
-            byte_band_features,
-            decode_wav,
-            is_mp4,
-            mp4_duration_ms,
-            mp4_sample_table,
-            wav_band_features,
-        )
+    def decode(data: bytes, kind: str) -> list[tuple] | None:
+        fmt = _sniff(data, ("samples", "movie"))
+        if fmt is None:
+            return None
+        if fmt.medium == "samples":
+            rate, duration_ms, samples = fmt.decode(data)
+            win = max(1, rate * every_ms // 1000)
+            frames = []
+            for i in range(n_frames(duration_ms)):
+                feat = wav_band_features(samples[i * win:(i + 1) * win], bands=FEATURE_DIM)
+                frames.append((i, i * every_ms, [float(v) for v in feat], "stdlib-wav"))
+            return frames
+        duration_ms = fmt.header(data)
+        try:
+            table = fmt.decode(data)
+        except _DECODE_ERRORS:
+            table = None
+        if not table:
+            # metadata-only shell: real frame grid, fake features
+            return fake(data, kind, "stdlib-mp4-header", duration_ms)
+        frames = []
+        for i in range(n_frames(duration_ms)):
+            t = i * every_ms
+            off, size = table[0][1], table[0][2]
+            for s_ms, s_off, s_size in table:
+                if s_ms > t:
+                    break
+                off, size = s_off, s_size
+            feat = byte_band_features(data[off:off + size], bands=FEATURE_DIM)
+            frames.append((i, t, feat, "stdlib-mp4"))
+        return frames
 
-        for pdf in batches:
-            rows = []
-            for doc_id, span_idx, ref, payload in zip(
-                pdf["doc_id"], pdf["span_idx"], pdf["media_ref"], pdf["payload"]
-            ):
-                data = bytes(payload)
-                frames = None
-                if backend == "stdlib":
-                    try:
-                        if data.startswith(WAV_MAGIC):
-                            rate, duration_ms, samples = decode_wav(data)
-                            n = min(max_frames, max(1, duration_ms // every_ms))
-                            win = max(1, rate * every_ms // 1000)
-                            frames = []
-                            for i in range(n):
-                                seg = samples[i * win : (i + 1) * win]
-                                feat = wav_band_features(seg, bands=FEATURE_DIM)
-                                frames.append(
-                                    (i, [float(v) for v in feat], "stdlib-wav")
-                                )
-                        elif is_mp4(data):
-                            duration_ms = mp4_duration_ms(data)
-                            try:
-                                table = mp4_sample_table(data)
-                            except _DECODE_ERRORS:
-                                table = None
-                            if table:
-                                # REAL per-sample timing + payload bytes
-                                # from the stbl walk; feature = byte-band
-                                # histogram of the sample's own mdat slice
-                                n = min(max_frames, max(1, duration_ms // every_ms))
-                                frames = []
-                                for i in range(n):
-                                    t = i * every_ms
-                                    off, size = table[0][1], table[0][2]
-                                    for s_ms, s_off, s_size in table:
-                                        if s_ms > t:
-                                            break
-                                        off, size = s_off, s_size
-                                    feat = byte_band_features(
-                                        data[off : off + size], bands=FEATURE_DIM
-                                    )
-                                    frames.append((i, feat, "stdlib-mp4"))
-                            else:
-                                # metadata-only shell: real frame GRID
-                                # (mvhd duration), pseudo features
-                                frames = fake_frames(
-                                    data, "stdlib-mp4-header",
-                                    duration_ms=duration_ms,
-                                )
-                    except _DECODE_ERRORS:
-                        frames = fake_frames(data, "decode-error")
-                if frames is None:
-                    frames = fake_frames(data, "fake")
-                for i, feat, label in frames:
-                    rows.append(
-                        {
-                            "doc_id": doc_id, "span_idx": span_idx, "media_ref": ref,
-                            "frame_idx": i, "frame_ms": i * every_ms,
-                            "frame_feature": feat, "frame_backend": label,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "span_idx", "media_ref", "frame_idx", "frame_ms",
-                "frame_feature", "frame_backend",
-            ])
-
-    return media.where(F.col("kind").isin("audio", "video")).mapInPandas(
-        sample, schema=FRAME_ROW_DDL
-    )
+    return _degrade(media, ("audio", "video"), FRAME_ROW_DDL, decode, fake)
 
 
 def validate_media(media: DataFrame, max_bytes: int = 1 << 20) -> tuple[DataFrame, DataFrame]:

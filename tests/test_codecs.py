@@ -1,5 +1,5 @@
-"""Pure-stdlib media codecs (functions/codecs.py) + the real 'stdlib'
-decode backend of decode_media: actual PNG/WAV bytes are parsed, not
+"""Pure-stdlib media codecs (functions/codecs.py) + the media operators
+that decode with them: actual PNG/WAV bytes are parsed, not
 sha-pseudo-decoded — dims from IHDR, duration from PCM frame count,
 features from decoded content."""
 
@@ -135,7 +135,7 @@ def test_wav_rejects_garbage():
 
 def test_decode_media_stdlib_backend_decodes_real_bytes(spark):
     """End-to-end through Spark: fetch_payloads fabricates real PNG/WAV
-    payloads; backend='stdlib' must parse THEM — width/height equal to the
+    payloads; decode_media must parse THEM — width/height equal to the
     encoder's seed-derived dims, duration equal to the PCM frame count —
     and label rows by actual backend (png/wav real, others fake)."""
     import hashlib
@@ -149,7 +149,7 @@ def test_decode_media_stdlib_backend_decodes_real_bytes(spark):
     )
 
     media = fetch_payloads(media_spans(dg.documents_df(spark, 60)))
-    feats = decode_media(media, backend="stdlib").toPandas()
+    feats = decode_media(media).toPandas()
     assert len(feats) == media.count()
     assert feats["feature"].map(len).eq(FEATURE_DIM).all()
 
@@ -195,7 +195,7 @@ def test_decode_media_stdlib_degrades_on_corrupt_payload(spark):
         }
     )
     media = spark.createDataFrame(rows)
-    got = decode_media(media, backend="stdlib").toPandas()
+    got = decode_media(media).toPandas()
     assert len(got) == 2
     assert set(got["decode_backend"]) == {"decode-error"}
     assert got["feature"].map(len).nunique() == 1  # still fixed-dim
@@ -238,7 +238,7 @@ def test_jpeg_dimensions_rejects_corruption():
 
 
 def test_decode_media_stdlib_jpeg_header_real_dims(spark):
-    """JPEG rows through the distributed stdlib backend: dimensions must be
+    """JPEG shells through the distributed decode_media: dimensions must be
     the real SOF0 values (marker walk), features pseudo, and the label must
     say header-only so downstream can tell real pixels from pseudo."""
     import pandas as pd
@@ -263,7 +263,7 @@ def test_decode_media_stdlib_jpeg_header_real_dims(spark):
         }
     )
     got = (
-        decode_media(spark.createDataFrame(rows), backend="stdlib")
+        decode_media(spark.createDataFrame(rows))
         .toPandas()
         .set_index("media_ref")
     )
@@ -388,7 +388,7 @@ def test_resize_gray_box_filter_math():
 
 
 def test_resize_images_stdlib_resizes_real_png(spark):
-    """resize_images(backend='stdlib') over an actual synthesized PNG:
+    """resize_images over an actual synthesized PNG:
     output is a decodable grayscale PNG at the target dims whose content
     is the box-filtered source (left-black/right-white splits survive);
     non-PNG payloads degrade to the labeled fake grid."""
@@ -412,7 +412,7 @@ def test_resize_images_stdlib_resizes_real_png(spark):
     }))
     got = {
         r["media_ref"]: r
-        for r in resize_images(media, width=4, height=4, backend="stdlib").collect()
+        for r in resize_images(media, width=4, height=4).collect()
     }
     real = got["m_png"]
     assert real["resize_backend"] == "stdlib-png"
@@ -496,7 +496,7 @@ def test_bmp_pixel_roundtrip_padding_and_unsupported():
 
 
 def test_decode_media_stdlib_gif_bmp_real_pixels(spark):
-    """decode_media(backend='stdlib') on REAL GIF/BMP pixel payloads:
+    """decode_media on REAL GIF/BMP pixel payloads:
     labels flip from -header to full decode and the grid features come
     from the actual pixel content (left-dark/right-light asymmetry)."""
     import pandas as pd
@@ -516,7 +516,7 @@ def test_decode_media_stdlib_gif_bmp_real_pixels(spark):
         "content_type": ["image/gif", "image/bmp"],
         "n_bytes": [1, 1],
     }))
-    got = {r["media_ref"]: r for r in decode_media(media, backend="stdlib").collect()}
+    got = {r["media_ref"]: r for r in decode_media(media).collect()}
     for ref, label in (("m_gif", "stdlib-gif"), ("m_bmp", "stdlib-bmp")):
         row = got[ref]
         assert row["decode_backend"] == label
@@ -551,7 +551,7 @@ def test_resize_images_stdlib_gif_and_bmp(spark):
     }))
     got = {
         r["media_ref"]: r
-        for r in resize_images(media, width=4, height=2, backend="stdlib").collect()
+        for r in resize_images(media, width=4, height=2).collect()
     }
     assert got["m_gif"]["resize_backend"] == "stdlib-gif"
     assert got["m_bmp"]["resize_backend"] == "stdlib-bmp"
@@ -612,7 +612,7 @@ def test_jpeg_decoder_rejects_non_baseline_and_shells():
 
 
 def test_decode_media_stdlib_jpeg_real_pixels(spark):
-    """A real baseline JPEG through the distributed stdlib backend gets
+    """A real baseline JPEG through the distributed decode_media gets
     the full-decode label and content-derived features; a progressive
     variant of the SAME bytes degrades to the header parse."""
     import pandas as pd
@@ -634,7 +634,7 @@ def test_decode_media_stdlib_jpeg_real_pixels(spark):
         "content_type": ["image/jpeg"] * 2,
         "n_bytes": [len(good), len(progressive)],
     }))
-    got = {r["media_ref"]: r for r in decode_media(media, backend="stdlib").collect()}
+    got = {r["media_ref"]: r for r in decode_media(media).collect()}
     base = got["m_base"]
     assert base["decode_backend"] == "stdlib-jpeg"
     assert (base["width"], base["height"]) == (w, h)
@@ -666,7 +666,7 @@ def test_resize_images_stdlib_jpeg(spark):
         "content_type": ["image/jpeg"],
         "n_bytes": [1],
     }))
-    row = resize_images(media, width=4, height=2, backend="stdlib").collect()[0]
+    row = resize_images(media, width=4, height=2).collect()[0]
     assert row["resize_backend"] == "stdlib-jpeg"
     pw, ph, ch, small = decode_png(bytes(row["resized"]))
     assert (pw, ph, ch) == (4, 2, 1)
@@ -722,7 +722,7 @@ def test_decode_media_stdlib_mp4_real_duration(spark):
         "content_type": ["video/mp4"] * 2,
         "n_bytes": [len(good), len(corrupt)],
     }))
-    got = {r["media_ref"]: r for r in decode_media(media, backend="stdlib").collect()}
+    got = {r["media_ref"]: r for r in decode_media(media).collect()}
     assert got["m_mp4"]["decode_backend"] == "stdlib-mp4-header"
     assert got["m_mp4"]["duration_ms"] == 4321
     assert got["m_bad"]["decode_backend"] == "decode-error"
@@ -752,7 +752,7 @@ def test_sample_frames_stdlib_real_wav_windows_and_mp4_grid(spark):
         "content_type": ["audio/wav", "video/mp4"],
         "n_bytes": [len(wav), len(mp4)],
     }))
-    got = sample_frames(media, every_ms=1000, max_frames=8, backend="stdlib").toPandas()
+    got = sample_frames(media, every_ms=1000, max_frames=8).toPandas()
     w = got[got["media_ref"] == "m_wav"].sort_values("frame_idx")
     assert list(w["frame_backend"].unique()) == ["stdlib-wav"]
     assert len(w) == 2  # 2000 ms / 1000 ms

@@ -917,6 +917,29 @@ def test_paths_between_default_cap_bounds_dense_fanout(spark, caplog):
     assert full.count() == 144
 
 
+@pytest.mark.parametrize("op", ["khop", "closeness"])
+def test_bfs_frontier_cap_is_logged_when_it_binds(spark, caplog, op):
+    """khop and the landmark BFS of closeness / harmonic_centrality log a
+    binding ``max_frontier`` as paths_between does: on a 4-spoke star the
+    cap of 1 keeps the smallest spoke at hop 1 and says so."""
+    import logging
+
+    from chatvector_ai_spark.operators.graph import closeness
+
+    star = _e(spark, [("hub", "r", f"s{i}") for i in range(4)])
+    with caplog.at_level(logging.WARNING, logger="chatvector_ai_spark.operators.graph"):
+        if op == "khop":
+            got = sorted(tuple(r) for r in khop(star, ["hub"], k=2, max_frontier=1).collect())
+            assert got == [("hub", 0), ("s0", 1)]
+        else:
+            row = closeness(star, ["hub"], max_hops=2, max_frontier=1).collect()[0]
+            assert (row.n_reached, row.sum_dist) == (1, 1)
+    assert any(f"{op}: frontier cap 1 reached at hop 1" in r.message for r in caplog.records)
+    if op == "khop":
+        empty = khop(star, [])
+        assert empty.columns == ["entity", "hop"] and empty.count() == 0
+
+
 def _e(spark, rows):
     return spark.createDataFrame(rows, "src string, rel string, dst string")
 

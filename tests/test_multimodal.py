@@ -1,14 +1,20 @@
 """Multimodal span plumbing: explode order, fetch metadata, decode shape,
-validation split (stubbed codec, real Spark path)."""
+validation split, and the per-row degrade contract of the five media
+operators (real stdlib codecs, real Spark path)."""
+
+import hashlib
 
 import numpy as np
 import pytest
 
 from chatvector_ai_spark import datagen as dg
+from chatvector_ai_spark.functions.codecs import decode_png
 from chatvector_ai_spark.operators.multimodal import (
     FEATURE_DIM,
+    audio_phash,
     decode_media,
     fetch_payloads,
+    image_phash,
     media_spans,
     resize_images,
     sample_frames,
@@ -44,12 +50,18 @@ def test_fetch_is_deterministic_with_typed_metadata(media):
     assert bytes(again) == bytes(one["payload"])
 
 
-def test_decode_fake_backend_features(spark, media):
+def test_decode_features_fixed_dim_and_dims(spark, media):
     feats = decode_media(media).toPandas()
     assert len(feats) == media.count()
     assert feats["feature"].map(len).eq(FEATURE_DIM).all()
-    norms = feats["feature"].map(lambda v: float(np.linalg.norm(np.asarray(v))))
+    # the sha-seeded fake is a unit vector; decoded features are [0, 1]
+    fake = feats[feats["decode_backend"] == "fake"]
+    assert len(fake) > 0
+    norms = fake["feature"].map(lambda v: float(np.linalg.norm(np.asarray(v))))
     assert ((norms - 1.0).abs() < 1e-5).all()
+    real = feats[feats["decode_backend"].str.startswith("stdlib-")]
+    assert len(real) > 0
+    assert real["feature"].map(lambda v: 0.0 <= min(v) and max(v) <= 1.0).all()
     img = feats[feats["kind"] == "image"]
     if len(img):
         assert img["width"].notna().all() and img["duration_ms"].isna().all()
@@ -58,23 +70,22 @@ def test_decode_fake_backend_features(spark, media):
         assert au["duration_ms"].notna().all() and au["width"].isna().all()
 
 
-def test_real_backend_is_explicit_stub(media):
-    with pytest.raises(NotImplementedError):
-        decode_media(media, backend="pillow")
-
-
 def test_resize_images_fixed_grid(spark, media):
     out = resize_images(media, width=8, height=8).toPandas()
     n_images = media.where("kind = 'image'").count()
     assert len(out) == n_images
     assert (out["width"] == 8).all() and (out["height"] == 8).all()
-    assert out["resized"].map(len).eq(64).all()
+    # decoded images come back as 8x8 grayscale PNGs, the fake as 64 bytes
+    for _, row in out.iterrows():
+        if row["resize_backend"] == "fake":
+            assert len(row["resized"]) == 64
+        else:
+            assert row["resize_backend"].startswith("stdlib-")
+            assert decode_png(bytes(row["resized"]))[:3] == (8, 8, 1)
     # deterministic: same ref → same thumbnail bytes
     if len(out) > 1:
         by_ref = out.groupby("media_ref")["resized"].nunique()
         assert (by_ref == 1).all()
-    with pytest.raises(NotImplementedError):
-        resize_images(media, backend="pillow")
 
 
 def test_sample_frames_bounded_and_ordered(spark, media):
@@ -88,8 +99,6 @@ def test_sample_frames_bounded_and_ordered(spark, media):
     assert (per_span["min"] == 0).all()
     assert (per_span["max"] == per_span["count"] - 1).all()  # contiguous
     assert frames["frame_feature"].map(len).eq(FEATURE_DIM).all()
-    with pytest.raises(NotImplementedError):
-        sample_frames(media, backend="ffmpeg")
 
 
 def test_validation_splits_oversize(spark, media):
@@ -118,7 +127,7 @@ def test_stdlib_backend_decodes_gif_and_bmp_headers(spark):
         "content_type": ["image/gif", "image/bmp"],
         "n_bytes": [24, 54],
     }))
-    got = {r["media_ref"]: r for r in decode_media(media, backend="stdlib").collect()}
+    got = {r["media_ref"]: r for r in decode_media(media).collect()}
     assert got["m1"]["decode_backend"] == "stdlib-gif-header"
     assert (got["m1"]["width"], got["m1"]["height"]) == (320, 200)
     assert got["m2"]["decode_backend"] == "stdlib-bmp-header"
@@ -151,7 +160,7 @@ def test_sample_frames_stdlib_mp4_uses_real_sample_bytes(spark):
         "content_type": ["video/mp4", "video/mp4"],
         "n_bytes": [len(full), len(shell)],
     }))
-    got = sample_frames(media, every_ms=500, max_frames=4, backend="stdlib").toPandas()
+    got = sample_frames(media, every_ms=500, max_frames=4).toPandas()
     f = got[got["media_ref"] == "m_full"].sort_values("frame_idx")
     assert list(f["frame_backend"].unique()) == ["stdlib-mp4"]
     assert list(f["frame_ms"]) == [0, 500]  # duration 1000ms / 500ms grid
@@ -180,16 +189,17 @@ def test_image_phash_stable_under_tiny_edit_and_bands(spark):
     edited[5 * 16 + 12] = 254  # one white pixel dimmed imperceptibly
     inverted = bytes(255 - v for v in base)
     media = spark.createDataFrame(pd.DataFrame({
-        "doc_id": ["d0"] * 3 + ["d1"],
-        "span_idx": [0, 1, 2, 0],
-        "kind": ["image"] * 3 + ["audio"],
-        "media_ref": ["orig", "edit", "inv", "skip"],
+        "doc_id": ["d0"] * 5 + ["d1"],
+        "span_idx": [0, 1, 2, 3, 4, 0],
+        "kind": ["image"] * 5 + ["audio"],
+        "media_ref": ["orig", "edit", "inv", "opaque1", "opaque2", "skip"],
         "payload": [bytes(encode_png(16, 16, bytes(base))),
                     bytes(encode_png(16, 16, bytes(edited))),
                     bytes(encode_png(16, 16, inverted)),
+                    b"opaque one", b"opaque two",
                     b"RIFFxxxxWAVE"],
     }))
-    got = {r["media_ref"]: r for r in image_phash(media, backend="stdlib").collect()}
+    got = {r["media_ref"]: r for r in image_phash(media).collect()}
     assert "skip" not in got  # non-image spans filtered JVM-side
     assert got["orig"]["phash_backend"] == "stdlib-png"
     assert got["orig"]["phash"] == got["edit"]["phash"]  # tiny edit: identical
@@ -200,10 +210,11 @@ def test_image_phash_stable_under_tiny_edit_and_bands(spark):
         assert got["orig"][bname] == (hv >> (48 - 16 * i)) & 0xFFFF
     assert [got["orig"][f"band{i}"] for i in range(4)] == \
         [got["edit"][f"band{i}"] for i in range(4)]
-    # fake backend: deterministic and payload-derived
-    f1 = {r["media_ref"]: r["phash"] for r in image_phash(media, backend="fake").collect()}
-    f2 = {r["media_ref"]: r["phash"] for r in image_phash(media, backend="fake").collect()}
-    assert f1 == f2 and f1["orig"] != f1["inv"]
+    # undecodable payloads: the fake, the first 64 bits of sha256(payload)
+    for ref, payload in (("opaque1", b"opaque one"), ("opaque2", b"opaque two")):
+        assert got[ref]["phash_backend"] == "fake"
+        sha = hashlib.sha256(payload).digest()
+        assert got[ref]["phash"] == int.from_bytes(sha[:8], "big", signed=True)
 
 
 def test_image_neardup_pairs_band_lsh_and_hamming(spark):
@@ -232,7 +243,7 @@ def test_image_neardup_pairs_band_lsh_and_hamming(spark):
                     bytes(encode_png(16, 16, bytes(near))),
                     bytes(encode_png(16, 16, far))],
     }))
-    ph = image_phash(media, backend="stdlib")
+    ph = image_phash(media)
     pairs = {(r.a_ref, r.b_ref): r.hamming for r in image_neardup_pairs(ph, max_hamming=3).collect()}
     assert ("A", "A2") in pairs and pairs[("A", "A2")] <= 3  # near pair found
     assert not any("B" in p for p in pairs)                   # far image excluded
@@ -259,12 +270,67 @@ def test_audio_phash_envelope_and_cross_modal_pairing(spark):
         "payload": [bytes(encode_wav(loud_first)), bytes(encode_wav(gain_rode)),
                     bytes(encode_wav(reversed_)), b"\x89PNG\r\n\x1a\nxxxx"],
     }))
-    got = {r["media_ref"]: r for r in audio_phash(media, backend="stdlib").collect()}
+    got = {r["media_ref"]: r for r in audio_phash(media).collect()}
     assert "skip" not in got  # non-audio spans filtered JVM-side
     assert got["A"]["phash_backend"] == "stdlib-wav"
     assert got["A"]["phash"] == got["A2"]["phash"]   # gain ride: same envelope
     assert got["A"]["phash"] != got["R"]["phash"]    # reversed: different
     # the shared band/DDL contract means the image pair generator works as-is
     pairs = {(r.a_ref, r.b_ref) for r in
-             image_neardup_pairs(audio_phash(media, backend="stdlib"), max_hamming=3).collect()}
+             image_neardup_pairs(audio_phash(media), max_hamming=3).collect()}
     assert ("A", "A2") in pairs and not any("R" in p for p in pairs)
+
+
+def _degrade_payloads():
+    from chatvector_ai_spark.functions.codecs import encode_mp4_shell, encode_png, encode_wav
+
+    return {
+        "trunc_png": encode_png(16, 16, bytes(256))[:20],
+        "trunc_wav": encode_wav([5] * 100)[:30],
+        "mp4_shell": encode_mp4_shell(3500),
+        "opaque": b"not-an-image",
+    }
+
+
+# per operator: the span kind it reads, its label column, and the label each
+# payload of _degrade_payloads gets
+_DEGRADE_CASES = {
+    "decode_media": (decode_media, "image", "decode_backend", {
+        "trunc_png": "decode-error", "trunc_wav": "decode-error",
+        "mp4_shell": "stdlib-mp4-header", "opaque": "fake"}),
+    "resize_images": (lambda m: resize_images(m, width=4, height=4), "image", "resize_backend", {
+        "trunc_png": "decode-error", "trunc_wav": "fake", "mp4_shell": "fake", "opaque": "fake"}),
+    "image_phash": (image_phash, "image", "phash_backend", {
+        "trunc_png": "decode-error", "trunc_wav": "fake", "mp4_shell": "fake", "opaque": "fake"}),
+    "audio_phash": (audio_phash, "audio", "phash_backend", {
+        "trunc_png": "fake", "trunc_wav": "decode-error", "mp4_shell": "fake", "opaque": "fake"}),
+    "sample_frames": (lambda m: sample_frames(m, every_ms=500, max_frames=4), "video",
+                      "frame_backend", {
+        "trunc_png": "fake", "trunc_wav": "decode-error",
+        "mp4_shell": "stdlib-mp4-header", "opaque": "fake"}),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_DEGRADE_CASES))
+def test_media_operators_degrade_per_row(spark, op):
+    """The degrade contract of every media operator: a truncated PNG, a
+    truncated WAV, an MP4 shell and opaque bytes in one batch each yield
+    their own labelled row(s) — a real header parse, the sha-seeded fake
+    or ``decode-error`` — and the Spark task never fails."""
+    import pandas as pd
+
+    run, kind, label_col, expected = _DEGRADE_CASES[op]
+    payloads = _degrade_payloads()
+    media = spark.createDataFrame(pd.DataFrame({
+        "doc_id": ["d0"] * len(payloads),
+        "span_idx": list(range(len(payloads))),
+        "span_offset": list(range(len(payloads))),
+        "kind": [kind] * len(payloads),
+        "media_ref": list(payloads),
+        "payload": list(payloads.values()),
+        "content_type": ["application/octet-stream"] * len(payloads),
+        "n_bytes": [len(p) for p in payloads.values()],
+    })).repartition(1)
+    got = run(media).toPandas()
+    labels = got.groupby("media_ref")[label_col].agg(set).to_dict()
+    assert labels == {ref: {label} for ref, label in expected.items()}
