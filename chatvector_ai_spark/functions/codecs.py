@@ -1,18 +1,20 @@
-"""Pure-stdlib media codecs: a REAL (non-fake) decode backend for the
-multimodal stages.
+"""Pure-stdlib media codecs: the decoders behind the multimodal operators.
 
 The sandbox has no libjpeg/ffmpeg, but PNG and WAV need nothing beyond the
 standard library: PNG is zlib-compressed scanlines behind an 8-byte magic
 and chunked container (RFC 2083), WAV is RIFF-framed PCM readable with the
-stdlib ``wave`` module. These codecs make ``decode_media(backend="stdlib")``
-decode actual bytes — real width/height from IHDR, real duration from the
-PCM frame count, features from the decoded samples. GIF decodes fully too
-(the GIF LZW variant is integer arithmetic, no external codec needed), as
-does uncompressed 24-bit BMP. Baseline JPEG decodes fully in the sibling
-module ``functions/jpegcodec.py`` (Huffman + dequant + IDCT in pure
-Python); this module keeps the fast marker-walking header parse that the
-dispatch falls back to for non-baseline JPEG shapes. Formats that need
-external libraries end-to-end (MP4) stay fully fake.
+stdlib ``wave`` module. The format table of ``operators/multimodal.py``
+decodes actual bytes with these codecs — real width/height from IHDR, real
+duration from the PCM frame count, features from the decoded samples. GIF
+decodes fully too (the GIF LZW variant is integer arithmetic, no external
+codec needed), as does uncompressed 24-bit BMP. Baseline JPEG decodes fully
+in the sibling module ``functions/jpegcodec.py`` (Huffman + dequant + IDCT
+in pure Python); this module keeps the fast marker-walking header parse
+that the format table falls back to for non-baseline JPEG shapes. MP4
+reads its movie-header duration and its sample table (offsets, sizes and
+times of the samples) from the box tree; decoding the samples themselves
+needs an external codec, so a sampled frame's feature is the byte-band
+histogram of its sample's bytes (``byte_band_features``).
 
 Encoders exist so tests and the synthetic fetch stage can fabricate valid
 files deterministically; they are NOT a production write path.
@@ -566,8 +568,8 @@ def encode_bmp_shell(width: int, height: int) -> bytes:
 
 # ---------------------------------------------------------------------------
 # MP4 — real ISO BMFF box walk for the movie-header duration (the metadata
-# a frame-sampling planner reads); sample decode genuinely needs ffmpeg and
-# stays with the labeled fake backend.
+# a frame-sampling planner reads) and the sample table; sample decode
+# genuinely needs ffmpeg, so no codec here decodes sample pixels.
 # ---------------------------------------------------------------------------
 
 

@@ -16,8 +16,9 @@ jpegcodec.py`` for PNG, GIF, BMP and baseline-JPEG pixels, WAV samples and
 MP4 sample tables, plus the header parse it falls back to) and one per-row
 degrade loop (``_degrade``). A payload no format takes gets a deterministic
 sha-seeded fake row labelled ``fake``; a corrupt one gets the same fake
-labelled ``decode-error``, so one bad blob degrades its own row and never
-fails the Spark task. Each operator's label column (``decode_backend``,
+labelled ``decode-error``, and so does a NULL one (seeded from empty
+bytes), so one bad blob degrades its own row and never fails the Spark
+task. Each operator's label column (``decode_backend``,
 ``resize_backend``, ``phash_backend``, ``frame_backend``) says which of a
 real decode (``stdlib-<format>``), a header-only parse
 (``stdlib-<format>-header``), the fake or a decode error produced the row,
@@ -257,8 +258,9 @@ def _degrade(
     """Run *decode* per payload row in Arrow batches: ``decode(data, kind)``
     returns the row's output values (one tuple each; a 1→N operator
     returns several), or None when no format takes the payload. None
-    becomes ``fake(data, kind, "fake")`` and a ``_DECODE_ERRORS`` raise
-    becomes ``fake(data, kind, "decode-error")``. Output rows are the
+    becomes ``fake(data, kind, "fake")``, and a ``_DECODE_ERRORS`` raise
+    ``fake(data, kind, "decode-error")``; a NULL payload gets
+    ``fake(b"", kind, "decode-error")``. Output rows are the
     input's key columns (those of ``_KEY_COLS`` in *ddl*) followed by the
     values. Only spans of *kinds* reach Python (JVM-side filter; None
     keeps every span)."""
@@ -269,13 +271,16 @@ def _degrade(
         for pdf in batches:
             rows = []
             for *key, kind, payload in zip(*(pdf[k] for k in keys), pdf["kind"], pdf["payload"]):
-                data = bytes(payload)
-                try:
-                    out = decode(data, kind)
-                except _DECODE_ERRORS:
-                    out = fake(data, kind, "decode-error")
-                if out is None:
-                    out = fake(data, kind, "fake")
+                if payload is None:  # a ref not fetched: no bytes to decode
+                    out = fake(b"", kind, "decode-error")
+                else:
+                    data = bytes(payload)
+                    try:
+                        out = decode(data, kind)
+                    except _DECODE_ERRORS:
+                        out = fake(data, kind, "decode-error")
+                    if out is None:
+                        out = fake(data, kind, "fake")
                 rows.extend((*key, *values) for values in out)
             yield pd.DataFrame(rows, columns=cols)
 

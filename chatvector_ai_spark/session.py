@@ -4,6 +4,9 @@ Defaults are chosen for the 100 TB design point and verified at local scale:
 AQE (runtime re-planning + skew-join splitting), Arrow-batched Python UDFs
 with a bounded batch size (the Python-worker memory analog of the reference's
 provider batch size, gemini.py:32), and explicit shuffle parallelism.
+A local master also gets a host-sized driver heap and direct-memory cap
+(``local_memory``) and a C1-only JIT: the local JVM runs many short jobs,
+for which C2's compiles cost more CPU than they save.
 ``local_frame`` makes every DataFrame the engine builds from driver-side rows.
 """
 
@@ -40,6 +43,7 @@ def get_spark(
     if master:
         builder = builder.master(master)
     heap, direct = local_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+    local = (master or "").startswith("local")
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # Local-mode JVM heap: Spark's 1g default starves a 32-slot local
@@ -52,7 +56,7 @@ def get_spark(
         # memory in the spark-submit conf instead.
         **(
             {"spark.driver.memory": os.getenv("CVS_DRIVER_MEMORY", heap)}
-            if (master or "").startswith("local")
+            if local
             and "spark.driver.memory" not in (extra_conf or {})
             else {}
         ),
@@ -73,7 +77,21 @@ def get_spark(
         # 16 MiB arrow buffers. The cap is sized from the host
         # (``local_memory``); on a real cluster this is per-executor and
         # set by the submit conf.
-        "spark.driver.extraJavaOptions": f"-XX:MaxDirectMemorySize={direct}",
+        # A local driver also compiles with C1 only (TieredStopAtLevel=1).
+        # It is a short-lived JVM that plans and schedules many small jobs
+        # (87 per perfbench ``pipeline`` pass), and its generated classes
+        # run a few thousand rows each, so C2's peak-optimised recompiles of
+        # the planner, the scheduler and that code rarely run long enough
+        # to pay back. Measured at local[4] on a 4-core host, per JVM
+        # thread (tools/cpu_by_thread.py): C2 took 20.1 s and C1 3.6 s of
+        # a 47 s ``pipeline`` pass, executor tasks 9.1 s; C1 only, the
+        # compiler threads took 2.6 s and the tasks 10.4 s. Over 10 paired
+        # runs, pass CPU fell 48.2 -> 30.8 s (``pipeline``) and 18.5 ->
+        # 9.9 s (``analytics``); a cold 20,000-doc build ran in 34-35 s
+        # instead of 39-40 s. Cluster drivers and executors keep full
+        # tiered compilation for their long-running tasks.
+        "spark.driver.extraJavaOptions": f"-XX:MaxDirectMemorySize={direct}"
+        + (" -XX:TieredStopAtLevel=1" if local else ""),
         "spark.executor.extraJavaOptions": f"-XX:MaxDirectMemorySize={direct}",
         # zstd over the default snappy: ~16% fewer bytes per snapshot, and
         # on this box the write path is memory-bandwidth-bound, not

@@ -289,6 +289,7 @@ def _degrade_payloads():
         "trunc_wav": encode_wav([5] * 100)[:30],
         "mp4_shell": encode_mp4_shell(3500),
         "opaque": b"not-an-image",
+        "null": None,
     }
 
 
@@ -297,26 +298,30 @@ def _degrade_payloads():
 _DEGRADE_CASES = {
     "decode_media": (decode_media, "image", "decode_backend", {
         "trunc_png": "decode-error", "trunc_wav": "decode-error",
-        "mp4_shell": "stdlib-mp4-header", "opaque": "fake"}),
+        "mp4_shell": "stdlib-mp4-header", "opaque": "fake", "null": "decode-error"}),
     "resize_images": (lambda m: resize_images(m, width=4, height=4), "image", "resize_backend", {
-        "trunc_png": "decode-error", "trunc_wav": "fake", "mp4_shell": "fake", "opaque": "fake"}),
+        "trunc_png": "decode-error", "trunc_wav": "fake", "mp4_shell": "fake", "opaque": "fake",
+        "null": "decode-error"}),
     "image_phash": (image_phash, "image", "phash_backend", {
-        "trunc_png": "decode-error", "trunc_wav": "fake", "mp4_shell": "fake", "opaque": "fake"}),
+        "trunc_png": "decode-error", "trunc_wav": "fake", "mp4_shell": "fake", "opaque": "fake",
+        "null": "decode-error"}),
     "audio_phash": (audio_phash, "audio", "phash_backend", {
-        "trunc_png": "fake", "trunc_wav": "decode-error", "mp4_shell": "fake", "opaque": "fake"}),
+        "trunc_png": "fake", "trunc_wav": "decode-error", "mp4_shell": "fake", "opaque": "fake",
+        "null": "decode-error"}),
     "sample_frames": (lambda m: sample_frames(m, every_ms=500, max_frames=4), "video",
                       "frame_backend", {
         "trunc_png": "fake", "trunc_wav": "decode-error",
-        "mp4_shell": "stdlib-mp4-header", "opaque": "fake"}),
+        "mp4_shell": "stdlib-mp4-header", "opaque": "fake", "null": "decode-error"}),
 }
 
 
 @pytest.mark.parametrize("op", sorted(_DEGRADE_CASES))
 def test_media_operators_degrade_per_row(spark, op):
     """The degrade contract of every media operator: a truncated PNG, a
-    truncated WAV, an MP4 shell and opaque bytes in one batch each yield
-    their own labelled row(s) — a real header parse, the sha-seeded fake
-    or ``decode-error`` — and the Spark task never fails."""
+    truncated WAV, an MP4 shell, opaque bytes and a NULL payload (a ref
+    not fetched) in one batch each yield their own labelled row(s) — a
+    real header parse, the sha-seeded fake or ``decode-error`` — and the
+    Spark task never fails."""
     import pandas as pd
 
     run, kind, label_col, expected = _DEGRADE_CASES[op]
@@ -329,7 +334,7 @@ def test_media_operators_degrade_per_row(spark, op):
         "media_ref": list(payloads),
         "payload": list(payloads.values()),
         "content_type": ["application/octet-stream"] * len(payloads),
-        "n_bytes": [len(p) for p in payloads.values()],
+        "n_bytes": [len(p or b"") for p in payloads.values()],
     })).repartition(1)
     got = run(media).toPandas()
     labels = got.groupby("media_ref")[label_col].agg(set).to_dict()

@@ -40,3 +40,15 @@ def test_local_frame_rows_equal_the_list_built_frame(spark):
     assert arrow.count() == listed.count() > 0
     assert arrow.exceptAll(listed).count() == 0
     assert listed.exceptAll(arrow).count() == 0
+
+
+def test_local_session_jvm_runs_the_engine_flags(spark):
+    """The JVM options of a local session reach the running JVM: the
+    host-sized direct-memory cap and the C1-only JIT (the fixture sets only
+    ``spark.driver.memory``, so both are the defaults)."""
+    import re
+
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory  # noqa: SLF001
+    args = list(mx.getRuntimeMXBean().getInputArguments())
+    assert "-XX:TieredStopAtLevel=1" in args
+    assert any(re.fullmatch(r"-XX:MaxDirectMemorySize=\d+m", a) for a in args)
