@@ -194,7 +194,7 @@ def main() -> int:
             flagship_query(spark, Warehouse(wh_root), run.input_key).collect()
             fpb_sec = round(time.time() - t0, 3)
             wh = Warehouse(wh_root)
-            edir = wh._entry_data_dir(wh.latest_entry("edges", run.input_key))  # noqa: SLF001
+            edir = wh._entry_data_dirs(wh.latest_entry("edges", run.input_key))[-1]  # noqa: SLF001
             per_bucket = {}
             for base, _, files in os.walk(edir):
                 pq = [f for f in files if f.endswith(".parquet")]

@@ -1,1 +1,1 @@
-"""Column-level functions: vector math, embeddings, tokenization."""
+"""Column-level functions: vector math, tokenization, media codecs."""

@@ -2,7 +2,6 @@
 
 from chatvector_ai_spark.operators.canonicalize import (  # noqa: F401
     canonical_map,
-    canonicalize_triples,
     linking_edges,
 )
 from chatvector_ai_spark.operators.dedup import (  # noqa: F401

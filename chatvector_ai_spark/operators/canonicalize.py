@@ -47,27 +47,3 @@ def canonical_map(linked_mentions: DataFrame, alias_dict: DataFrame) -> DataFram
         .select(F.col("entity").alias("entity_id"), F.col("component").alias("canonical_entity"))
     )
 
-
-def canonicalize_triples(
-    triples_linked: DataFrame,
-    linked_mentions: DataFrame,
-    alias_dict: DataFrame,
-) -> DataFrame:
-    """Rewrite subj/obj entity ids to their component representatives."""
-    cmap = canonical_map(linked_mentions, alias_dict)
-    out = (
-        triples_linked.join(
-            F.broadcast(cmap.withColumnRenamed("entity_id", "subj_entity").withColumnRenamed("canonical_entity", "subj_canon")),
-            "subj_entity",
-            "left",
-        )
-        .join(
-            F.broadcast(cmap.withColumnRenamed("entity_id", "obj_entity").withColumnRenamed("canonical_entity", "obj_canon")),
-            "obj_entity",
-            "left",
-        )
-        .withColumn("subj_entity", F.coalesce(F.col("subj_canon"), F.col("subj_entity")))
-        .withColumn("obj_entity", F.coalesce(F.col("obj_canon"), F.col("obj_entity")))
-        .drop("subj_canon", "obj_canon")
-    )
-    return out

@@ -4,13 +4,16 @@ The reference's LLM extension point (providers/base.py:124-172) becomes a
 deterministic rule-based extractor (oracle.svo) running inside mapInPandas.
 Like stage 1 this is narrow and shuffle-free.
 
-Embedding policy: triples normally carry NO vector column. With
+Embedding policy: the chunks table carries the chunk embedding
+(``ingest_chunks(embed_dim=)``); triples carry none, except with
 ``embed_if_surface_in`` (the small set of lowercased ambiguous dictionary
 aliases — the only surfaces whose linking decision the embedding term can
-change), the UDF *recomputes* the chunk embedding for just those rows from
-``chunk_text`` (hash embeddings are pure functions of the text, so the
-value is identical to the chunks table's) — the dense embedding column
-never crosses Arrow into this stage at all.
+change). Then the UDF *recomputes* the chunk embedding for just the triples
+with such a subject or object, from ``chunk_text`` (hash embeddings are
+pure functions of the text, so the value is identical to the chunks
+table's), and leaves it NULL everywhere else — the dense embedding column
+never crosses Arrow into this stage at all. That sparse column is the one
+embedding ``link.link_mentions`` scores with.
 
 Row-level failure semantics mirror the reference's per-row fallback
 (query_service.py:42-60) and DLQ-without-payload contract
@@ -88,40 +91,35 @@ def classify_extraction_error(exc: Exception) -> tuple[str, bool]:
 
 def extract_triples_df(
     chunks: DataFrame,
-    keep_embedding: bool = True,
     embed_if_surface_in: set[str] | None = None,
-    embed_dim: int = EMBEDDING_DIM,
     extractor=None,
-    max_attempts: int = EXTRACT_MAX_ATTEMPTS,
 ) -> DataFrame:
-    """chunks → raw triples (+ sparse/dense chunk embedding, + _error marker).
+    """chunks → raw triples (+ sparse chunk embedding, + _error marker).
 
     Filter ``_error IS NULL`` for good rows; ``quarantine_df`` projects the
     failures. The text-only filter is pushed before the Python stage so
     media rows never cross into the worker.
 
-    - ``keep_embedding=True`` and chunks carry one: dense pass-through
-      (legacy path — Arrow-transfers the vector column).
-    - ``embed_if_surface_in={...}``: sparse recompute (preferred; see
-      module docstring). Overrides the dense path.
-    - neither: no embedding column in the output.
+    - ``embed_if_surface_in={...}``: an ``embedding`` column, the chunk's
+      recomputed embedding on good rows whose lowercased subject or object
+      is in the set and NULL on every other row (see module docstring).
+      Without it the output has no ``embedding`` column.
     - ``extractor``: chunk_text → iterable of svo.Triple; defaults to the
       rule-based oracle. Serialized into the UDF closure (tests inject
       failing extractors; a model-backed one plugs in the same way).
     """
     extract_fn = extractor or extract_triples
     sparse = embed_if_surface_in is not None
-    dense = keep_embedding and not sparse and "embedding" in chunks.columns
     if _TENANT_COL not in chunks.columns:
         chunks = chunks.withColumn(_TENANT_COL, F.lit(None).cast("string"))
-    src_cols = _SRC_COLS + [_TENANT_COL] + (["embedding"] if dense else [])
-    narrowed = chunks.where((F.col("kind") == "text") & (F.col("chunk_text") != "")).select(*src_cols)
+    narrowed = chunks.where((F.col("kind") == "text") & (F.col("chunk_text") != "")).select(
+        *_SRC_COLS, _TENANT_COL
+    )
 
-    has_emb_out = sparse or dense
     out_ddl = (
         TRIPLE_ROW_DDL
         + ", tenant_id string"
-        + (", embedding array<float>" if has_emb_out else "")
+        + (", embedding array<float>" if sparse else "")
         + ", _error string, _error_code string, _retryable boolean, _attempts int"
     )
     names = [c.split(" ")[0] for c in out_ddl.split(", ")]
@@ -133,7 +131,6 @@ def extract_triples_df(
             rows: list[dict] = []
             emb_texts: list[str] = []
             emb_slots: list[int] = []
-            dense_embs = pdf["embedding"].tolist() if dense else None
             tenants = pdf[_TENANT_COL].tolist()
             cols = [pdf[c].tolist() for c in _SRC_COLS]
             for i, (doc_id, chunk_id, chunk_index, span_idx, span_offset, _kind, chunk_text) in enumerate(
@@ -145,7 +142,7 @@ def extract_triples_df(
                 triples_out = None
                 err: Exception | None = None
                 err_code, err_retryable = None, None
-                while attempts < max_attempts:
+                while attempts < EXTRACT_MAX_ATTEMPTS:
                     attempts += 1
                     try:
                         triples_out = list(extract_fn(chunk_text))
@@ -178,9 +175,7 @@ def extract_triples_df(
                             "_retryable": None,
                             "_attempts": None,
                         }
-                        if dense:
-                            row["embedding"] = dense_embs[i]
-                        elif sparse:
+                        if sparse:
                             row["embedding"] = None
                             if (
                                 t.subj.lower() in embed_if_surface_in
@@ -206,7 +201,7 @@ def extract_triples_df(
                             "obj_start": None,
                             "obj_end": None,
                             "conf": None,
-                            "embedding": None,  # dropped unless has_emb_out
+                            "embedding": None,  # dropped unless sparse
                             "_error": f"{type(err).__name__}: {err}",
                             "_error_code": err_code,
                             "_retryable": err_retryable,
@@ -214,7 +209,7 @@ def extract_triples_df(
                         }
                     )
             if sparse and emb_texts:
-                mat = embed_batch(emb_texts, dim=embed_dim)
+                mat = embed_batch(emb_texts, dim=EMBEDDING_DIM)
                 for slot, vec in zip(emb_slots, mat):
                     rows[slot]["embedding"] = list(vec)
             yield pd.DataFrame(rows, columns=names)

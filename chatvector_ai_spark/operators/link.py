@@ -5,9 +5,15 @@ equi-joined to the alias dictionary on the lowercased surface form with an
 explicit ``broadcast()`` hint (the dictionary is the small dimension), then
 disambiguated with the reference reranker's combined-score shape
 (similarity.py:45-50): 0.7 · cosine(chunk_embedding, alias_embedding)
-+ 0.3 · lexical_overlap(surface, canonical), top-1 per mention via a
-groupBy struct-max (map-side combinable; ties resolve to the greatest
++ 0.3 · lexical_overlap(surface, canonical), top-1 per mention via an
+array_max over the alias's candidate array (ties resolve to the greatest
 entity_id) — all JVM-side expressions, no Python in this stage.
+
+There is one embedding path: the chunk embedding arrives on the mention
+rows themselves. Extract recomputes it only on triples whose subject or
+object is an ambiguous alias (``extract_triples_df(embed_if_surface_in=)``)
+and leaves it NULL elsewhere, so this stage reads no chunk table and every
+other mention scores lexically.
 
 Unmatched surfaces get a deterministic surrogate node id ("S:<surface>") so
 canonicalization can still cluster repeated unknown entities.
@@ -58,28 +64,22 @@ def mentions_from_triples(triples: DataFrame) -> DataFrame:
     return subj.unionByName(obj)
 
 
-def link_mentions(
-    mentions: DataFrame,
-    alias_dict: DataFrame,
-    chunks: DataFrame | None = None,
-) -> DataFrame:
+def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """Best-entity assignment per mention occurrence.
 
     Output: mention columns + entity_id, canonical, link_score, linked(bool).
 
     Embedding strategy (the 100 TB concern): the embedding term only
     matters where it can change a decision — mentions whose surface matches
-    an AMBIGUOUS alias (≥2 candidate entities). Passing ``chunks`` (the
-    chunk table with its ``embedding`` column) enables the two-phase plan:
-    unambiguous mentions are scored lexically with no embedding access at
-    all, and only the ambiguous sliver fetches chunk embeddings via a
-    broadcast semi-join — so triple/mention tables never carry a vector
-    column and the scan never decodes one. If ``mentions`` itself carries
-    an ``embedding`` column the single-phase plan scores every row. Hash
-    embeddings are L2-normalized at creation (oracle/hashembed.py), so the
-    cosine term is a single dot-product fold.
+    an AMBIGUOUS alias (≥2 candidate entities). ``mentions`` carries the
+    chunk embedding only there: extract's ``embed_if_surface_in`` puts it
+    on just those triples, NULL elsewhere, so mention tables never carry a
+    dense vector column. A row with an embedding gets the combined score;
+    a row without one scores lexically. With no ``embedding`` column every
+    row scores lexically. Hash embeddings are L2-normalized at creation
+    (oracle/hashembed.py), so the cosine term is a single dot-product fold.
     """
-    has_emb = "embedding" in mentions.columns
+    emb = F.col("embedding") if "embedding" in mentions.columns else None
 
     # The lexical term |tokens(surface) ∩ tokens(canonical)| / |tokens(surface)|
     # depends only on (alias, canonical): the equi-join key IS lower(surface),
@@ -115,50 +115,22 @@ def link_mentions(
     w_r = RERANK_RETRIEVAL_WEIGHT / (RERANK_RETRIEVAL_WEIGHT + RERANK_LEXICAL_WEIGHT)
     w_l = RERANK_LEXICAL_WEIGHT / (RERANK_RETRIEVAL_WEIGHT + RERANK_LEXICAL_WEIGHT)
 
-    def argmax_cand(emb_col=None, coalesce_emb=True):
-        """array_max over candidates scored in-place; comparison key is
-        (coalesce(score, -1), entity_id) — identical ordering to the old
-        groupBy struct-max."""
-
-        def scored(c):
-            s = F.lit(w_l) * c["_alias_lex"]
-            if emb_col is not None:
-                term = dot(emb_col, c["alias_embedding"])
-                if coalesce_emb:
-                    term = F.coalesce(term, F.lit(0.0))
-                s = F.lit(w_r) * term + s
-            return F.struct(
-                F.coalesce(s, F.lit(-1.0)).alias("_s0"),
-                c["entity_id"].alias("_e"),
-                s.alias("_s"),
-                c["canonical"].alias("_c"),
-            )
-
-        return F.array_max(F.transform(F.col("_cands"), scored))
-
-    if has_emb:
-        # null-safe: rows with a (sparse) embedding get the full combined
-        # score; rows without one — where the term cannot change the
-        # decision — score lexically, matching the two-phase semantics
-        cand = cand.withColumn("_b", argmax_cand(F.col("embedding"))).drop("embedding")
-    elif chunks is not None and "embedding" in chunks.columns:
-        # two-phase: unambiguous mentions (≤1 candidate) never touch an
-        # embedding; only the ambiguous sliver fetches chunk vectors via a
-        # broadcast semi-join.
-        plain = cand.where(F.coalesce(F.size("_cands"), F.lit(0)) <= 1).withColumn(
-            "_b", argmax_cand()
+    def scored(c):
+        # argmax key (coalesce(score, -1), entity_id): the ordering of the
+        # old groupBy struct-max; a NULL embedding adds nothing to the score
+        s = F.lit(w_l) * c["_alias_lex"]
+        if emb is not None:
+            s = F.lit(w_r) * F.coalesce(dot(emb, c["alias_embedding"]), F.lit(0.0)) + s
+        return F.struct(
+            F.coalesce(s, F.lit(-1.0)).alias("_s0"),
+            c["entity_id"].alias("_e"),
+            s.alias("_s"),
+            c["canonical"].alias("_c"),
         )
-        amb = cand.where(F.size("_cands") > 1)
-        amb_keys = amb.select("chunk_id").distinct()
-        emb_map = chunks.join(F.broadcast(amb_keys), "chunk_id", "left_semi").select(
-            "chunk_id", F.col("embedding").alias("_chunk_emb")
-        )
-        amb = amb.join(F.broadcast(emb_map), "chunk_id", "left").withColumn(
-            "_b", argmax_cand(F.col("_chunk_emb"), coalesce_emb=False)
-        ).drop("_chunk_emb")
-        cand = plain.unionByName(amb)
-    else:
-        cand = cand.withColumn("_b", argmax_cand())
+
+    cand = cand.withColumn("_b", F.array_max(F.transform(F.col("_cands"), scored))).drop(
+        "embedding"
+    )
 
     return (
         cand.withColumn("link_score", F.col("_b._s"))

@@ -270,9 +270,9 @@ def _run_stages(
     }
     stage(
         "triples_raw",
-        lambda: extract_triples_df(
-            chunks, keep_embedding=False, embed_if_surface_in=amb_surfaces
-        ).withColumn("ok", F.col("_error").isNull().cast("int")),
+        lambda: extract_triples_df(chunks, embed_if_surface_in=amb_surfaces).withColumn(
+            "ok", F.col("_error").isNull().cast("int")
+        ),
         delta_of=base_snap.get("triples_raw"),
         partition_by=["ok"],
     )

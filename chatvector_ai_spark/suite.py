@@ -4382,19 +4382,21 @@ def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chatvector_ai_spark.operators.ingest import ingest_chunks
 
     chunks = ingest_chunks(_kg_docs(spark))
-    return good_triples(extract_triples_df(chunks, keep_embedding=False)).drop("embedding")
+    return good_triples(extract_triples_df(chunks))
 
 
 _KG_LINKED_MEMO: dict[tuple[str, int], tuple[DataFrame, DataFrame]] = {}
 
 
 def _kg_linked_full(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
-    """(linked mentions with triple payload columns, alias dict) — the
-    shared front half of the linked/graph kg_* queries. Memoized per
-    SparkContext (localCheckpoint) for the same reason as ``kg_edges``:
-    the driver re-enters every kg_* query in one session and the
-    ingest→extract→link front half is identical each time."""
+    """(linked mentions with triple payload columns, canonical map) — the
+    shared front half of the linked/graph kg_* queries, built by the
+    pipeline's own stage functions. Memoized per SparkContext
+    (localCheckpoint) for the same reason as ``kg_edges``: one session runs
+    every kg_* query and the ingest→extract→link→canonicalize front half
+    is identical each time."""
     from chatvector_ai_spark.datagen import alias_df
+    from chatvector_ai_spark.operators.canonicalize import canonical_map
     from chatvector_ai_spark.operators.extract import extract_triples_df, good_triples
     from chatvector_ai_spark.operators.ingest import ingest_chunks
     from chatvector_ai_spark.operators.link import link_mentions, mentions_from_triples
@@ -4404,13 +4406,13 @@ def _kg_linked_full(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     if cached is not None:
         return cached
     aliases = alias_df(spark)
-    chunks = ingest_chunks(_kg_docs(spark))
-    triples = good_triples(extract_triples_df(chunks, keep_embedding=False))
+    triples = good_triples(extract_triples_df(ingest_chunks(_kg_docs(spark))))
     linked = link_mentions(
         mentions_from_triples(triples), aliases
     ).localCheckpoint(eager=True)
-    _KG_LINKED_MEMO[key] = (linked, aliases)
-    return linked, aliases
+    cmap = canonical_map(linked, aliases).localCheckpoint(eager=True)
+    _KG_LINKED_MEMO[key] = (linked, cmap)
+    return linked, cmap
 
 
 def _kg_linked(spark: SparkSession) -> DataFrame:
@@ -4459,29 +4461,12 @@ def kg_tenant_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def kg_canonical_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: top canonical entities by triple count + provenance docs."""
+    """Flagship: top canonical entities by mention count + provenance docs."""
     from pyspark.sql import functions as F
 
-    from chatvector_ai_spark.datagen import alias_df
-    from chatvector_ai_spark.operators.canonicalize import canonical_map
-    from chatvector_ai_spark.operators.extract import extract_triples_df, good_triples
-    from chatvector_ai_spark.operators.ingest import ingest_chunks
-    from chatvector_ai_spark.operators.link import link_mentions, mentions_from_triples
-
-    aliases = alias_df(spark)
-    chunks = ingest_chunks(_kg_docs(spark))
-    triples = good_triples(extract_triples_df(chunks, keep_embedding=False))
-    linked = link_mentions(mentions_from_triples(triples), aliases)
-    cmap = canonical_map(linked, aliases)
-    resolved = linked.join(F.broadcast(cmap), "entity_id", "left").withColumn(
-        "canonical_entity", F.coalesce(F.col("canonical_entity"), F.col("entity_id"))
-    )
     return (
-        resolved.groupBy("canonical_entity")
-        .agg(
-            F.count("*").alias("n_mentions"),
-            F.countDistinct("doc_id").alias("n_docs"),
-        )
+        kg_nodes(spark, sf_dir)
+        .select("canonical_entity", "n_mentions", "n_docs")
         .orderBy(F.desc("n_mentions"), F.asc("canonical_entity"))
         .limit(10)
     )
@@ -4501,15 +4486,13 @@ def kg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph materialization — the canonical edge table (one row per triple
     with both endpoints resolved to component representatives), checked
     value-for-value against the single-node oracle's union-find build."""
-    from chatvector_ai_spark.operators.canonicalize import canonical_map
     from chatvector_ai_spark.pipeline import edges_from_linked
 
     key = (spark.sparkContext.applicationId, KG_N_DOCS)
     cached = _KG_EDGES_MEMO.get(key)
     if cached is not None:
         return cached
-    linked, aliases = _kg_linked_full(spark)
-    cmap = canonical_map(linked, aliases)
+    linked, cmap = _kg_linked_full(spark)
     edges = edges_from_linked(linked, cmap).drop("bucket").localCheckpoint(eager=True)
     _KG_EDGES_MEMO[key] = edges
     return edges
@@ -4519,11 +4502,9 @@ def kg_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical node aggregate (pipeline stage 6's nodes table, minus the
     bucket column) — counts, provenance, and min-surface label per entity,
     checked against the union-find oracle's build."""
-    from chatvector_ai_spark.operators.canonicalize import canonical_map
     from chatvector_ai_spark.pipeline import nodes_from_linked
 
-    linked, aliases = _kg_linked_full(spark)
-    cmap = canonical_map(linked, aliases)
+    linked, cmap = _kg_linked_full(spark)
     return nodes_from_linked(linked, cmap).drop("bucket")
 
 
@@ -4555,10 +4536,7 @@ def kg_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from chatvector_ai_spark.operators.canonicalize import canonical_map
-
-    linked, aliases = _kg_linked_full(spark)
-    cmap = canonical_map(linked, aliases)
+    linked, cmap = _kg_linked_full(spark)
     per_doc = (
         linked.join(F.broadcast(cmap), "entity_id", "left")
         .select(

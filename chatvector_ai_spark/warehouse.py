@@ -364,14 +364,6 @@ class Warehouse:
         """All data directories an entry's read must union, base-first."""
         return [self._data_dir(e) for e in self._resolve_entry(entry)[0]]
 
-    def _entry_data_dir(self, entry: dict[str, Any]) -> str:
-        """Primary (newest) data directory — the single-snapshot accessor
-        layout tools use; chained reads go through ``_entry_data_dirs``."""
-        view = entry.get("view")
-        if view is not None:
-            return os.path.join(self.root, view["parent_table"], view["parent_snapshot"])
-        return self._data_dir(entry)
-
     def latest_entry(self, table: str, input_key: str | None = None) -> dict[str, Any] | None:
         """Newest committed entry whose full data-dir chain is live."""
         for entry in reversed(self._load(table)):

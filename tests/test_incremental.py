@@ -66,7 +66,7 @@ def test_incremental_stages_write_delta_sized_snapshots(spark, built):
         assert delta["row_count"] < chained  # lineage counts the delta only
         assert delta["row_count"] + b["row_count"] == chained
     # per-doc proof: the delta snapshot contains no base doc_ids
-    delta_dir = wh._entry_data_dir(wh.latest_entry("chunks", inc.input_key))  # noqa: SLF001
+    delta_dir = wh._entry_data_dirs(wh.latest_entry("chunks", inc.input_key))[-1]  # noqa: SLF001
     delta_docs = {r["doc_id"] for r in spark.read.parquet(delta_dir).select("doc_id").distinct().collect()}
     base_ids = {dg.doc_id_of(i) for i in range(N_BASE)}
     assert delta_docs and not (delta_docs & base_ids)

@@ -54,24 +54,26 @@ def test_small_dim_join_is_broadcast(spark, tpch):
 
 
 def test_link_stage_is_broadcast_no_python(spark, tmp_path_factory):
-    """Entity linking over committed snapshots (the pipeline shape):
-    dictionary broadcast, zero Python evals on the mention side, no
-    sort-merge join, and no window sort over mentions (SURVEY §4.3)."""
+    """Entity linking as the pipeline runs it: over committed triples that
+    carry extract's sparse chunk embedding. Dictionary broadcast, zero
+    Python evals on the mention side, no sort-merge join, and no window
+    sort over mentions (SURVEY §4.3)."""
     d = str(tmp_path_factory.mktemp("link_plan"))
-    docs = dg.documents_df(spark, 10)
-    ingest_chunks(docs, embed_dim=16).write.parquet(f"{d}/chunks")
-    chunks = spark.read.parquet(f"{d}/chunks")
-    good_triples(extract_triples_df(chunks, keep_embedding=False)).write.parquet(f"{d}/triples")
+    aliases = dg.alias_df(spark, 100)
+    amb = {r["alias"] for r in aliases.groupBy("alias").count().where("count > 1").collect()}
+    chunks = ingest_chunks(dg.documents_df(spark, 10), embed_dim=16)
+    good_triples(extract_triples_df(chunks, embed_if_surface_in=amb)).write.parquet(f"{d}/triples")
     triples = spark.read.parquet(f"{d}/triples")
-    linked = link_mentions(mentions_from_triples(triples), dg.alias_df(spark, 100), chunks=chunks)
+    assert "embedding" in triples.columns
+    linked = link_mentions(mentions_from_triples(triples), aliases)
     facts = plan_facts(linked)
-    assert facts.broadcast_joins >= 2  # dict join + ambiguous-embedding fetch
+    assert facts.broadcast_joins >= 1  # the dictionary join
     assert facts.sortmerge_joins == 0
     # mention-side plan is Python-free; disambiguation is a hash aggregate
     assert facts.python_evals == 0
     assert facts.aggregates >= 1
     # the only Window ops are the per-alias candidate count on the broadcast
-    # dictionary subtree (constant-size input), replicated per branch
+    # dictionary subtree (constant-size input)
     assert facts.window_ops <= 4
 
 

@@ -65,9 +65,7 @@ def test_permanent_vs_transient_quarantine(spark, chunks):
     # phrases occur in many chunks; a chunk containing both counts as
     # permanent (checked first)
     extractor = _failing_extractor("acquired", "merged with")
-    raw = extract_triples_df(
-        chunks, keep_embedding=False, extractor=extractor
-    ).cache()
+    raw = extract_triples_df(chunks, extractor=extractor).cache()
     q = quarantine_df(raw).toPandas()
     assert len(q) > 0
     perm = q[~q["retryable"]]
@@ -91,5 +89,5 @@ def test_permanent_vs_transient_quarantine(spark, chunks):
 
 
 def test_clean_input_has_empty_quarantine(spark, chunks):
-    raw = extract_triples_df(chunks, keep_embedding=False)
+    raw = extract_triples_df(chunks)
     assert quarantine_df(raw).count() == 0

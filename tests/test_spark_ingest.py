@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 
 from chatvector_ai_spark import datagen as dg
-from chatvector_ai_spark.functions.embeddings import with_embedding
+from chatvector_ai_spark.config import EMBEDDING_DIM
 from chatvector_ai_spark.operators.extract import extract_triples_df, good_triples, quarantine_df
 from chatvector_ai_spark.operators.ingest import ingest_chunks
 from chatvector_ai_spark.oracle.docflow import extract_doc, ingest_doc
@@ -65,8 +65,12 @@ def test_chunk_index_enumerates_text_chunks_per_doc(chunks_pdf):
 
 
 def test_extract_parity_and_closed_form(spark, docs_df):
+    # the pipeline's shape: the chunk embedding rides along only on triples
+    # whose surface is an ambiguous alias of the fixture dictionary
+    alias = dg.alias_df(spark, 500)
+    amb = {r["alias"] for r in alias.groupBy("alias").count().where("count > 1").collect()}
     chunks = ingest_chunks(docs_df, strategy="fixed", size=300, overlap=60)
-    raw = extract_triples_df(with_embedding(chunks))
+    raw = extract_triples_df(chunks, embed_if_surface_in=amb)
     got = good_triples(raw).toPandas()
     assert quarantine_df(raw).count() == 0
 
@@ -91,34 +95,47 @@ def test_extract_parity_and_closed_form(spark, docs_df):
 
 
 def test_embedding_matches_oracle(spark, docs_df):
-    chunks = with_embedding(ingest_chunks(docs_df, strategy="fixed", size=300, overlap=60))
+    """The fused ingest embedding equals the reference hash embedding;
+    media rows carry NULL."""
+    chunks = ingest_chunks(
+        docs_df, strategy="fixed", size=300, overlap=60, embed_dim=EMBEDDING_DIM
+    )
     sample = chunks.where("kind = 'text'").limit(20).toPandas()
     for _, row in sample.iterrows():
         assert [float(x) for x in row["embedding"]] == embed_text(row["chunk_text"])
     media = chunks.where("kind != 'text'").limit(5).toPandas()
-    assert media["embedding"].isna().all()
+    assert len(media) > 0 and media["embedding"].isna().all()
 
 
-def test_fused_embedding_matches_separate_path(spark):
-    """ingest_chunks(embed_dim=...) ≡ with_embedding(ingest_chunks(...))."""
-    import numpy as np
+def test_sparse_embedding_only_on_listed_surfaces(spark):
+    """extract's ``embed_if_surface_in``: a good row whose lowercased subj
+    or obj is in the set carries embed_text(chunk_text); every other good
+    row and every quarantined row carries NULL; without the set the output
+    has no ``embedding`` column."""
+    from chatvector_ai_spark.oracle.svo import extract_triples
 
-    from chatvector_ai_spark import datagen as dg
-    from chatvector_ai_spark.functions.embeddings import with_embedding
-    from chatvector_ai_spark.operators.ingest import ingest_chunks
+    def extractor(text):
+        if "merged with" in text:
+            raise ValueError("synthetic malformed row")
+        return extract_triples(text)
 
-    docs = dg.documents_df(spark, 12)
-    fused = ingest_chunks(docs, embed_dim=16).toPandas()
-    separate = with_embedding(ingest_chunks(docs), dim=16).toPandas()
-    key = ["doc_id", "seq"]
-    fused = fused.sort_values(key).reset_index(drop=True)
-    separate = separate.sort_values(key).reset_index(drop=True)
-    assert len(fused) == len(separate) > 0
-    for a, b in zip(fused["embedding"], separate["embedding"]):
-        if a is None or b is None:
-            assert (a is None) == (b is None)
-        else:
-            np.testing.assert_array_equal(np.asarray(a), np.asarray(b))
+    chunks = ingest_chunks(dg.documents_df(spark, 12)).cache()
+    assert "embedding" not in extract_triples_df(chunks).columns
+    subjects = sorted(
+        {r["s"] for r in good_triples(extract_triples_df(chunks)).selectExpr("lower(subj) AS s").collect()}
+    )
+    listed = set(subjects[::3])
+    raw = extract_triples_df(chunks, embed_if_surface_in=listed, extractor=extractor)
+    rows = raw.join(chunks.select("chunk_id", "chunk_text"), "chunk_id").toPandas()
+    bad = rows[rows["_error"].notna()]
+    good = rows[rows["_error"].isna()]
+    hit = good["subj"].str.lower().isin(listed) | good["obj"].str.lower().isin(listed)
+    assert len(bad) > 0 and hit.any() and (~hit).any()
+    for _, row in good[hit].iterrows():
+        assert [float(x) for x in row["embedding"]] == embed_text(row["chunk_text"])
+    assert good[~hit]["embedding"].isna().all()
+    assert bad["embedding"].isna().all()
+    chunks.unpersist()
 
 
 def test_triple_precision_recall_gate(spark, docs_df):
@@ -127,7 +144,7 @@ def test_triple_precision_recall_gate(spark, docs_df):
     difference could only come from batch/partition boundary effects,
     which the per-span design eliminates)."""
     chunks = ingest_chunks(docs_df)  # default fixed 1000/200
-    got = good_triples(extract_triples_df(chunks, keep_embedding=False)).toPandas()
+    got = good_triples(extract_triples_df(chunks)).toPandas()
 
     oracle_rows = []
     for d in range(N_DOCS):
